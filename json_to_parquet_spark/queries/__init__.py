@@ -239,6 +239,18 @@ _REPROVE_R13: frozenset[str] = frozenset({
 })
 _REPROVE_R13_MIN_ROUND = 13
 
+# Round-16 change: x26/x33 (and x186, now x26 under its old name) and
+# x293 run the one shared ``dedup.connected_components`` instead of
+# their own min-label and large-star loops, so their r2-r13 gate rows
+# were proven on code that no longer exists.
+_REPROVE_R16: frozenset[str] = frozenset({
+    "x26_dedup_clusters",
+    "x33_dedup_survivors",
+    "x186_cc_largestar",
+    "x293_image_neardup_clusters",
+})
+_REPROVE_R16_MIN_ROUND = 16
+
 
 def _driver_evidenced(
     root: "str | None" = None, min_round: int = 0
@@ -333,6 +345,9 @@ def registry() -> dict[str, QuerySpec]:
     )
     evidenced -= _REPROVE_R13 - _driver_evidenced(
         min_round=_REPROVE_R13_MIN_ROUND
+    )
+    evidenced -= _REPROVE_R16 - _driver_evidenced(
+        min_round=_REPROVE_R16_MIN_ROUND
     )
     pending = {n: s for n, s in _REGISTRY.items() if n not in evidenced}
     carried = {n: s for n, s in pending.items() if n in _PENDING_CARRIED}

@@ -15,7 +15,7 @@ Scale notes (the point of each design):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
@@ -314,10 +314,6 @@ CLUSTER_JACCARD = 0.5
 # stop-word-filtered Jaccard, the standard trick; df-capped tokens carry
 # no near-dup signal anyway).
 CLUSTER_DF_CAP = 48  # 60% of the 80-doc window
-# Truncate the label-propagation lineage every iteration: the convergence
-# count materializes the frame anyway, so an eager localCheckpoint makes
-# each loop step start from a depth-1 plan instead of i joins deep.
-_CLUSTER_MAX_ITERS = 20
 
 
 def _neardup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -330,8 +326,8 @@ def _neardup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _neardup_edges(docs: DataFrame) -> DataFrame:
     """The near-dup edge set (src < dst, exact Jaccard over df-capped
-    token sets ≥ CLUSTER_JACCARD) — shared by the min-label loop
-    (x26/x33) and the large-star/small-star twin (x186)."""
+    token sets ≥ CLUSTER_JACCARD) — the graph x26/x33 cluster and x198
+    peels."""
     posting_all = docs.select("doc_id", F.explode("tokens").alias("token"))
     # df-cap: drop stop-words before the self-join. The df frame is tiny
     # (distinct tokens) — broadcast it so the filter adds no shuffle.
@@ -362,46 +358,79 @@ def _neardup_edges(docs: DataFrame) -> DataFrame:
     )
 
 
-def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, cluster_id=MIN doc_id of its near-dup component) via
-    iterative min-label propagation — shared by x26 (cluster rollup) and
-    x33 (survivor selection)."""
-    docs = _neardup_docs(spark, sf_dir)
-    edges = _neardup_edges(docs)
+# Star contraction needs O(log n) rounds whatever the component
+# diameter; a 300-node path converges in 9.
+CC_MAX_ROUNDS = 32
 
-    # undirected: propagate labels both ways
-    sym = edges.unionAll(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
-    labels = docs.select("doc_id", F.col("doc_id").alias("cluster_id"))
-    for _ in range(_CLUSTER_MAX_ITERS):  # diameter bound; components are tiny
-        neighbor_min = (
-            sym.join(labels, sym.dst == labels.doc_id)
-            .groupBy(F.col("src").alias("doc_id"))
-            .agg(F.min("cluster_id").alias("nbr_min"))
+
+def connected_components(edges: DataFrame) -> DataFrame:
+    """(node, component) for every node of the undirected ``(src, dst)``
+    edge frame, where ``component`` is the smallest node id in the
+    node's connected component.  Self-loops carry no connectivity and
+    are dropped, so a node whose only edge is a self-loop is not in the
+    output (every caller's edges have src < dst).
+
+    Alternating large-star / small-star rounds (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014): each
+    round links nodes to smaller ids found one hop away, so the rounds
+    needed grow with log n, not with the component diameter that bounds
+    min-label propagation (a chain of paginated mirror crawls would
+    take hundreds of rounds).  Each star's min is a ``min() OVER
+    (PARTITION BY src)`` window, so a round is two window shuffles, a
+    dedup and an eager ``localCheckpoint`` that truncates lineage.
+
+    The loop stops once the checkpointed edges are a star forest:
+    every ``src`` has exactly one edge and no ``dst`` is also a
+    ``src``.  Each star is then one component whose root (the ``dst``)
+    is its smallest node.  Both tests are needed: a node adjacent to
+    two roots passes the second alone but joins two components.
+    Raises ``RuntimeError`` if ``CC_MAX_ROUNDS`` rounds do not reach a
+    star forest, rather than return labels that are not the transitive
+    closure."""
+    by_src = Window.partitionBy("src")
+    # materialized once: every round's first step reads it twice
+    e = edges.select("src", "dst").localCheckpoint(eager=True)
+    for _ in range(CC_MAX_ROUNDS):
+        # large-star: link every larger neighbor of u to min(Γ(u) ∪ {u})
+        sym = e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        large = (
+            sym.withColumn("m", F.least("src", F.min("dst").over(by_src)))
+            .filter(F.col("dst") > F.col("src"))
+            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
         )
-        # Min-propagation is monotonic, so "changed" == "new label < old";
-        # computing the flag inline avoids re-joining new vs old labels.
-        merged = F.least(
-            F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, "doc_id", "left")
+        # small-star: every edge now points down (src > dst); link u and
+        # each smaller neighbor of u to the smallest of them
+        e = (
+            large.withColumn("m", F.min("dst").over(by_src))
             .select(
-                "doc_id",
-                merged.alias("new_cid"),
-                (merged < F.col("cluster_id")).alias("chg"),
+                F.explode(
+                    F.array(
+                        F.struct(F.col("src"), F.col("m").alias("dst")),
+                        F.struct(F.col("dst").alias("src"), F.col("m").alias("dst")),
+                    )
+                ).alias("e")
             )
-            # eager localCheckpoint: the convergence count below forces
-            # materialization anyway; checkpointing here truncates lineage
-            # so every iteration's plan is one join deep, not i joins deep.
+            .select("e.src", "e.dst")
+            .filter(F.col("src") != F.col("dst"))
+            .distinct()
             .localCheckpoint(eager=True)
         )
-        changed = new_labels.filter(F.col("chg")).count()
-        labels = new_labels.select("doc_id", F.col("new_cid").alias("cluster_id"))
-        if changed == 0:
-            break
-    return labels
+        degree = (
+            e.select(F.col("src").alias("node"), F.lit(1).alias("out"), F.lit(0).alias("inn"))
+            .unionAll(e.select(F.col("dst").alias("node"), F.lit(0), F.lit(1)))
+            .groupBy("node")
+            .agg(F.sum("out").alias("out"), F.max("inn").alias("inn"))
+        )
+        if degree.filter(
+            (F.col("out") > 1) | ((F.col("out") == 1) & (F.col("inn") == 1))
+        ).isEmpty():
+            leaves = e.select(F.col("src").alias("node"), F.col("dst").alias("component"))
+            roots = e.select(F.col("dst").alias("node"), F.col("dst").alias("component"))
+            return leaves.unionAll(roots.distinct())
+    raise RuntimeError(
+        f"connected_components did not converge within {CC_MAX_ROUNDS} "
+        f"rounds: the edges are not yet a star forest"
+    )
 
 
 def x26_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -409,13 +438,17 @@ def x26_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     gets the MIN doc_id of its component as cluster id — the step that
     turns pairwise similarity into dedup groups (keep one per cluster).
 
-    Spark side: iterative min-label propagation (the standard distributed
-    connected-components loop — each iteration is one join + aggregate;
-    converges in O(diameter) rounds, and near-dup components are tiny so
-    diameter is small). Oracle: recursive CTE transitive closure. This is
-    the contract's 'iterative algorithm' case, yet still SQL-checkable.
+    Spark side: ``connected_components`` (large-star/small-star rounds
+    to a star forest) over the near-dup edges; documents with no edge
+    are singleton clusters. Oracle: recursive CTE transitive closure.
+    This is the contract's 'iterative algorithm' case, yet still
+    SQL-checkable.
     """
-    labels = _cluster_labels(spark, sf_dir)
+    docs = _neardup_docs(spark, sf_dir)
+    cc = connected_components(_neardup_edges(docs))
+    labels = docs.join(cc, docs.doc_id == cc.node, "left").select(
+        "doc_id", F.coalesce("component", "doc_id").alias("cluster_id")
+    )
     return labels.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.concat_ws(
@@ -480,12 +513,10 @@ def x33_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     with how many near-dups it displaced. This is the frame a training
     pipeline actually feeds downstream; candidates (x09), verification
     (x08), clusters (x26) and survivors (x33) are the full chain."""
-    labels = _cluster_labels(spark, sf_dir)
-    sizes = labels.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n_members"))
+    clusters = x26_dedup_clusters(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "source")
     return (
-        labels.filter(F.col("doc_id") == F.col("cluster_id"))
-        .join(sizes, "cluster_id")
+        clusters.select(F.col("cluster_id").alias("doc_id"), "n_members")
         .join(docs, "doc_id")
         .select(
             "doc_id",
@@ -1089,8 +1120,6 @@ def x137_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     on (doc, shingle) composite keys — |candidates| × set-size work,
     never all-pairs.  Acceptance is the integer cross-multiplication
     DEN·|∩| ≥ NUM·(|A|+|B|−|∩|)."""
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
     posting = docs.select(
         "doc_id", F.explode(shingles(F.col("text"))).alias("sh")
@@ -1302,92 +1331,13 @@ register(
 )
 
 
-# --- x186: connected components via large-star/small-star --------------------
-_LSSS_MAX_ROUNDS = 12
-
-
-def x186_cc_largestar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components by alternating LARGE-STAR / SMALL-STAR
-    rounds (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC 2014) over the SAME near-dup edge set as x26 — the
-    promised at-extreme-scale replacement for min-label propagation:
-    label propagation needs O(component diameter) rounds, star
-    contraction needs O(log n) regardless of diameter (the failure mode
-    is a long chain of near-dups — a crawl of paginated mirrors — where
-    propagation would take hundreds of rounds). Each round is two
-    node-keyed min-aggregations + joins; convergence is detected by an
-    (edge-count, checksum) fixpoint, each round localCheckpoint'd.
-
-    Output and ORACLE are x26's verbatim (cluster rollup vs the
-    recursive-CTE transitive closure) — the two algorithms must agree
-    bit-for-bit on every component."""
-    docs = _neardup_docs(spark, sf_dir)
-    edges = _neardup_edges(docs).localCheckpoint()
-
-    def large_star(e: DataFrame) -> DataFrame:
-        sym = e.unionAll(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        nm = sym.groupBy("src").agg(F.min("dst").alias("mv"))
-        nm = nm.select("src", F.least("src", "mv").alias("m"))
-        return (
-            sym.join(nm, "src")
-            .filter(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .distinct()
-        )
-
-    def small_star(e: DataFrame) -> DataFrame:
-        ori = e.select(
-            F.greatest("src", "dst").alias("src"),
-            F.least("src", "dst").alias("dst"),
-        ).distinct()
-        nm = ori.groupBy("src").agg(F.min("dst").alias("m"))
-        low = (
-            ori.join(nm, "src")
-            .filter(F.col("dst") != F.col("m"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        )
-        high = ori.join(nm, "src").select("src", F.col("m").alias("dst"))
-        return low.unionAll(high).distinct()
-
-    prev_sig = None
-    e = edges
-    for _ in range(_LSSS_MAX_ROUNDS):
-        e = small_star(large_star(e)).localCheckpoint()
-        sig = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("src") * 31 + F.col("dst")).alias("chk"),
-        ).collect()[0]
-        if prev_sig == (sig.n, sig.chk):
-            break
-        prev_sig = (sig.n, sig.chk)
-    # Fixpoint: every edge points a node at its component root.
-    roots = e.groupBy(F.col("src").alias("doc_id")).agg(
-        F.min("dst").alias("root")
-    )
-    labels = docs.join(roots, "doc_id", "left").select(
-        "doc_id", F.coalesce("root", F.col("doc_id")).alias("cluster_id")
-    )
-    return labels.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("n_members"),
-        F.concat_ws(
-            ",",
-            F.transform(
-                F.sort_array(F.collect_list("doc_id")), lambda x: x.cast("string")
-            ),
-        ).alias("members"),
-    )
-
-
+# --- x186: x26 under its old name -------------------------------------------
+# The name stays only because the pinned round-6 gate window lists it
+# and tests/test_rotation.py requires every pinned name to exist; it
+# goes away with the pinned windows (ROADMAP item 3).
 register(
     QuerySpec(
-        "x186_cc_largestar",
-        x186_cc_largestar,
-        # x26's oracle VERBATIM: both CC algorithms must produce
-        # identical components (anti-drift compose).
-        _REGISTRY["x26_dedup_clusters"].oracle,
-        "connected components via large-star/small-star (O(log n) rounds)",
+        "x186_cc_largestar", x26_dedup_clusters, _REGISTRY["x26_dedup_clusters"].oracle, "alias of x26"
     )
 )
 
@@ -1397,8 +1347,8 @@ register(
 # running exactly KCORE_ROUNDS rounds needs no convergence collect and
 # the oracle unrolls the identical recurrence.  KCORE_ROUNDS=8 reaches
 # the fixpoint with slack on every fixture (verified: rounds 6..8 are
-# no-ops); at corpus scale the same loop runs with a (count, checksum)
-# fixpoint signature like x186.
+# no-ops); at corpus scale the same loop would stop on an unchanged
+# edge count instead.
 KCORE_ROUNDS = 8
 KCORE_KS = (2, 3)
 
@@ -2184,8 +2134,6 @@ def _x214_placement(
     cells assigned two-level through K0 = max(4, ⌈n^¼⌉) super-cells
     (one bounded count+max agg action, the table-stats lookup at
     scale)."""
-    from pyspark.sql import Window
-
     from .similarity import dot as _dot
 
     emb = load_table(spark, sf_dir, "embeddings").select(

@@ -119,6 +119,8 @@ def _inline_lit(v, sql_type: str) -> str:
         return f"'{s}'"
     if sql_type == "BOOLEAN":
         return "true" if v else "false"
+    if int(v) != v:
+        raise ValueError(f"inline_rows: {v!r} is not integral for a {sql_type} column")
     return f"{int(v)}{'L' if sql_type == 'BIGINT' else ''}"
 
 
@@ -141,13 +143,30 @@ def inline_rows(spark, rows, schema: str):
     scalar types only (int/long/double/string/boolean), which is every
     spine and driver-side rollup the registry builds.  Falls back to
     ``createDataFrame`` for empty input (VALUES needs at least one
-    row)."""
+    row).
+
+    Misuse raises instead of producing wrong data: a row whose length
+    differs from the schema's, a non-integral value for an int/long
+    column, or string columns while ``spark.sql.parser.
+    escapedStringLiterals`` is on (the literals below are escaped for
+    the default parser)."""
     fields = []
     for part in schema.split(","):
         name, typ = part.split()
         fields.append((name, _INLINE_SQL_TYPES[typ.lower()]))
     if not rows:
         return spark.createDataFrame([], schema)
+    for r in rows:
+        if len(r) != len(fields):
+            raise ValueError(
+                f"inline_rows: row {r!r} has {len(r)} values for {len(fields)} schema fields"
+            )
+    if any(t == "STRING" for _n, t in fields) and (
+        spark.conf.get("spark.sql.parser.escapedStringLiterals", "false").lower() != "false"
+    ):
+        raise RuntimeError(
+            "inline_rows needs spark.sql.parser.escapedStringLiterals=false"
+        )
     vals = ",".join(
         "("
         + ",".join(_inline_lit(v, t) for v, (_n, t) in zip(r, fields))

@@ -1855,75 +1855,30 @@ register(
 # --- x293: image near-dup CLUSTER CLOSURE --------------------------------------
 # x286's coverage argument says cluster closure recovers dup groups
 # from capacity-capped links; this op IS that closure — connected
-# components over x280's pair graph (the x26 machinery on the image
-# leg), turning bounded pairwise links into dedup groups.  Spark side:
-# iterative min-label propagation (one join + aggregate per round,
-# lineage truncated per round); oracle: recursive-CTE transitive
-# closure over the SAME candidate chain.  A gate hash over (cluster,
-# size) proves the distributed loop reaches exactly the transitive
-# closure the SQL computes.
-X293_MAX_ITERS = 24  # diameter bound; chunk-chained components stay shallow
+# components over x280's pair graph (x26's ``connected_components`` on
+# the image leg), turning bounded pairwise links into dedup groups.
+# Oracle: recursive-CTE transitive closure over the SAME candidate
+# chain.  A gate hash over (cluster, size) proves the distributed loop
+# reaches exactly the transitive closure the SQL computes.
 
 
 def x293_image_neardup_clusters(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """(cluster_id = MIN doc_id of the component, n_members) for every
-    image near-dup component of ≥ 2 docs.  At 100 TB each round is one
-    shuffle on the (tiny relative to the corpus) pair-graph edges —
-    pair volume is capacity-bounded upstream, and components converge
-    in O(diameter) rounds."""
-    pairs = x280_dhash_neardup_pairs(spark, sf_dir).select(
-        "doc_a", "doc_b"
-    )
-    sym = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).unionAll(
-        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    ).persist()
-    labels = (
-        sym.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .select("doc_id", F.col("doc_id").alias("cluster_id"))
-    )
-    changed = -1  # defined even if the iteration bound is 0
-    for _ in range(X293_MAX_ITERS):
-        neighbor_min = (
-            sym.join(labels, sym.dst == labels.doc_id)
-            .groupBy(F.col("src").alias("doc_id"))
-            .agg(F.min("cluster_id").alias("nbr_min"))
+    image near-dup component of ≥ 2 docs.  At 100 TB each round runs on
+    the (tiny relative to the corpus) pair-graph edges — pair volume is
+    capacity-bounded upstream, and components converge in O(log n)
+    rounds."""
+    from .dedup import connected_components
+
+    pairs = x280_dhash_neardup_pairs(spark, sf_dir)
+    return (
+        connected_components(
+            pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         )
-        merged = F.least(
-            F.col("cluster_id"),
-            F.coalesce(F.col("nbr_min"), F.col("cluster_id")),
-        )
-        new_labels = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                merged.alias("new_cid"),
-                (merged < F.col("cluster_id")).alias("chg"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = new_labels.filter(F.col("chg")).count()
-        labels = new_labels.select(
-            "doc_id", F.col("new_cid").alias("cluster_id")
-        )
-        if changed == 0:
-            break
-    else:
-        # A component deeper than the iteration bound would otherwise
-        # serve clusters that are NOT the transitive closure, with no
-        # signal — fail loudly instead (ADVICE r13).  Only reachable
-        # when the final round still relabeled something.
-        raise RuntimeError(
-            f"x293 min-label propagation did not converge within "
-            f"{X293_MAX_ITERS} rounds ({changed} labels still moving); "
-            f"a component's diameter exceeds the bound"
-        )
-    return labels.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("n_members")
+        .groupBy(F.col("component").alias("cluster_id"))
+        .agg(F.count(F.lit(1)).alias("n_members"))
     )
 
 
@@ -1950,7 +1905,7 @@ register(
         "x293_image_neardup_clusters",
         x293_image_neardup_clusters,
         _x293_sql(),
-        "image near-dup cluster closure: min-label propagation over the capped pair graph vs recursive-CTE truth",
+        "image near-dup cluster closure: connected_components over the capped pair graph vs recursive-CTE truth",
     )
 )
 

@@ -96,20 +96,27 @@ def test_unproven_r6_window_entries_lead_the_registry():
 
 
 def test_reproved_queries_rejoin_the_window_until_regated():
-    """Round-11 changed two already-evidenced queries (x196's audit-
-    slice demotion, x253's rounding-path rework): their prior gate rows
-    no longer speak for the current code, so until a CORRECTNESS round
-    ≥ _REPROVE_MIN_ROUND shows them green they must sit in the
-    driver's 50-slot head sample."""
+    """Queries whose code changed after they earned a gate row — round
+    11's x196 audit-slice demotion and x253 rounding-path rework, round
+    16's move of x26/x33/x186/x293 onto the shared connected-components
+    routine: their prior rows no longer speak for the current code, so
+    until a CORRECTNESS round at or after the change shows them green
+    they must sit in the driver's 50-slot head sample."""
     from json_to_parquet_spark.queries import (
         _REPROVE_MIN_ROUND,
         _REPROVE_R11,
+        _REPROVE_R16,
+        _REPROVE_R16_MIN_ROUND,
     )
 
     reg = registry()
     head = set(list(reg)[:50])
-    regated = _driver_evidenced(min_round=_REPROVE_MIN_ROUND)
-    for name in _REPROVE_R11:
-        assert name in reg
-        if name not in regated:
-            assert name in head, name
+    for names, min_round in (
+        (_REPROVE_R11, _REPROVE_MIN_ROUND),
+        (_REPROVE_R16, _REPROVE_R16_MIN_ROUND),
+    ):
+        regated = _driver_evidenced(min_round=min_round)
+        for name in names:
+            assert name in reg
+            if name not in regated:
+                assert name in head, name

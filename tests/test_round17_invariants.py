@@ -1,11 +1,11 @@
-"""Round-17 invariants: the three ADVICE-r13 fixes, each guarded so a
-regression fails loudly — (1) ``decode_wav`` rejects a chunk whose
-declared size overruns the payload instead of silently decoding fewer
-samples, (2) x293's min-label propagation raises on non-convergence
-instead of silently serving a non-transitive closure, and (3) the
-``foreachBatch`` parquet sinks are idempotent under micro-batch retry
-(a replayed batch overwrites its own ``bid=N`` directory rather than
-appending a duplicate that could flip a drained policy decision)."""
+"""Round-17 invariants: ADVICE-r13 fixes, each guarded so a regression
+fails loudly — (1) ``decode_wav`` rejects a chunk whose declared size
+overruns the payload instead of silently decoding fewer samples, and
+(2) the ``foreachBatch`` parquet sinks are idempotent under micro-batch
+retry (a replayed batch overwrites its own ``bid=N`` directory rather
+than appending a duplicate that could flip a drained policy decision).
+The third fix, x293's loud non-convergence, now lives with the shared
+routine in ``tests/test_connected_components.py``."""
 
 from __future__ import annotations
 
@@ -35,25 +35,6 @@ def test_decode_wav_rejects_truncated_data_chunk():
 
     _sr, n = audio_spec(7)
     assert len(decode_wav(payload)[1]) == n
-
-
-def test_x293_raises_on_nonconvergence(spark, sf_dir, monkeypatch):
-    """With the iteration bound forced to 1, any corpus whose pair graph
-    has at least one edge cannot confirm convergence — the loop must
-    raise, not return whatever labels it reached."""
-    import json_to_parquet_spark.queries.multimodal as mm
-
-    monkeypatch.setattr(mm, "X293_MAX_ITERS", 1)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        mm.x293_image_neardup_clusters(spark, sf_dir)
-
-
-def test_x293_converges_at_default_bound(spark, sf_dir):
-    from json_to_parquet_spark.queries.multimodal import (
-        x293_image_neardup_clusters,
-    )
-
-    assert x293_image_neardup_clusters(spark, sf_dir).count() > 0
 
 
 def _distinct_fp_docs(tmp_path_factory, make_fp, name: str, n: int = 40):

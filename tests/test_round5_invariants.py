@@ -182,20 +182,6 @@ def test_x185_pruning_decisions_sane(spark, sf_dir):
             assert r.n_files_scanned >= 1
 
 
-def test_x186_largestar_equals_minlabel_cc(spark, sf_dir):
-    """Large-star/small-star and min-label propagation must produce
-    bit-identical components — two algorithms, one contract."""
-    a = sorted(
-        tuple(r)
-        for r in registry()["x186_cc_largestar"].spark(spark, sf_dir).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in registry()["x26_dedup_clusters"].spark(spark, sf_dir).collect()
-    )
-    assert a == b
-
-
 def test_x187_containment_families(spark, sf_dir):
     """The two deterministic re-encode families must land where frame
     math puts them: every half-truncated copy has containment 1.0
