@@ -15,6 +15,7 @@ Scale notes (the point of each design):
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -362,35 +363,68 @@ def _neardup_edges(docs: DataFrame) -> DataFrame:
 # diameter; a 300-node path converges in 9.
 CC_MAX_ROUNDS = 32
 
+# Graphs with fewer edges than this are closed on the driver: at most
+# 4 MiB of Arrow (two bigints an edge) and about a second of pure-Python
+# union-find.  0 runs every graph through the distributed rounds.
+CC_DRIVER_EDGES = 1 << 18
+
 
 def connected_components(edges: DataFrame) -> DataFrame:
     """(node, component) for every node of the undirected ``(src, dst)``
     edge frame, where ``component`` is the smallest node id in the
-    node's connected component.  Self-loops carry no connectivity and
-    are dropped, so a node whose only edge is a self-loop is not in the
-    output (every caller's edges have src < dst).
+    node's connected component; both columns are ``bigint``.  Self-loops
+    carry no connectivity and are dropped, so a node whose only edge is
+    a self-loop is not in the output (every caller's edges have
+    src < dst).  An edge with a null endpoint raises ``ValueError``.
 
-    Alternating large-star / small-star rounds (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC 2014): each
-    round links nodes to smaller ids found one hop away, so the rounds
-    needed grow with log n, not with the component diameter that bounds
-    min-label propagation (a chain of paginated mirror crawls would
-    take hundreds of rounds).  Each star's min is a ``min() OVER
-    (PARTITION BY src)`` window, so a round is two window shuffles, a
-    dedup and an eager ``localCheckpoint`` that truncates lineage.
+    The input is checkpointed once and one aggregate counts its edges
+    and null endpoints.  Fewer than ``CC_DRIVER_EDGES`` edges are
+    fetched as Arrow and closed by a driver-side union-find; the result
+    is a local relation, so nothing downstream reruns the input.
 
-    The loop stops once the checkpointed edges are a star forest:
-    every ``src`` has exactly one edge and no ``dst`` is also a
-    ``src``.  Each star is then one component whose root (the ``dst``)
-    is its smallest node.  Both tests are needed: a node adjacent to
-    two roots passes the second alone but joins two components.
-    Raises ``RuntimeError`` if ``CC_MAX_ROUNDS`` rounds do not reach a
-    star forest, rather than return labels that are not the transitive
-    closure."""
+    Larger graphs run alternating large-star / small-star rounds
+    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SoCC 2014): each round links nodes to smaller ids found one hop
+    away, so the rounds needed grow with log n, not with the component
+    diameter that bounds min-label propagation (a chain of paginated
+    mirror crawls would take hundreds of rounds).  Each star's min is a
+    ``min() OVER (PARTITION BY src)`` window, so a round is two window
+    shuffles, a dedup and an eager ``localCheckpoint`` that truncates
+    lineage.
+
+    Each round's aggregate counts the checkpointed edges and tests for
+    a star forest: every ``src`` has exactly one edge and no ``dst`` is
+    also a ``src``.  Each star is then one component whose root (the
+    ``dst``) is its smallest node.  Both tests are needed: a node
+    adjacent to two roots passes the second alone but joins two
+    components.  A star forest ends the loop; otherwise the driver
+    finishes as soon as the round has shrunk the edges below
+    ``CC_DRIVER_EDGES``.  Raises ``RuntimeError`` if ``CC_MAX_ROUNDS``
+    rounds reach neither, rather than return labels that are not the
+    transitive closure.
+
+    ``connected_components.last_run`` records the latest call's
+    ``rounds``, its ``finish`` (``"driver"`` or ``"star_forest"``) and
+    the ``edges`` it finished on."""
     by_src = Window.partitionBy("src")
-    # materialized once: every round's first step reads it twice
-    e = edges.select("src", "dst").localCheckpoint(eager=True)
-    for _ in range(CC_MAX_ROUNDS):
+    # the entry aggregate materializes it, so the checkpoint costs no
+    # job of its own; every round's first step reads it twice
+    e = edges.select(
+        F.col("src").cast("long"), F.col("dst").cast("long")
+    ).localCheckpoint(eager=False)
+    n_edges, n_null = e.agg(
+        F.count(F.lit(1)), F.count_if(F.col("src").isNull() | F.col("dst").isNull())
+    ).first()
+    if n_null:
+        raise ValueError(f"connected_components: {n_null} edges have a null endpoint")
+    rounds = 0
+    while n_edges >= CC_DRIVER_EDGES:
+        if rounds == CC_MAX_ROUNDS:
+            raise RuntimeError(
+                f"connected_components did not converge within {CC_MAX_ROUNDS} "
+                f"rounds: the edges are not yet a star forest"
+            )
+        rounds += 1
         # large-star: link every larger neighbor of u to min(Γ(u) ∪ {u})
         sym = e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         large = (
@@ -421,15 +455,50 @@ def connected_components(edges: DataFrame) -> DataFrame:
             .groupBy("node")
             .agg(F.sum("out").alias("out"), F.max("inn").alias("inn"))
         )
-        if degree.filter(
-            (F.col("out") > 1) | ((F.col("out") == 1) & (F.col("inn") == 1))
-        ).isEmpty():
+        n_edges, n_not_star = degree.agg(
+            F.coalesce(F.sum("out"), F.lit(0)),
+            F.count_if((F.col("out") > 1) | ((F.col("out") == 1) & (F.col("inn") == 1))),
+        ).first()
+        if not n_not_star:
+            connected_components.last_run = {
+                "rounds": rounds, "finish": "star_forest", "edges": n_edges
+            }
             leaves = e.select(F.col("src").alias("node"), F.col("dst").alias("component"))
             roots = e.select(F.col("dst").alias("node"), F.col("dst").alias("component"))
             return leaves.unionAll(roots.distinct())
-    raise RuntimeError(
-        f"connected_components did not converge within {CC_MAX_ROUNDS} "
-        f"rounds: the edges are not yet a star forest"
+    connected_components.last_run = {"rounds": rounds, "finish": "driver", "edges": n_edges}
+    return _union_find_frame(e.sparkSession, e.toArrow())
+
+
+connected_components.last_run = None
+
+
+def _union_find_frame(spark: SparkSession, edges: pa.Table) -> DataFrame:
+    """``connected_components``' driver finish: union-find over the
+    fetched ``(src, dst)`` edges, self-loops dropped, each root kept the
+    smallest id of its set."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        root = parent.setdefault(x, x)
+        while root != parent[root]:
+            parent[root] = parent[parent[root]]
+            root = parent[root]
+        return root
+
+    for a, b in zip(edges.column("src").to_pylist(), edges.column("dst").to_pylist()):
+        if a != b:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    nodes = list(parent)
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "node": pa.array(nodes, pa.int64()),
+                "component": pa.array([find(x) for x in nodes], pa.int64()),
+            }
+        )
     )
 
 
@@ -438,8 +507,9 @@ def x26_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     gets the MIN doc_id of its component as cluster id — the step that
     turns pairwise similarity into dedup groups (keep one per cluster).
 
-    Spark side: ``connected_components`` (large-star/small-star rounds
-    to a star forest) over the near-dup edges; documents with no edge
+    Spark side: ``connected_components`` (a driver union-find for a
+    small edge set, large-star/small-star rounds to a star forest for a
+    large one) over the near-dup edges; documents with no edge
     are singleton clusters. Oracle: recursive CTE transitive closure.
     This is the contract's 'iterative algorithm' case, yet still
     SQL-checkable.
