@@ -1401,17 +1401,6 @@ register(
 )
 
 
-# --- x186: x26 under its old name -------------------------------------------
-# The name stays only because the pinned round-6 gate window lists it
-# and tests/test_rotation.py requires every pinned name to exist; it
-# goes away with the pinned windows (ROADMAP item 3).
-register(
-    QuerySpec(
-        "x186_cc_largestar", x26_dedup_clusters, _REGISTRY["x26_dedup_clusters"].oracle, "alias of x26"
-    )
-)
-
-
 # --- x198: k-core decomposition of the near-dup graph ------------------------
 # Fixed unrolled peel rounds: peeling is idempotent at the fixpoint, so
 # running exactly KCORE_ROUNDS rounds needs no convergence collect and
@@ -1576,7 +1565,7 @@ def x199_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shapes: clustering is x49's Lloyd loop VERBATIM (shared
     ``kmeans_assign`` + ``_kmeans_sql`` — the anti-drift compose, as
-    x186/x172 do) over the bounded audit slice (``SEM_MAX_ID`` — see the
+    x172 does) over the bounded audit slice (``SEM_MAX_ID`` — see the
     constant's note: fixed-K clusters grow with the corpus, so the
     at-scale composition swaps Lloyd for a CAPACITY-bounded cell layout,
     x205/x121, whose per-cell pair count is capped by construction); the

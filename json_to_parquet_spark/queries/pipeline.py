@@ -622,7 +622,7 @@ def x45_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: edge extraction is the only big-data touch — two fact
     joins reduced immediately to a nation×nation weight matrix, bounded
     at |V|² ≤ 625 rows at ANY input scale (25 nations). The iteration
-    therefore runs DRIVER-SIDE on the collected matrix (the x186/zorder
+    therefore runs DRIVER-SIDE on the collected matrix (the zorder
     bounded-collect pattern, VERDICT r5 ask #6): 10 fixed-point rounds
     over ≤625 Python ints replace 10 Spark jobs whose frames never
     exceed driver scale, retiring the loop's per-round job overhead

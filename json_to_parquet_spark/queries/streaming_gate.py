@@ -1330,7 +1330,7 @@ def x212_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _register_x212() -> None:
     # Anti-drift: the streaming twin is gated against x203's batch
-    # oracle VERBATIM (the x186/x172 registry-reuse pattern; curation
+    # oracle VERBATIM (the x172 registry-reuse pattern; curation
     # registers before this module in registry()'s import order).
     # Explicit producer import: direct `import streaming_gate`
     # (tests, tooling) must not depend on registry()'s import

@@ -1,5 +1,5 @@
 """``dedup.connected_components``, the one connected-components routine
-behind x26, x33, x186 and x293: checked against a driver-side
+behind x26, x33 and x293: checked against a driver-side
 union-find on hand-built and seeded random graphs, on both of its
 paths (the driver finish at the default ``CC_DRIVER_EDGES``, the
 distributed rounds with it forced to 0), plus its round bound, its

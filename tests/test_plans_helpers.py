@@ -81,38 +81,3 @@ def test_runtime_bloom_filter_injection(spark, tmp_path):
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
-
-
-def test_driver_evidenced_parses_gate_files(tmp_path):
-    """The auto-rotation reader: green and declared rows-only rows count
-    as evidenced; error and hash-mismatch rows stay unproven (so the
-    driver re-samples them); malformed files are skipped."""
-    import json
-
-    from json_to_parquet_spark.queries import _driver_evidenced
-
-    (tmp_path / "CORRECTNESS_r01.json").write_text(
-        json.dumps(
-            {
-                "q_green": {"hash_match": True, "err": None},
-                "q_rows_only": {"hash_match": None, "err": "no_oracle"},
-                "q_errored": {"hash_match": None, "err": "boom"},
-                "q_wrong": {"hash_match": False, "err": None},
-                "q_junk": "not-a-row",
-            }
-        )
-    )
-    (tmp_path / "CORRECTNESS_r02.json").write_text("{ not json")
-    got = _driver_evidenced(str(tmp_path))
-    assert got == frozenset({"q_green", "q_rows_only"})
-
-
-def test_driver_evidenced_covers_static_set_on_real_files():
-    """Against the real repo-root gate files, every hand-listed evidenced
-    name must be file-backed (parser can't silently shrink the set).
-    The file-derived set may legitimately grow beyond the static list —
-    that is the auto-rotation absorbing a new round's gate file without
-    a hand edit.  Verified exact-equal against rounds 1-3 when written."""
-    from json_to_parquet_spark.queries import _GATE_EVIDENCED, _driver_evidenced
-
-    assert _GATE_EVIDENCED <= _driver_evidenced()

@@ -1,60 +1,165 @@
-"""Gate-sample rotation invariants (no SparkSession needed).
+"""Gate-sample rotation (no SparkSession needed).
 
 The driver's correctness gate samples the FIRST 50 registry entries each
-round, so ``registry()`` must (a) order gate-unproven queries first and
-(b) honor the pinned per-round window tuples — round 4 proved the
-import-order default exiles the riskiest entries (VERDICT r4 ask #2).
+round, so ``registry()`` orders entries by the round that last proved
+them (``_driver_evidenced`` over the repo-root CORRECTNESS_r*.json
+files, with ``_REPROVE`` voiding proof that predates a semantic change),
+oldest first, registration order breaking ties.
 """
 
 from __future__ import annotations
 
+import json
+
+from json_to_parquet_spark import queries
 from json_to_parquet_spark.queries import (
-    _PENDING_R5_OVERFLOW,
-    _PENDING_R5_WINDOW,
+    _REGISTRY,
+    _REPROVE,
     _driver_evidenced,
-    _GATE_EVIDENCED,
     registry,
 )
 
 
-def test_r5_window_is_exactly_fifty_and_disjoint():
-    assert len(_PENDING_R5_WINDOW) == 50
-    assert len(set(_PENDING_R5_WINDOW)) == 50
-    assert not set(_PENDING_R5_WINDOW) & set(_PENDING_R5_OVERFLOW)
+def _rounds(evidenced: dict[str, int]) -> dict[str, int]:
+    """Each registered name's effective last-proven round (0 = unproven)."""
+    return {
+        n: 0 if evidenced.get(n, 0) < _REPROVE.get(n, 0) else evidenced.get(n, 0)
+        for n in registry()
+    }
 
 
-def test_pinned_names_exist_in_registry():
-    reg = registry()
-    missing = [
-        n
-        for n in (*_PENDING_R5_WINDOW, *_PENDING_R5_OVERFLOW)
-        if n not in reg
-    ]
-    assert not missing, missing
+def _registered() -> list[str]:
+    """Registered names in registration order."""
+    registry()
+    return list(_REGISTRY)
 
 
-def test_unproven_window_entries_lead_the_registry():
-    """While any R5-window query lacks a driver row, the registry head
-    must consist of unproven R5-window entries only — nothing pending
-    outside the window (overflow or fresh additions) may displace one."""
-    reg = registry()
-    evidenced = _GATE_EVIDENCED | _driver_evidenced()
-    unproven_window = [n for n in _PENDING_R5_WINDOW if n not in evidenced]
-    head = list(reg)[: len(unproven_window)]
-    assert head == unproven_window
+def _write(tmp_path, name: str, rows) -> None:
+    (tmp_path / name).write_text(rows if isinstance(rows, str) else json.dumps(rows))
+
+
+_GREEN = {"hash_match": True, "err": None}
+_WRONG = {"hash_match": False, "err": None}
+_ERROR = {"hash_match": None, "err": "boom"}
+
+
+def test_driver_evidenced_parses_gate_files(tmp_path):
+    """Green and declared rows-only rows prove a name in their file's
+    round; error and hash-mismatch rows leave it unproven (so the driver
+    re-samples it); junk rows and malformed files are skipped."""
+    _write(
+        tmp_path,
+        "CORRECTNESS_r01.json",
+        {
+            "q_green": _GREEN,
+            "q_rows_only": {"hash_match": None, "err": "no_oracle"},
+            "q_errored": _ERROR,
+            "q_wrong": _WRONG,
+            "q_junk": "not-a-row",
+        },
+    )
+    _write(tmp_path, "CORRECTNESS_r02.json", "{ not json")
+    _write(tmp_path, "CORRECTNESS_r03.json", "[1, 2]")
+    assert _driver_evidenced(str(tmp_path)) == {
+        "q_green": 1,
+        "q_rows_only": 1,
+        "q_errored": 0,
+        "q_wrong": 0,
+    }
+
+
+def test_latest_row_decides(tmp_path):
+    """A later failure voids earlier proof, a later green row proves the
+    name in its own round, and a file without a plain round number
+    counts as round 0 however green its rows are."""
+    _write(tmp_path, "CORRECTNESS_r01.json", {"q_regressed": _GREEN, "q_fixed": _ERROR})
+    _write(tmp_path, "CORRECTNESS_r02.json", {"q_regressed": _WRONG, "q_fixed": _GREEN})
+    _write(tmp_path, "CORRECTNESS_r11_retry.json", {"q_retry_only": _GREEN})
+    got = _driver_evidenced(str(tmp_path))
+    assert got.get("q_regressed", 0) == 0
+    assert got["q_fixed"] == 2
+    assert got.get("q_retry_only", 0) == 0
 
 
 def test_head_sample_never_wastes_a_slot_on_proven_queries():
-    """Every entry in the driver's 50-slot head sample must be
-    gate-unproven, as long as ≥50 unproven queries exist."""
-    reg = registry()
-    evidenced = _GATE_EVIDENCED | _driver_evidenced()
-    pending = [n for n in reg if n not in evidenced]
-    if len(pending) < 50:
-        return  # backlog cleared; nothing to rotate
-    head50 = list(reg)[:50]
-    proven_in_head = [n for n in head50 if n in evidenced]
-    assert not proven_in_head, proven_in_head
+    """The 50-slot head is the 50 stalest entries: nothing in it was
+    proven later than anything behind it, and the whole order runs
+    oldest proof first."""
+    rounds = _rounds(_driver_evidenced())
+    order = [rounds[n] for n in registry()]
+    assert order == sorted(order)
+    head, rest = order[:50], order[50:]
+    if rest:
+        assert max(head) <= min(rest)
+
+
+def test_unproven_window_entries_lead_the_registry(monkeypatch):
+    """Entries without any green row come first, ahead of every proven
+    entry, in registration order."""
+    names = _registered()
+    never = set(names[5::40])
+    monkeypatch.setattr(queries, "_REPROVE", {})
+    monkeypatch.setattr(
+        queries,
+        "_driver_evidenced",
+        lambda: {n: 3 for n in names if n not in never},
+    )
+    head = list(registry())[: len(never)]
+    assert head == [n for n in names if n in never]
+
+
+def test_reproved_queries_rejoin_the_window_until_regated(monkeypatch):
+    """A ``_REPROVE`` entry whose latest proof predates its semantic
+    change counts as unproven and leads the registry; a proof at or
+    after that round counts normally."""
+    live = _driver_evidenced()
+    head = list(registry())[:50]
+    for name, since in _REPROVE.items():
+        if live.get(name, 0) < since:
+            assert name in head, name
+
+    names = _registered()
+    stale, regated = names[10:13], names[20]
+    evidenced = {n: 3 for n in names}
+    evidenced[regated] = 9
+    monkeypatch.setattr(queries, "_driver_evidenced", lambda: dict(evidenced))
+    monkeypatch.setattr(queries, "_REPROVE", {n: 9 for n in (*stale, regated)})
+    order = list(registry())
+    assert order[:3] == stale
+    assert order[-1] == regated
+
+
+def test_ties_keep_registration_order(monkeypatch):
+    """Entries proven in the same round keep registration order."""
+    names = _registered()
+    monkeypatch.setattr(queries, "_REPROVE", {})
+    monkeypatch.setattr(queries, "_driver_evidenced", lambda: {n: 7 for n in names})
+    assert list(registry()) == names
+    monkeypatch.setattr(queries, "_driver_evidenced", dict)
+    assert list(registry()) == names
+
+
+def test_new_gate_file_moves_its_entries_to_the_back(monkeypatch):
+    """A new round's gate file proving the current head sends those 50
+    to the back (in registration order), and everything behind them
+    moves up 50 slots in the same order."""
+    before = list(registry())
+    head = set(before[:50])
+    real = _driver_evidenced()
+    latest = max([*real.values(), *_REPROVE.values()]) + 1
+    monkeypatch.setattr(
+        queries,
+        "_driver_evidenced",
+        lambda: {**real, **{n: latest for n in head}},
+    )
+    assert list(registry()) == before[50:] + [n for n in _registered() if n in head]
+
+
+def test_pinned_names_exist_in_registry():
+    """Every ``_REPROVE`` key, the only hand-maintained gate state, names
+    a registered entry."""
+    missing = [n for n in _REPROVE if n not in registry()]
+    assert not missing, missing
 
 
 def test_x98_guards_oracle_dir_mismatch():
@@ -67,56 +172,3 @@ def test_x98_guards_oracle_dir_mismatch():
 
     with pytest.raises(ValueError, match="pinned"):
         scale_layout.x98_parquet_stats_report(None, "/nonexistent/sfX")
-
-
-def test_r6_window_is_exactly_fifty_and_complete():
-    """Round-6 window: the 40 r5-unproven queries + the 10 round-6
-    additions fill all 50 slots with zero slack (VERDICT r5 ask #1)."""
-    from json_to_parquet_spark.queries import _PENDING_R6_WINDOW
-
-    assert len(_PENDING_R6_WINDOW) == 50
-    assert len(set(_PENDING_R6_WINDOW)) == 50
-    reg = registry()
-    missing = [n for n in _PENDING_R6_WINDOW if n not in reg]
-    assert not missing, missing
-
-
-def test_unproven_r6_window_entries_lead_the_registry():
-    """While any R6-window query lacks a driver row, the registry head
-    must consist of unproven R6-window entries only — any query added
-    later in round 6 queues AFTER slot 50 (an r7 candidate) instead of
-    displacing one."""
-    from json_to_parquet_spark.queries import _PENDING_R6_WINDOW
-
-    reg = registry()
-    evidenced = _GATE_EVIDENCED | _driver_evidenced()
-    unproven_window = [n for n in _PENDING_R6_WINDOW if n not in evidenced]
-    head = list(reg)[: len(unproven_window)]
-    assert head == unproven_window
-
-
-def test_reproved_queries_rejoin_the_window_until_regated():
-    """Queries whose code changed after they earned a gate row — round
-    11's x196 audit-slice demotion and x253 rounding-path rework, round
-    16's move of x26/x33/x186/x293 onto the shared connected-components
-    routine: their prior rows no longer speak for the current code, so
-    until a CORRECTNESS round at or after the change shows them green
-    they must sit in the driver's 50-slot head sample."""
-    from json_to_parquet_spark.queries import (
-        _REPROVE_MIN_ROUND,
-        _REPROVE_R11,
-        _REPROVE_R16,
-        _REPROVE_R16_MIN_ROUND,
-    )
-
-    reg = registry()
-    head = set(list(reg)[:50])
-    for names, min_round in (
-        (_REPROVE_R11, _REPROVE_MIN_ROUND),
-        (_REPROVE_R16, _REPROVE_R16_MIN_ROUND),
-    ):
-        regated = _driver_evidenced(min_round=min_round)
-        for name in names:
-            assert name in reg
-            if name not in regated:
-                assert name in head, name

@@ -21,7 +21,7 @@ from pyspark.sql import types as T
 
 from json_to_parquet_spark.queries import registry
 
-# driver-window profile (pytest.ini): 399 per-query schema compares — release gate runs it via -m ""
+# driver-window profile (pytest.ini): 398 per-query schema compares — release gate runs it via -m ""
 pytestmark = pytest.mark.slow
 
 
