@@ -112,7 +112,8 @@ def main(argv: list[str] | None = None) -> int:
         print(f"error: {exc}", file=sys.stderr)
         return 1
     # Lineage log — the reference logs rows/sort/schemas per run
-    # (pyarrow/main.py:152-165); we print the same facts as one JSON line.
+    # (pyarrow/main.py:152-165); we print the same facts as one JSON line,
+    # plus how the output was partitioned and the seconds per phase.
     print(
         json.dumps(
             {
@@ -121,6 +122,8 @@ def main(argv: list[str] | None = None) -> int:
                 "sorted_by": res.sorted_by,
                 "rewritten_dt_paths": res.rewritten_dt_paths,
                 "schema_after": res.schema_after,
+                "partitioning": res.partitioning,
+                "phases": {k: round(v, 3) for k, v in res.phases.items()},
             }
         )
     )

@@ -16,7 +16,10 @@ single output file is demanded — one writer task. The default mode is
 therefore ``cluster``: ``repartitionByRange(sort_col)`` +
 ``sortWithinPartitions(sort_col)``, which gives globally range-partitioned,
 per-file-sorted output — the same downstream min/max-pruning benefit as a
-global sort with no single-task bottleneck, and N output files. Mode
+global sort with no single-task bottleneck, and N output files. For a
+spilled single object with a long sort key the range bounds come from a
+sample of the spill file instead of the exchange's sampling job, and
+``repartitionById`` places each row by the bounds below its key. Mode
 ``global`` (exact reference parity: one file, one total order) remains for
 single-object conversion, which is the reference's actual deployment shape
 (one Lambda = one small S3 object).
@@ -26,12 +29,14 @@ from __future__ import annotations
 
 import dataclasses
 import os
+import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.dt_rewrite import dt_rewrite_paths, rewrite_dt_fields
-from ..sources.ndjson import read_ndjson_parallel, release_parallel_read
+from ..sources.ndjson import read_ndjson_parallel, release_parallel_read, sample_spill
 
 # Reference default sort column (pyarrow/main.py:14: SORT_COLUMN env, default "time").
 DEFAULT_SORT_COLUMN = os.environ.get("SORT_COLUMN", "time")
@@ -51,6 +56,28 @@ class ConvertResult:
     # The (possibly inferred) input schema as a StructType — what a caller
     # pins into the schema registry for later objects of the same feed.
     input_schema: object | None = None
+    # How the sorted output was partitioned: "bounds" (bucket ids from
+    # bounds sampled off the spill file), "range" (repartitionByRange),
+    # "global" (one total order, one file) or None (not sorted).
+    partitioning: str | None = None
+    # Wall seconds per phase of convert(): read_s (read + inference),
+    # rewrite_s (the _dt walk and Column build), write_s (partitioning +
+    # the Parquet write), verify_s (sorting footer + read-back).
+    phases: dict[str, float] = dataclasses.field(default_factory=dict)
+
+
+class _Laps:
+    """Charges the wall time since the previous lap to a named phase, so
+    the phases add up to the wall time from construction to the last lap."""
+
+    def __init__(self) -> None:
+        self.phases: dict[str, float] = {}
+        self._t = time.perf_counter()
+
+    def lap(self, phase: str) -> None:
+        now = time.perf_counter()
+        self.phases[phase] = self.phases.get(phase, 0.0) + now - self._t
+        self._t = now
 
 
 def derive_output_name(key: str, compression: str = "zstd") -> str:
@@ -81,8 +108,11 @@ def convert(
 ) -> ConvertResult:
     """Run the full convert pipeline and write Parquet to ``dest``.
 
-    mode='cluster' (default, scale path): repartitionByRange + per-partition
-    sort. mode='global': exact total order coalesced to one file (reference
+    mode='cluster' (default, scale path): range partitioning + per-partition
+    sort. A spilled single object with a long sort key takes its range
+    bounds from a sample of the spill file (``partitioning="bounds"``, no
+    sampling job); every other shape uses repartitionByRange.
+    mode='global': exact total order coalesced to one file (reference
     parity for single-object conversion). mode='none': no sort.
 
     ``sampling_ratio`` (opt-in) passes through to inference — see
@@ -102,6 +132,7 @@ def convert(
         raise ValueError("partition_by requires mode='cluster' or 'none'")
     sort_column = DEFAULT_SORT_COLUMN if sort_column is None else sort_column
 
+    laps = _Laps()
     parsed_here = not isinstance(source, DataFrame)
     df = (
         source
@@ -110,6 +141,7 @@ def convert(
         # all cores — see read_ndjson_parallel (2-4× on single-gz objects)
         else read_ndjson_parallel(spark, source, schema, sampling_ratio=sampling_ratio)
     )
+    laps.lap("read_s")
     # The parallel read may have lowered maxPartitionBytes and left a
     # spill dir behind (see release_parallel_read); release them in a
     # finally that spans EVERYTHING from here on, so an exception raised
@@ -118,7 +150,7 @@ def convert(
     try:
         return _convert_body(
             spark, df, dest, sort_column, mode, dt_mode,
-            sorting_metadata, partition_by, parsed_here,
+            sorting_metadata, partition_by, parsed_here, laps,
         )
     finally:
         release_parallel_read(spark, df)
@@ -134,6 +166,7 @@ def _convert_body(
     sorting_metadata: bool,
     partition_by: list[str] | None,
     parsed_here: bool,
+    laps: _Laps,
 ) -> ConvertResult:
     schema_before = df.schema.simpleString()
     rewritten = dt_rewrite_paths(df.schema)
@@ -163,6 +196,7 @@ def _convert_body(
         and not any(c in rewritten_top for c in (partition_by or []))
     )
     out = df if sort_first else rewrite_dt_fields(df, mode=dt_mode)
+    laps.lap("rewrite_s")
 
     # A range exchange SAMPLES its child in a separate job before the
     # shuffle, so an unpersisted JSON-parse chain would run twice
@@ -172,7 +206,8 @@ def _convert_body(
     # round-trip beats re-decompressing the gzip. A SPILLED source
     # (ndjson._spill_to_splittable) re-scans in parallel from the
     # page-cached splittable file, which measures cheaper than the cache
-    # round-trip — so no persist there.
+    # round-trip — so no persist there (and in cluster mode its bounds
+    # come from the spill file, with no sampling job at all).
     spill_dir = getattr(df, "_graft_spill_dir", None)
     cached = (
         out.persist()
@@ -190,23 +225,36 @@ def _convert_body(
             text_cache.unpersist()
             text_cache = None
 
+    partitioning: str | None = None
     if will_range_exchange:
         sorted_by = sort_column
+        bounds = (
+            _spill_bounds(spark, df, spill_dir, sort_column)
+            if sort_first and not partition_by and spill_dir is not None
+            else None
+        )
         if mode == "global":
+            partitioning = "global"
             out = out.orderBy(F.asc(sort_column)).coalesce(1)
-        elif partition_by:
-            # co-locate each hive partition's rows, then range-order the
-            # sort column within them — one exchange, sorted files per dir
-            keys = [F.asc(c) for c in partition_by] + [F.asc(sort_column)]
-            out = out.repartitionByRange(*keys).sortWithinPartitions(*keys)
+        elif bounds is not None:
+            partitioning = "bounds"
+            n, cuts = bounds
+            out = out.repartitionById(
+                n, _bucket(F.col(sort_column), cuts)
+            ).sortWithinPartitions(F.asc(sort_column))
         else:
-            out = out.repartitionByRange(F.asc(sort_column)).sortWithinPartitions(
-                F.asc(sort_column)
-            )
+            partitioning = "range"
+            # with partition_by: co-locate each hive partition's rows, then
+            # range-order the sort column within them — one exchange,
+            # sorted files per dir
+            keys = [F.asc(c) for c in partition_by or ()] + [F.asc(sort_column)]
+            out = out.repartitionByRange(*keys).sortWithinPartitions(*keys)
+    laps.lap("write_s")
     if sort_first:
         # row-local Project above the exchange: preserves the per-file
-        # sort order, runs once, and the sampling job never sees it
+        # sort order, runs once, and a range sampling job never sees it
         out = rewrite_dt_fields(out, mode=dt_mode)
+        laps.lap("rewrite_s")
 
     try:
         writer = out.write.mode("overwrite")
@@ -225,6 +273,7 @@ def _convert_body(
     # convert).  The caller's finally re-invokes this harmlessly
     # (idempotent); it exists for the paths that raise BEFORE here.
     release_parallel_read(spark, df)
+    laps.lap("write_s")
     if sorting_metadata and sorted_by is not None:
         # Reference-parity SortingColumn footer (SURVEY §2 O3); PyArrow
         # post-pass since Spark's writer can't record it.
@@ -234,12 +283,47 @@ def _convert_body(
     written = spark.read.parquet(dest)
     if rows is None:
         rows = written.count()
+    schema_after = written.schema.simpleString()
+    laps.lap("verify_s")
     return ConvertResult(
         output_path=dest,
         rows=rows,
         sorted_by=sorted_by,
         rewritten_dt_paths=rewritten,
         schema_before=schema_before,
-        schema_after=written.schema.simpleString(),
+        schema_after=schema_after,
         input_schema=df.schema,
+        partitioning=partitioning,
+        phases=laps.phases,
     )
+
+
+def _spill_bounds(
+    spark: SparkSession, df: DataFrame, spill_dir: str, sort_column: str
+) -> tuple[int, list[int]] | None:
+    """Partition count and range bounds for a long sort key, taken from a
+    sample of the spill file instead of a sampling job over the parsed
+    frame; None falls back to repartitionByRange.
+
+    The sample size and partition count are the ones the range exchange
+    uses (``rangeExchange.sampleSizePerPartition`` × shuffle partitions).
+    The bounds decide only file balance: equal keys share a bucket, so
+    file ranges never overlap whatever the sample holds."""
+    if not isinstance(df.schema[sort_column].dataType, T.LongType):
+        return None
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    per = int(spark.conf.get("spark.sql.execution.rangeExchange.sampleSizePerPartition"))
+    sample = sample_spill(spill_dir, sort_column, per * n)
+    keys = [v for v in sample or () if v is not None]
+    # bool is an int subclass; anything but a plain int means the
+    # sample does not read the key the way Spark parsed it
+    if not keys or any(type(v) is not int for v in keys):
+        return None
+    keys.sort()
+    return n, sorted({keys[i * len(keys) // n] for i in range(1, n)})
+
+
+def _bucket(key: Column, bounds: list[int]) -> Column:
+    """Σ(key > bᵢ): the number of bounds below ``key``, so equal keys share
+    a bucket and a null key lands in bucket 0 (``asc`` puts nulls first)."""
+    return sum((F.when(key > b, 1).otherwise(0) for b in bounds), F.lit(0))

@@ -15,6 +15,7 @@ inference — so this module is a thin, contract-pinning wrapper:
 from __future__ import annotations
 
 import gzip
+import json
 import os
 import shutil
 import tempfile
@@ -167,6 +168,41 @@ def release_parallel_read(spark: SparkSession, df: DataFrame) -> None:
     if spill_dir is not None:
         shutil.rmtree(spill_dir, ignore_errors=True)
         df._graft_spill_dir = None
+
+
+def sample_spill(spill_dir: str, key: str, lines: int) -> list | None:
+    """Top-level ``key`` of about ``lines`` records of a spilled object:
+    the first full line after each of ``lines`` evenly spaced byte offsets
+    of the one file in ``spill_dir`` (the file ``_spill_to_splittable``
+    wrote). A record without ``key`` yields None. Returns None when a
+    sampled line is not a JSON object, so the caller can fall back.
+
+    Reads ``lines`` lines from the page-cached file — no Spark job."""
+    (name,) = os.listdir(spill_dir)
+    path = os.path.join(spill_dir, name)
+    size = os.path.getsize(path)
+    values: list = []
+    seen: set[int] = set()
+    with open(path, "rb") as f:
+        for i in range(lines):
+            offset = i * size // lines
+            f.seek(max(offset - 1, 0))
+            if offset:
+                # skip to the first line that starts at or after offset
+                f.readline()
+            start = f.tell()
+            line = f.readline()
+            if start in seen or not line.strip():
+                continue
+            seen.add(start)
+            try:
+                record = json.loads(line)
+            except ValueError:
+                return None
+            if not isinstance(record, dict):
+                return None
+            values.append(record.get(key))
+    return values
 
 
 def _spill_to_splittable(path: str) -> str | None:

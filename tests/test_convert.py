@@ -64,7 +64,7 @@ def test_cluster_mode_range_partitioned(spark, fixture_paths, tmp_path):
             pieces.append((min(t), max(t)))
     pieces.sort()
     for (_, hi), (lo, _) in zip(pieces, pieces[1:]):
-        assert hi <= lo  # file ranges don't overlap → min/max pruning works
+        assert hi < lo  # file ranges don't overlap → min/max pruning works
 
 
 def test_sort_skipped_when_column_absent(spark, tmp_path):
@@ -192,3 +192,215 @@ def test_sampling_ratio_inference(spark, tmp_path):
     sampled = read_ndjson(spark, p, sampling_ratio=0.05)
     assert sampled.schema == full.schema
     assert sampled.count() == 2000  # sampling affects inference, not rows
+
+
+# --- range bounds from the spill file (partitioning="bounds") -------------
+
+_BOUNDS_ROWS = 20_000  # ~6 MiB of JSON: the spill sample holds far more
+# lines than the session's shuffle partitions
+
+
+def _write_times(path, times, extra=None):
+    """A gz NDJSON object with one record per ``times`` entry (None writes
+    a null ``time``) and a ~300-byte payload, plus one ``_dt`` site."""
+    import gzip
+    import json
+
+    with gzip.open(path, "wt") as f:
+        for i, t in enumerate(times):
+            rec = {
+                "time": t,
+                "id": i,
+                "payload": "x" * 280,
+                "meta": {"seen_dt": "2025-01-01T00:00:00Z"},
+            }
+            rec.update(extra(i) if extra else {})
+            f.write(json.dumps(rec) + "\n")
+    return str(path)
+
+
+def _check_sorted_ranges(dest):
+    """Per-file ascending sort (nulls first) and, per output directory,
+    strictly non-overlapping file ranges; nulls in at most one file.
+    Returns (rows, non-null values) over all files."""
+    import glob
+    import os
+
+    by_dir: dict[str, list] = {}
+    rows, values = 0, []
+    for f in glob.glob(os.path.join(dest, "**", "*.parquet"), recursive=True):
+        t = pq.read_table(f, columns=["time"])["time"].to_pylist()
+        rows += len(t)
+        nulls = sum(v is None for v in t)
+        assert all(v is None for v in t[:nulls]), f  # nulls first
+        vals = t[nulls:]
+        assert None not in vals and vals == sorted(vals), f
+        values += vals
+        by_dir.setdefault(os.path.dirname(f), []).append((nulls, vals))
+    for files in by_dir.values():
+        assert sum(1 for nulls, _ in files if nulls) <= 1
+        ranges = sorted((v[0], v[-1]) for _, v in files if v)
+        for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
+            assert hi < lo, ranges
+    return rows, values
+
+
+def _bounds_case(spark, tmp_path, times, **kw):
+    src = _write_times(tmp_path / "obj.ndjson.gz", times)
+    dest = str(tmp_path / "out")
+    res = convert(spark, src, dest, mode="cluster", **kw)
+    rows, values = _check_sorted_ranges(dest)
+    assert res.rows == rows == len(times)
+    assert sum(values) == sum(t for t in times if t is not None)
+    assert res.rewritten_dt_paths == ["meta.seen_dt"]
+    return res
+
+
+def test_bounds_skewed_time(spark, tmp_path):
+    import random
+
+    rng = random.Random(7)
+    times = [
+        1_700_000_000_000 if rng.random() < 0.9 else rng.randrange(10**12, 2 * 10**12)
+        for _ in range(_BOUNDS_ROWS)
+    ]
+    res = _bounds_case(spark, tmp_path, times)
+    assert res.partitioning == "bounds"
+
+
+def test_bounds_null_time(spark, tmp_path):
+    import random
+
+    rng = random.Random(8)
+    times = [
+        None if i % 10 == 0 else rng.randrange(10**12) for i in range(_BOUNDS_ROWS)
+    ]
+    res = _bounds_case(spark, tmp_path, times)
+    assert res.partitioning == "bounds"
+
+
+def test_bounds_presorted_time(spark, tmp_path):
+    res = _bounds_case(spark, tmp_path, list(range(_BOUNDS_ROWS)))
+    assert res.partitioning == "bounds"
+
+
+def test_string_time_falls_back_to_range(spark, tmp_path):
+    import random
+
+    rng = random.Random(9)
+    ints = [rng.randrange(10**9) for _ in range(_BOUNDS_ROWS)]
+    src = _write_times(tmp_path / "obj.ndjson.gz", [f"t{v:010d}" for v in ints])
+    dest = str(tmp_path / "out")
+    res = convert(spark, src, dest, mode="cluster")
+    assert res.partitioning == "range"
+    rows, values = _check_sorted_ranges(dest)
+    assert res.rows == rows == len(ints)
+    assert sum(int(v[1:]) for v in values) == sum(ints)
+
+
+def test_partition_by_falls_back_to_range(spark, tmp_path):
+    import random
+
+    rng = random.Random(10)
+    times = [rng.randrange(10**12) for _ in range(_BOUNDS_ROWS)]
+    src = _write_times(
+        tmp_path / "obj.ndjson.gz", times, extra=lambda i: {"part": i % 3}
+    )
+    dest = str(tmp_path / "out")
+    res = convert(spark, src, dest, mode="cluster", partition_by=["part"])
+    assert res.partitioning == "range"
+    rows, values = _check_sorted_ranges(dest)
+    assert res.rows == rows == len(times)
+    assert sum(values) == sum(times)
+
+
+def test_bounds_path_saves_the_sampling_job(spark, tmp_path, monkeypatch):
+    """A spilled cluster convert runs one Spark job fewer than the same
+    object forced down the range path: the range exchange's sampling job."""
+    import importlib
+    import uuid
+
+    # the package re-exports the function under the module's name
+    convert_mod = importlib.import_module("json_to_parquet_spark.operators.convert")
+
+    src = _write_times(tmp_path / "obj.ndjson.gz", list(range(_BOUNDS_ROWS)))
+    sc = spark.sparkContext
+
+    def jobs(dest):
+        group = f"convert-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            res = convert(spark, src, str(tmp_path / dest), mode="cluster")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return res.partitioning, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    bounds = jobs("a")
+    monkeypatch.setattr(convert_mod, "sample_spill", lambda *a: None)
+    ranged = jobs("b")
+    assert (bounds[0], ranged[0]) == ("bounds", "range")
+    assert bounds[1] == ranged[1] - 1, (bounds, ranged)
+
+
+def test_phases_sum_to_wall(spark, fixture_paths, tmp_path):
+    import time
+
+    _, shuffled_path = fixture_paths
+    t0 = time.perf_counter()
+    res = convert(spark, shuffled_path, str(tmp_path / "p"))
+    wall = time.perf_counter() - t0
+    assert list(res.phases) == ["read_s", "rewrite_s", "write_s", "verify_s"]
+    assert all(v >= 0 for v in res.phases.values())
+    assert abs(sum(res.phases.values()) - wall) <= 0.1 * wall, (res.phases, wall)
+
+
+def test_dotted_json_keys_convert(spark, tmp_path):
+    """JSON keys with dots are single fields, at the top level and nested,
+    and a dotted ``_dt`` key is still rewritten."""
+    import gzip
+    import json
+
+    src = tmp_path / "dots.ndjson.gz"
+    with gzip.open(src, "wt") as f:
+        for i in range(50):
+            rec = {
+                "time": 50 - i,
+                "k8s.pod": f"pod-{i}",
+                "a.b_dt": "2025-01-01T00:00:00Z",
+                "meta": {"x.y_dt": "2025-02-01T00:00:00Z", "n.m": i},
+            }
+            f.write(json.dumps(rec) + "\n")
+    dest = str(tmp_path / "out")
+    res = convert(spark, str(src), dest, mode="global")
+    assert res.rows == 50
+    assert sorted(res.rewritten_dt_paths) == ["a.b_dt", "meta.x.y_dt"]
+    out = spark.read.parquet(dest)
+    types = dict((f.name, f.dataType) for f in out.schema.fields)
+    assert types["a.b_dt"].typeName() == "timestamp"
+    assert types["meta"]["x.y_dt"].dataType.typeName() == "timestamp"
+    assert types["k8s.pod"].typeName() == "string"
+    first = out.collect()[0]
+    assert first["k8s.pod"] == "pod-49" and first["meta"]["n.m"] == 49
+
+
+def test_sample_spill_reads_whole_lines(tmp_path):
+    """The spill sample parses only whole lines, each at most once; a
+    missing key reads as None and a non-object line gives up (None)."""
+    import json
+
+    from json_to_parquet_spark.sources.ndjson import sample_spill
+
+    d = tmp_path / "spill"
+    d.mkdir()
+    lines = [json.dumps({"time": i, "pad": "y" * (i % 7)}) for i in range(50)]
+    lines[3] = json.dumps({"other": 1})
+    (d / "obj.ndjson").write_text("\n".join(lines) + "\n")
+    got = sample_spill(str(d), "time", 20)
+    assert 0 < len(got) <= 20 and got[0] == 0
+    assert all(v is None or 0 <= v < 50 for v in got)
+    assert len([v for v in got if v is not None]) == len({v for v in got if v is not None})
+    assert len(sample_spill(str(d), "time", 500)) == 50  # every line, once
+
+    (d / "obj.ndjson").write_text("\n".join([*lines[:10], "[1, 2]"]) + "\n")
+    assert sample_spill(str(d), "time", 11) is None

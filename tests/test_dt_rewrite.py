@@ -139,3 +139,89 @@ def test_no_python_udf_in_plan(spark):
     )
     plan = rewrite_dt_fields(df)._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan
+
+
+def _dotted(spark, schema, row):
+    return rewrite_dt_fields(spark.createDataFrame([row], schema))
+
+
+def test_dotted_top_level_passthrough(spark):
+    """A dotted name is one field, not a path: passed through untouched
+    beside a rewritten column."""
+    out = _dotted(
+        spark, "`k8s.pod` string, a_dt string", ("pod-1", "2025-01-01T00:00:00Z")
+    )
+    assert out.columns == ["k8s.pod", "a_dt"]
+    assert out.collect()[0]["k8s.pod"] == "pod-1"
+
+
+def test_dotted_top_level_dt(spark):
+    out = _dotted(spark, "`a.b_dt` string, n long", ("2025-01-01T00:00:00Z", 1))
+    assert out.schema["a.b_dt"].dataType == T.TimestampType()
+    assert out.collect()[0]["a.b_dt"] == datetime.datetime(2025, 1, 1)
+
+
+def test_dotted_nested_dt(spark):
+    schema = "s struct<`x.y_dt`: string, `p.q`: long>"
+    out = _dotted(spark, schema, (Row("2025-01-01T00:00:00Z", 7),))
+    assert dt_rewrite_paths(spark.createDataFrame([], schema).schema) == ["s.x.y_dt"]
+    inner = out.schema["s"].dataType
+    assert [f.name for f in inner.fields] == ["x.y_dt", "p.q"]
+    assert inner["x.y_dt"].dataType == T.TimestampType()
+    s = out.collect()[0].s
+    assert s["x.y_dt"] == datetime.datetime(2025, 1, 1) and s["p.q"] == 7
+
+
+def test_backtick_in_name(spark):
+    schema = T.StructType(
+        [
+            T.StructField("we`ird_dt", T.StringType()),
+            T.StructField(
+                "s", T.StructType([T.StructField("o`dd_dt", T.StringType())])
+            ),
+            T.StructField("plain`", T.LongType()),
+        ]
+    )
+    out = _dotted(spark, schema, ("2025-01-01T00:00:00Z", Row("2025-01-02T00:00:00Z"), 3))
+    assert out.columns == ["we`ird_dt", "s", "plain`"]
+    row = out.collect()[0]
+    assert row["we`ird_dt"] == datetime.datetime(2025, 1, 1)
+    assert row["s"]["o`dd_dt"] == datetime.datetime(2025, 1, 2)
+    assert row["plain`"] == 3
+
+
+def _type_nodes(dtype) -> int:
+    if isinstance(dtype, T.StructType):
+        return 1 + sum(_type_nodes(f.dataType) for f in dtype.fields)
+    if isinstance(dtype, T.ArrayType):
+        return 1 + _type_nodes(dtype.elementType)
+    if isinstance(dtype, T.MapType):
+        return 1 + _type_nodes(dtype.keyType) + _type_nodes(dtype.valueType)
+    return 1
+
+
+def test_build_is_linear_in_depth(spark, monkeypatch):
+    """Each Column is built once: on a 6-deep array-of-struct chain with a
+    ``_dt`` leaf ``_rewrite_expr`` runs at most once per type node (a probe
+    tree per array level would double the count at every level)."""
+    from json_to_parquet_spark.functions import dt_rewrite
+
+    dtype: T.DataType = T.StructType(
+        [T.StructField("at_dt", T.StringType()), T.StructField("k", T.LongType())]
+    )
+    for level in range(6):
+        dtype = T.ArrayType(T.StructType([T.StructField(f"l{level}", dtype)]))
+    schema = T.StructType([T.StructField("root", dtype)])
+
+    calls = []
+    real = dt_rewrite._rewrite_expr
+
+    def counting(*args):
+        calls.append(1)
+        return real(*args)
+
+    monkeypatch.setattr(dt_rewrite, "_rewrite_expr", counting)
+    cols, paths = dt_rewrite_columns(schema)
+    assert paths == ["root[]" + "".join(f".l{i}[]" for i in range(5, 0, -1)) + ".l0.at_dt"]
+    assert len(cols) == 1
+    assert 0 < len(calls) <= _type_nodes(dtype), len(calls)

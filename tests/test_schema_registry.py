@@ -46,6 +46,9 @@ def test_cli_pins_schema_across_runs(spark, tmp_path, capsys):
     pinned = load_schema(reg)
     assert [f.name for f in pinned.fields] == ["time", "when_dt"]
     rows0 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    # the lineage line names the partitioning and the per-phase seconds
+    assert rows0["partitioning"] == "bounds"
+    assert list(rows0["phases"]) == ["read_s", "rewrite_s", "write_s", "verify_s"]
 
     # later object of the feed — same logical stream, but alone it would
     # infer a NARROWER schema (missing key). Pinning keeps the feed width.
@@ -99,6 +102,7 @@ def test_cli_csv_source(spark, tmp_path, capsys):
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["rows"] == 30
     assert out["sorted_by"] == "time"
+    assert out["partitioning"] == "global"
     # CSV inference may already type ISO strings as timestamps (nothing
     # left to rewrite); either way the output column must be a timestamp
     assert out["rewritten_dt_paths"] in ([], ["when_dt"])
