@@ -915,59 +915,72 @@ INC_BATCH_OFFSET = 100_000
 INC_DROP_FRAC = 5  # batch docs are suffix re-crawls: first 1/5 of words gone
 
 
-def x111_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+def inc_batch_docs(docs: DataFrame) -> DataFrame:
+    """x111's arriving batch: every document re-crawled as a suffix
+    (first 1/INC_DROP_FRAC of its words gone) under an offset id."""
     words = F.split(F.col("text"), " ")
     drop_n = F.floor(F.size(words) / F.lit(INC_DROP_FRAC)).cast("int")
     suffix = F.array_join(
         F.slice(words, drop_n + F.lit(1), F.size(words) - drop_n), " "
     )
-    batch = docs.select(
+    return docs.select(
         (F.col("doc_id") + INC_BATCH_OFFSET).alias("doc_id"),
         suffix.alias("text"),
     )
 
-    def sig_of(corpus: DataFrame) -> DataFrame:
-        posting = corpus.select(
-            "doc_id", F.explode(shingles(F.col("text"))).alias("sh")
-        ).withColumn("fp", _charfold(F.col("sh")))
-        mins = [
-            F.min((F.lit(a) * F.col("fp") + F.lit(b)) % F.lit(ARITH_P)).alias(f"h{j}")
-            for j, (a, b) in enumerate(_ARITH_HASHES)
-        ]
-        return posting.groupBy("doc_id").agg(*mins)
 
-    def buckets_of(sig: DataFrame) -> DataFrame:
-        def _bucket(b: int) -> Column:
-            expr = F.col(f"h{b * LSH_ROWS}")
-            for r in range(1, LSH_ROWS):
-                expr = (expr * _BAND_MIX + F.col(f"h{b * LSH_ROWS + r}")) % F.lit(
-                    ARITH_P
-                )
-            return expr
+def lsh_signatures(corpus: DataFrame) -> DataFrame:
+    """(doc_id, h0..) arithmetic-family MinHash signatures."""
+    posting = corpus.select(
+        "doc_id", F.explode(shingles(F.col("text"))).alias("sh")
+    ).withColumn("fp", _charfold(F.col("sh")))
+    mins = [
+        F.min((F.lit(a) * F.col("fp") + F.lit(b)) % F.lit(ARITH_P)).alias(f"h{j}")
+        for j, (a, b) in enumerate(_ARITH_HASHES)
+    ]
+    return posting.groupBy("doc_id").agg(*mins)
 
-        return sig.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).cast("long").alias("band"),
-                            _bucket(b).alias("bucket"),
-                        )
-                        for b in range(LSH_BANDS)
-                    ]
-                )
-            ).alias("bb"),
-        ).select("doc_id", "bb.band", "bb.bucket")
 
-    base_sig = sig_of(docs).persist()
-    batch_sig = sig_of(batch).persist()
-    base_b = buckets_of(base_sig).alias("base")  # the pre-built index
-    batch_b = buckets_of(batch_sig).alias("new")
+def lsh_buckets(sig: DataFrame) -> DataFrame:
+    """(doc_id, band, bucket): one row per LSH band of each signature."""
+
+    def _bucket(b: int) -> Column:
+        expr = F.col(f"h{b * LSH_ROWS}")
+        for r in range(1, LSH_ROWS):
+            expr = (expr * _BAND_MIX + F.col(f"h{b * LSH_ROWS + r}")) % F.lit(
+                ARITH_P
+            )
+        return expr
+
+    return sig.select(
+        "doc_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).cast("long").alias("band"),
+                        _bucket(b).alias("bucket"),
+                    )
+                    for b in range(LSH_BANDS)
+                ]
+            )
+        ).alias("bb"),
+    ).select("doc_id", "bb.band", "bb.bucket")
+
+
+def lsh_probe(
+    batch_sig: DataFrame, base_sig: DataFrame, base_idx: DataFrame
+) -> DataFrame:
+    """(batch_id, base_id, n_eq, est_sim): the batch signatures' bands
+    joined against the base band index, candidates scored by signature
+    overlap.  Pairs are keyed by batch doc, so any split of the batch
+    into micro-batches unions to the same pairs (x111 and its twin
+    x172)."""
     cand = (
-        batch_b.join(
-            base_b,
+        lsh_buckets(batch_sig)
+        .alias("new")
+        .join(
+            base_idx.alias("base"),
             (F.col("new.band") == F.col("base.band"))
             & (F.col("new.bucket") == F.col("base.bucket")),
         )
@@ -997,8 +1010,15 @@ def x111_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_eq.alias("n_eq"),
             (n_eq.cast("double") / F.lit(float(MINHASH_HASHES))).alias("est_sim"),
         )
-        .orderBy("batch_id", "base_id")
     )
+
+
+def x111_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    base_sig = lsh_signatures(docs).persist()
+    batch_sig = lsh_signatures(inc_batch_docs(docs)).persist()
+    base_idx = lsh_buckets(base_sig)  # the pre-built index
+    return lsh_probe(batch_sig, base_sig, base_idx).orderBy("batch_id", "base_id")
 
 
 def _x111_sql() -> str:

@@ -14,10 +14,46 @@ struct construction.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.media import FRAME_BYTES
+from ..operators.media import (
+    AUD_NS_MIN,
+    AUD_NS_MOD,
+    AUD_SR_BASE,
+    AUD_SR_MOD,
+    AUD_SR_STEP,
+    AUD_VAL_A,
+    AUD_VAL_B,
+    AUD_VAL_MOD,
+    FRAME_BYTES,
+    IMG_H_MIN,
+    IMG_H_MOD,
+    IMG_PIX_MOD,
+    IMG_W_MIN,
+    IMG_W_MOD,
+    PNG_ALPHA_A,
+    VID_BYTE_A,
+    VID_BYTE_F,
+    VID_BYTE_J,
+    VID_BYTE_MOD,
+    VID_FPS_DEN,
+    VID_FPS_NUM,
+    VID_H_MIN,
+    VID_H_MOD,
+    VID_NF_MIN,
+    VID_NF_MOD,
+    VID_W_MIN,
+    VID_W_MOD,
+    extract_audio_stats,
+    extract_image_stats,
+    extract_video_stats,
+    make_audio,
+    make_image,
+    make_video,
+)
 from ..sources.catalog import load_table
 from . import QuerySpec, register
 
@@ -654,65 +690,142 @@ register(
 )
 
 
-def media_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Write-once GATE_DIR directory of REAL .ppm image files — one per
-    doc_id ≡ 0 (mod MEDIA_FILE_MOD) — for the binaryFile-source path.
-    Keyed on the image-generation constants AND the documents-table
-    fingerprint (the GATE_DIR cache-keying invariant: a retuned pixel
-    law or regenerated-in-place testdata busts the cache rather than
-    serving stale files).  The fixture writer is driver-side but
-    bounded: corpus/MEDIA_FILE_MOD tiny files at gate scale.  In
-    production the media files EXIST (they are the corpus being
-    ingested) — generating them is harness work, not engine work; the
-    engine path under test starts at ``spark.read.format("binaryFile")``."""
+def _file_fixture(
+    spark: SparkSession,
+    sf_dir: str,
+    kind: str,
+    law: tuple,
+    name_fmt: str,
+    make: Callable[[int], bytes],
+) -> str:
+    """Write-once GATE_DIR directory of REAL media files for the
+    binaryFile-source path: one ``name_fmt.format(doc_id)`` file holding
+    ``make(doc_id)`` per doc_id ≡ 0 (mod MEDIA_FILE_MOD).  Keyed on the
+    generation-law constants ``law`` AND the documents-table
+    fingerprint (the GATE_DIR cache-keying invariant: a retuned law or
+    regenerated-in-place testdata busts the cache rather than serving
+    stale files).  The writer is driver-side but bounded:
+    corpus/MEDIA_FILE_MOD tiny files at gate scale.  In production the
+    media files EXIST (they are the corpus being ingested) — generating
+    them is harness work, not engine work; the engine path under test
+    starts at ``spark.read.format("binaryFile")``."""
     import hashlib
     import os
 
-    from ..operators.media import (
-        IMG_H_MIN,
-        IMG_H_MOD,
-        IMG_PIX_MOD,
-        IMG_W_MIN,
-        IMG_W_MOD,
-        make_image,
-    )
-    from ..sources.catalog import load_table as _lt
     from .convert_gate import GATE_DIR
     from .similarity import _data_fingerprint
 
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    sig = repr(
-        (
-            "mediafiles-v1",
-            MEDIA_FILE_MOD,
-            IMG_W_MOD,
-            IMG_W_MIN,
-            IMG_H_MOD,
-            IMG_H_MIN,
-            IMG_PIX_MOD,
-        )
-    )
+    sig = repr((f"{kind}files-v1", MEDIA_FILE_MOD, *law))
     token = hashlib.sha256(sig.encode()).hexdigest()[:8]
     dest = os.path.join(
         GATE_DIR,
-        f"media_{tag}_{token}_d{_data_fingerprint(sf_dir, 'documents')}",
+        f"{kind}_{tag}_{token}_d{_data_fingerprint(sf_dir, 'documents')}",
     )
     marker = os.path.join(dest, "_SUCCESS")
     if not os.path.exists(marker):
         os.makedirs(dest, exist_ok=True)
-        ids = [
-            r.doc_id
-            for r in _lt(spark, sf_dir, "documents")
-            .select("doc_id")
-            .filter(F.col("doc_id") % MEDIA_FILE_MOD == 0)
-            .collect()
-        ]
-        for d in ids:
-            with open(os.path.join(dest, f"img_{d:08d}.ppm"), "wb") as f:
-                f.write(make_image(int(d), "ppm"))
+        docs = load_table(spark, sf_dir, "documents").select("doc_id")
+        for r in docs.filter(F.col("doc_id") % MEDIA_FILE_MOD == 0).collect():
+            with open(os.path.join(dest, name_fmt.format(r.doc_id)), "wb") as f:
+                f.write(make(int(r.doc_id)))
         with open(marker, "w"):
             pass
     return dest
+
+
+_IMG_LAW = (IMG_W_MOD, IMG_W_MIN, IMG_H_MOD, IMG_H_MIN, IMG_PIX_MOD)
+
+
+def media_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
+    """.ppm images (x277/x278/x282)."""
+    return _file_fixture(
+        spark, sf_dir, "media", _IMG_LAW, "img_{:08d}.ppm",
+        lambda d: make_image(d, "ppm"),
+    )
+
+
+def audio_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
+    """.wav clips (x290/x292), keyed on every audio-law constant."""
+    law = (AUD_NS_MOD, AUD_NS_MIN, AUD_SR_MOD, AUD_SR_STEP, AUD_SR_BASE,
+           AUD_VAL_MOD, AUD_VAL_A, AUD_VAL_B)
+    return _file_fixture(spark, sf_dir, "audio", law, "clip_{:08d}.wav", make_audio)
+
+
+def video_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
+    """.y4m clips (x296/x304), keyed on every video-law constant."""
+    law = (VID_W_MOD, VID_W_MIN, VID_H_MOD, VID_H_MIN, VID_NF_MOD, VID_NF_MIN,
+           VID_FPS_NUM, VID_FPS_DEN, VID_BYTE_A, VID_BYTE_F, VID_BYTE_J,
+           VID_BYTE_MOD)
+    return _file_fixture(spark, sf_dir, "video", law, "vid_{:08d}.y4m", make_video)
+
+
+def png_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
+    """.png images (x306/x307); the alpha constant pins the encoder
+    version."""
+    return _file_fixture(
+        spark, sf_dir, "png", (*_IMG_LAW, PNG_ALPHA_A), "img_{:08d}.png",
+        lambda d: make_image(d, "png"),
+    )
+
+
+# The binaryFile media legs: file extension → (file-name stem, fixture
+# writer, decode kernel, output columns between doc_id and
+# length_agrees).  The batch entries (x277/x290/x296/x306) and their
+# streaming twins (x278/x292/x304/x307) decode through the same
+# ``decode_media_files``, so a twin cannot drift from its batch entry.
+MEDIA_LEGS = {
+    "ppm": ("img", media_fixture_dir, extract_image_stats,
+            ("src_length", "n_bytes", "width", "height", "pix_sum")),
+    "wav": ("clip", audio_fixture_dir, extract_audio_stats,
+            ("src_length", "n_bytes", "sample_rate", "n_samples", "sum_abs")),
+    "y4m": ("vid", video_fixture_dir, extract_video_stats,
+            ("src_length", "n_bytes", "width", "height", "n_frames", "n_cuts")),
+    "png": ("img", png_fixture_dir, extract_image_stats,
+            ("width", "height", "pix_sum")),
+}
+
+
+def media_files(files: DataFrame, ext: str) -> DataFrame:
+    """binaryFile rows → (doc_id, src_length, payload), the doc_id parsed
+    from the file name JVM-side (regexp on the path — no Python for
+    metadata work)."""
+    stem = MEDIA_LEGS[ext][0]
+    return files.select(
+        F.regexp_extract(F.col("path"), rf"{stem}_(\d+)\.{ext}$", 1)
+        .cast("long")
+        .alias("doc_id"),
+        F.col("length").alias("src_length"),
+        F.col("content").alias("payload"),
+    )
+
+
+def decode_media_files(files: DataFrame, ext: str) -> DataFrame:
+    """Real decode + stats of one leg's binaryFile rows in one
+    mapInPandas stage, the source's own ``length`` carried next to the
+    decoded payload length so the gate cross-checks the source metadata
+    against the bytes it delivered."""
+    _stem, _fixture, extract, cols = MEDIA_LEGS[ext]
+    rows = media_files(files, ext)
+    return (
+        extract(rows)
+        .join(rows.select("doc_id", "src_length"), "doc_id")
+        .select(
+            "doc_id",
+            *cols,
+            (F.col("src_length") == F.col("n_bytes")).alias("length_agrees"),
+        )
+    )
+
+
+def _decode_fixture(spark: SparkSession, sf_dir: str, ext: str) -> DataFrame:
+    """A leg's fixture directory read through ``binaryFile`` and decoded."""
+    files = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", f"*.{ext}")
+        .load(MEDIA_LEGS[ext][1](spark, sf_dir))
+    )
+    return decode_media_files(files, ext)
 
 
 def x277_media_binaryfile_source(
@@ -720,42 +833,12 @@ def x277_media_binaryfile_source(
 ) -> DataFrame:
     """Blob-store media ingest through Spark's ``binaryFile`` source:
     real .ppm files on disk → (path, length, content) rows → doc_id
-    parsed from the file name JVM-side (regexp on the path — no Python
-    for metadata work) → real decode + stats in one mapInPandas stage.
-    The source's own ``length`` column is carried next to the decoded
-    payload length, so the gate cross-checks the source metadata
-    against the bytes it delivered.  At 100 TB this is the actual
-    ingest shape: binaryFile lists + reads files distributed, decode is
-    per-partition Python with whole-Arrow-batch transfer, no shuffle
-    anywhere."""
-    from ..operators.media import extract_image_stats
-
-    src = media_fixture_dir(spark, sf_dir)
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.ppm")
-        .load(src)
-        .select(
-            F.regexp_extract(F.col("path"), r"img_(\d+)\.ppm$", 1)
-            .cast("long")
-            .alias("doc_id"),
-            F.col("length").alias("src_length"),
-            F.col("content").alias("payload"),
-        )
-    )
-    stats = extract_image_stats(files)
-    return (
-        stats.join(files.select("doc_id", "src_length"), "doc_id")
-        .select(
-            "doc_id",
-            "src_length",
-            "n_bytes",
-            "width",
-            "height",
-            "pix_sum",
-            (F.col("src_length") == F.col("n_bytes")).alias("length_agrees"),
-        )
-    )
+    parsed from the file name JVM-side → real decode + stats in one
+    mapInPandas stage, source length cross-checked against the decoded
+    payload.  At 100 TB this is the actual ingest shape: binaryFile
+    lists + reads files distributed, decode is per-partition Python
+    with whole-Arrow-batch transfer, no shuffle anywhere."""
+    return _decode_fixture(spark, sf_dir, "ppm")
 
 
 def _x277_sql() -> str:
@@ -1121,46 +1204,97 @@ BP_SCALE = 10_000
 DHASH_RECLAIM_BP = 2_000  # dedup iff ≥ 20.00% of payload bytes reclaimable
 
 
-def _dhash_store_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-(shard, hash) store accounting off the REAL decode path:
-    logical bytes (all refs), stored bytes under dedup (the keeper's),
-    and the ref count.  Shard = leading hex nibble of the content hash,
-    the standard CAS fan-out key."""
-    from ..operators.media import (
-        documents_as_image_media,
-        extract_image_dhash,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    h = extract_image_dhash(
-        documents_as_image_media(docs, fmt="ppm")
-    ).withColumn("shard", F.substring("dhash_hex", 1, 1))
-    return h.groupBy("shard", "dhash_hex").agg(
+def _store_groups(h: DataFrame, key: str, shard: Column) -> DataFrame:
+    """Per-(shard, content key) store accounting over decoded rows
+    (doc_id, key, n_bytes): logical bytes (all refs), stored bytes under
+    dedup (the keeper's, the lowest doc_id) and the ref count."""
+    return h.withColumn("shard", shard).groupBy("shard", key).agg(
         F.count(F.lit(1)).alias("refs"),
         F.sum("n_bytes").alias("logical"),
         F.min_by("n_bytes", "doc_id").alias("stored"),
     )
 
 
-# Shared oracle fragment: per-(shard, hash) groups + the integer decision.
-_SQL_DHASH_GROUPS = """
-        groups AS (
-          SELECT substring(dhash_hex, 1, 1) AS shard, dhash_hex,
+def _dhash_store_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Image store groups off the REAL decode path.  Shard = leading hex
+    nibble of the content hash, the standard CAS fan-out key."""
+    from ..operators.media import (
+        documents_as_image_media,
+        extract_image_dhash,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    h = extract_image_dhash(documents_as_image_media(docs, fmt="ppm"))
+    return _store_groups(h, "dhash_hex", F.substring("dhash_hex", 1, 1))
+
+
+def _groups_sql(p: str, src: str, shard: str, key: str) -> str:
+    """Oracle fragment mirroring ``_store_groups``: the ``{p}groups``
+    CTE over ``src`` plus the ``{p}agg`` totals the decision reads."""
+    return f"""
+        {p}groups AS (
+          SELECT {shard} AS shard, {key},
                  COUNT(*) AS refs,
                  SUM(n_bytes) AS logical,
                  MIN_BY(n_bytes, doc_id) AS stored
-          FROM hashes GROUP BY 1, 2),
-        agg AS (
+          FROM {src} GROUP BY 1, 2),
+        {p}agg AS (
           SELECT CAST(SUM(refs) AS BIGINT) AS n_objects,
                  CAST(SUM(logical) AS BIGINT) AS total_bytes,
                  CAST(SUM(logical) - SUM(stored) AS BIGINT)
                    AS reclaimable_bytes
-          FROM groups)"""
+          FROM {p}groups)"""
 
-_SQL_DHASH_DECISION = (
-    f"CASE WHEN ({BP_SCALE} * reclaimable_bytes) // total_bytes "
-    f">= {DHASH_RECLAIM_BP} THEN 'dedup' ELSE 'hold' END"
-)
+
+def _decision_sql(thr_bp: int) -> str:
+    return (
+        f"CASE WHEN ({BP_SCALE} * reclaimable_bytes) // total_bytes "
+        f">= {thr_bp} THEN 'dedup' ELSE 'hold' END"
+    )
+
+
+def _store_policy_sql(ctes: str, p: str, thr_bp: int) -> str:
+    """The decide oracle (x283/x301/x308) over ``ctes``, which ends
+    with a ``_groups_sql(p, ...)`` fragment."""
+    return f"""
+        WITH {ctes}
+        SELECT n_objects, total_bytes, reclaimable_bytes,
+               ({BP_SCALE} * reclaimable_bytes) // total_bytes
+                 AS reclaim_bp,
+               CAST({thr_bp} AS BIGINT) AS thr_bp,
+               {_decision_sql(thr_bp)} AS decision
+        FROM {p}agg
+        """
+
+
+def _store_manifest_sql(ctes: str, p: str, thr_bp: int) -> str:
+    """The policy-routed manifest oracle (x284/x302/x309): re-makes the
+    integer decision and serves the same branch."""
+    return f"""
+        WITH {ctes},
+        {p}dec AS (SELECT {_decision_sql(thr_bp)} AS decision FROM {p}agg),
+        {p}per AS (
+          SELECT shard,
+                 CAST(COUNT(*) AS BIGINT) AS dd_objects,
+                 CAST(SUM(refs) AS BIGINT) AS n_refs,
+                 CAST(SUM(stored) AS BIGINT) AS dd_bytes,
+                 CAST(SUM(logical) AS BIGINT) AS logical_bytes
+          FROM {p}groups GROUP BY shard)
+        SELECT (SELECT decision FROM {p}dec) AS decision,
+               shard,
+               CASE WHEN (SELECT decision FROM {p}dec) = 'dedup'
+                    THEN dd_objects ELSE n_refs END AS n_objects,
+               n_refs AS n_logical_refs,
+               CASE WHEN (SELECT decision FROM {p}dec) = 'dedup'
+                    THEN dd_bytes ELSE logical_bytes END AS stored_bytes,
+               logical_bytes
+        FROM {p}per
+        """
+
+
+def _dhash_store_ctes() -> str:
+    groups = _groups_sql("", "hashes", "substring(dhash_hex, 1, 1)", "dhash_hex")
+    return f"{_dhash_ctes()},\n        {groups}"
 
 
 def _dedup_policy_from(
@@ -1207,16 +1341,7 @@ def x283_media_dedup_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _x283_sql() -> str:
-    return f"""
-        WITH {_dhash_ctes()},
-        {_SQL_DHASH_GROUPS}
-        SELECT n_objects, total_bytes, reclaimable_bytes,
-               ({BP_SCALE} * reclaimable_bytes) // total_bytes
-                 AS reclaim_bp,
-               CAST({DHASH_RECLAIM_BP} AS BIGINT) AS thr_bp,
-               {_SQL_DHASH_DECISION} AS decision
-        FROM agg
-        """
+    return _store_policy_sql(_dhash_store_ctes(), "", DHASH_RECLAIM_BP)
 
 
 register(
@@ -1229,38 +1354,26 @@ register(
 )
 
 
-def x284_policy_routed_media_store(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The store's shard manifest served THROUGH x283's decision, the
-    decision named in every row: (decision, shard, n_objects,
-    n_logical_refs, stored_bytes, logical_bytes).  'dedup' stores one
-    object per distinct content hash (n_objects = distinct hashes,
-    stored_bytes = keepers only); 'hold' stores every object verbatim
-    (n_objects = refs, stored = logical) and never pays the
-    group-by-hash rewrite beyond the measure itself.  The oracle
-    re-makes the integer decision and serves the same branch — one
-    hash proves decision and manifest agree.  Scale shapes: one
-    hash-keyed shuffle + a 16-key shard rollup."""
+def _policy_routed_store(g: DataFrame, thr_bp: int) -> DataFrame:
+    """A store's shard manifest served THROUGH the dedup policy over the
+    groups frame ``g``, the decision named in every row: (decision,
+    shard, n_objects, n_logical_refs, stored_bytes, logical_bytes).
+    'dedup' stores one object per distinct content key (n_objects =
+    distinct keys, stored_bytes = keepers only); 'hold' stores every
+    object verbatim (n_objects = refs, stored = logical) and never pays
+    the group-by-key rewrite beyond the measure itself.  The oracle
+    re-makes the integer decision and serves the same branch — one hash
+    proves decision and manifest agree.  Shared by x284, x302 and x309."""
     decision = (
-        x283_media_dedup_policy(spark, sf_dir).collect()[0].decision
+        _dedup_policy_from(g, thr_bp).collect()[0].decision
     )  # 1-row bounded decision (the x235 pattern)
-    g = _dhash_store_groups(spark, sf_dir)
-    if decision == "dedup":
-        out = g.groupBy("shard").agg(
-            F.count(F.lit(1)).cast("long").alias("n_objects"),
-            F.sum("refs").cast("long").alias("n_logical_refs"),
-            F.sum("stored").cast("long").alias("stored_bytes"),
-            F.sum("logical").cast("long").alias("logical_bytes"),
-        )
-    else:
-        out = g.groupBy("shard").agg(
-            F.sum("refs").cast("long").alias("n_objects"),
-            F.sum("refs").cast("long").alias("n_logical_refs"),
-            F.sum("logical").cast("long").alias("stored_bytes"),
-            F.sum("logical").cast("long").alias("logical_bytes"),
-        )
-    return out.select(
+    dedup = decision == "dedup"
+    return g.groupBy("shard").agg(
+        (F.count(F.lit(1)) if dedup else F.sum("refs")).cast("long").alias("n_objects"),
+        F.sum("refs").cast("long").alias("n_logical_refs"),
+        F.sum("stored" if dedup else "logical").cast("long").alias("stored_bytes"),
+        F.sum("logical").cast("long").alias("logical_bytes"),
+    ).select(
         F.lit(decision).alias("decision"),
         "shard",
         "n_objects",
@@ -1270,28 +1383,17 @@ def x284_policy_routed_media_store(
     )
 
 
+def x284_policy_routed_media_store(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """The store's shard manifest served THROUGH x283's decision (see
+    ``_policy_routed_store``).  Scale shapes: one hash-keyed shuffle + a
+    16-key shard rollup."""
+    return _policy_routed_store(_dhash_store_groups(spark, sf_dir), DHASH_RECLAIM_BP)
+
+
 def _x284_sql() -> str:
-    return f"""
-        WITH {_dhash_ctes()},
-        {_SQL_DHASH_GROUPS},
-        dec AS (SELECT {_SQL_DHASH_DECISION} AS decision FROM agg),
-        per AS (
-          SELECT shard,
-                 CAST(COUNT(*) AS BIGINT) AS dd_objects,
-                 CAST(SUM(refs) AS BIGINT) AS n_refs,
-                 CAST(SUM(stored) AS BIGINT) AS dd_bytes,
-                 CAST(SUM(logical) AS BIGINT) AS logical_bytes
-          FROM groups GROUP BY shard)
-        SELECT (SELECT decision FROM dec) AS decision,
-               shard,
-               CASE WHEN (SELECT decision FROM dec) = 'dedup'
-                    THEN dd_objects ELSE n_refs END AS n_objects,
-               n_refs AS n_logical_refs,
-               CASE WHEN (SELECT decision FROM dec) = 'dedup'
-                    THEN dd_bytes ELSE logical_bytes END AS stored_bytes,
-               logical_bytes
-        FROM per
-        """
+    return _store_manifest_sql(_dhash_store_ctes(), "", DHASH_RECLAIM_BP)
 
 
 register(
@@ -1727,67 +1829,6 @@ register(
 )
 
 
-def audio_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Write-once GATE_DIR directory of REAL .wav files — one per
-    doc_id ≡ 0 (mod MEDIA_FILE_MOD), the x277 fixture discipline: keyed
-    on every audio-law constant AND the documents fingerprint so a
-    retuned sample law or regenerated testdata busts the cache."""
-    import hashlib
-    import os
-
-    from ..operators.media import (
-        AUD_NS_MIN,
-        AUD_NS_MOD,
-        AUD_SR_BASE,
-        AUD_SR_MOD,
-        AUD_SR_STEP,
-        AUD_VAL_A,
-        AUD_VAL_B,
-        AUD_VAL_MOD,
-        make_audio,
-    )
-    from ..sources.catalog import load_table as _lt
-    from .convert_gate import GATE_DIR
-    from .similarity import _data_fingerprint
-
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    sig = repr(
-        (
-            "audiofiles-v1",
-            MEDIA_FILE_MOD,
-            AUD_NS_MOD,
-            AUD_NS_MIN,
-            AUD_SR_MOD,
-            AUD_SR_STEP,
-            AUD_SR_BASE,
-            AUD_VAL_MOD,
-            AUD_VAL_A,
-            AUD_VAL_B,
-        )
-    )
-    token = hashlib.sha256(sig.encode()).hexdigest()[:8]
-    dest = os.path.join(
-        GATE_DIR,
-        f"audio_{tag}_{token}_d{_data_fingerprint(sf_dir, 'documents')}",
-    )
-    marker = os.path.join(dest, "_SUCCESS")
-    if not os.path.exists(marker):
-        os.makedirs(dest, exist_ok=True)
-        ids = [
-            r.doc_id
-            for r in _lt(spark, sf_dir, "documents")
-            .select("doc_id")
-            .filter(F.col("doc_id") % MEDIA_FILE_MOD == 0)
-            .collect()
-        ]
-        for d in ids:
-            with open(os.path.join(dest, f"clip_{d:08d}.wav"), "wb") as f:
-                f.write(make_audio(int(d)))
-        with open(marker, "w"):
-            pass
-    return dest
-
-
 def x290_audio_binaryfile_source(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1796,36 +1837,7 @@ def x290_audio_binaryfile_source(
     (path, length, content) → doc_id parsed JVM-side → real chunk-walk
     decode + stats in one mapInPandas stage, the source's own length
     cross-checked against the delivered bytes."""
-    from ..operators.media import extract_audio_stats
-
-    src = audio_fixture_dir(spark, sf_dir)
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wav")
-        .load(src)
-        .select(
-            F.regexp_extract(F.col("path"), r"clip_(\d+)\.wav$", 1)
-            .cast("long")
-            .alias("doc_id"),
-            F.col("length").alias("src_length"),
-            F.col("content").alias("payload"),
-        )
-    )
-    stats = extract_audio_stats(files)
-    return (
-        stats.join(files.select("doc_id", "src_length"), "doc_id")
-        .select(
-            "doc_id",
-            "src_length",
-            "n_bytes",
-            "sample_rate",
-            "n_samples",
-            "sum_abs",
-            (F.col("src_length") == F.col("n_bytes")).alias(
-                "length_agrees"
-            ),
-        )
-    )
+    return _decode_fixture(spark, sf_dir, "wav")
 
 
 def _x290_sql() -> str:
@@ -2060,74 +2072,6 @@ register(
 )
 
 
-def video_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Write-once GATE_DIR directory of REAL .y4m files — one per
-    doc_id ≡ 0 (mod MEDIA_FILE_MOD), keyed on every video-law constant
-    + the documents fingerprint (the store invariant)."""
-    import hashlib
-    import os
-
-    from ..operators.media import (
-        VID_BYTE_A,
-        VID_BYTE_F,
-        VID_BYTE_J,
-        VID_BYTE_MOD,
-        VID_FPS_DEN,
-        VID_FPS_NUM,
-        VID_H_MIN,
-        VID_H_MOD,
-        VID_NF_MIN,
-        VID_NF_MOD,
-        VID_W_MIN,
-        VID_W_MOD,
-        make_video,
-    )
-    from ..sources.catalog import load_table as _lt
-    from .convert_gate import GATE_DIR
-    from .similarity import _data_fingerprint
-
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    sig = repr(
-        (
-            "videofiles-v1",
-            MEDIA_FILE_MOD,
-            VID_W_MOD,
-            VID_W_MIN,
-            VID_H_MOD,
-            VID_H_MIN,
-            VID_NF_MOD,
-            VID_NF_MIN,
-            VID_FPS_NUM,
-            VID_FPS_DEN,
-            VID_BYTE_A,
-            VID_BYTE_F,
-            VID_BYTE_J,
-            VID_BYTE_MOD,
-        )
-    )
-    token = hashlib.sha256(sig.encode()).hexdigest()[:8]
-    dest = os.path.join(
-        GATE_DIR,
-        f"video_{tag}_{token}_d{_data_fingerprint(sf_dir, 'documents')}",
-    )
-    marker = os.path.join(dest, "_SUCCESS")
-    if not os.path.exists(marker):
-        os.makedirs(dest, exist_ok=True)
-        ids = [
-            r.doc_id
-            for r in _lt(spark, sf_dir, "documents")
-            .select("doc_id")
-            .filter(F.col("doc_id") % MEDIA_FILE_MOD == 0)
-            .collect()
-        ]
-        for d in ids:
-            with open(os.path.join(dest, f"vid_{d:08d}.y4m"), "wb") as f:
-                f.write(make_video(int(d)))
-        with open(marker, "w"):
-            pass
-    return dest
-
-
 def x296_video_binaryfile_source(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2135,37 +2079,7 @@ def x296_video_binaryfile_source(
     (the x277/x290 shape on the video leg): real .y4m files → doc_id
     parsed JVM-side → real tag parse + frame walk + stats in one
     mapInPandas stage, source length cross-checked against the bytes."""
-    from ..operators.media import extract_video_stats
-
-    src = video_fixture_dir(spark, sf_dir)
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.y4m")
-        .load(src)
-        .select(
-            F.regexp_extract(F.col("path"), r"vid_(\d+)\.y4m$", 1)
-            .cast("long")
-            .alias("doc_id"),
-            F.col("length").alias("src_length"),
-            F.col("content").alias("payload"),
-        )
-    )
-    stats = extract_video_stats(files)
-    return (
-        stats.join(files.select("doc_id", "src_length"), "doc_id")
-        .select(
-            "doc_id",
-            "src_length",
-            "n_bytes",
-            "width",
-            "height",
-            "n_frames",
-            "n_cuts",
-            (F.col("src_length") == F.col("n_bytes")).alias(
-                "length_agrees"
-            ),
-        )
-    )
+    return _decode_fixture(spark, sf_dir, "y4m")
 
 
 def _x296_sql() -> str:
@@ -2572,63 +2486,6 @@ register(
 )
 
 
-def png_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Write-once GATE_DIR directory of REAL .png files — one per
-    doc_id ≡ 0 (mod MEDIA_FILE_MOD), the x277 fixture discipline: keyed
-    on every image-law constant (incl. the alpha constant, which pins
-    the encoder version) AND the documents fingerprint."""
-    import hashlib
-    import os
-
-    from ..operators.media import (
-        IMG_H_MIN,
-        IMG_H_MOD,
-        IMG_PIX_MOD,
-        IMG_W_MIN,
-        IMG_W_MOD,
-        PNG_ALPHA_A,
-        make_image,
-    )
-    from ..sources.catalog import load_table as _lt
-    from .convert_gate import GATE_DIR
-    from .similarity import _data_fingerprint
-
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    sig = repr(
-        (
-            "pngfiles-v1",
-            MEDIA_FILE_MOD,
-            IMG_W_MOD,
-            IMG_W_MIN,
-            IMG_H_MOD,
-            IMG_H_MIN,
-            IMG_PIX_MOD,
-            PNG_ALPHA_A,
-        )
-    )
-    token = hashlib.sha256(sig.encode()).hexdigest()[:8]
-    dest = os.path.join(
-        GATE_DIR,
-        f"png_{tag}_{token}_d{_data_fingerprint(sf_dir, 'documents')}",
-    )
-    marker = os.path.join(dest, "_SUCCESS")
-    if not os.path.exists(marker):
-        os.makedirs(dest, exist_ok=True)
-        ids = [
-            r.doc_id
-            for r in _lt(spark, sf_dir, "documents")
-            .select("doc_id")
-            .filter(F.col("doc_id") % MEDIA_FILE_MOD == 0)
-            .collect()
-        ]
-        for d in ids:
-            with open(os.path.join(dest, f"img_{d:08d}.png"), "wb") as f:
-                f.write(make_image(int(d), "png"))
-        with open(marker, "w"):
-            pass
-    return dest
-
-
 def x306_png_binaryfile_source(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2640,32 +2497,7 @@ def x306_png_binaryfile_source(
     ``length_agrees`` (source metadata vs delivered payload) rather
     than a predicted size; the decoded dims and pixel checksum ARE
     law-predicted, which is what proves the decompression path."""
-    from ..operators.media import extract_image_stats
-
-    src = png_fixture_dir(spark, sf_dir)
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.png")
-        .load(src)
-        .select(
-            F.regexp_extract(F.col("path"), r"img_(\d+)\.png$", 1)
-            .cast("long")
-            .alias("doc_id"),
-            F.col("length").alias("src_length"),
-            F.col("content").alias("payload"),
-        )
-    )
-    stats = extract_image_stats(files)
-    return (
-        stats.join(files.select("doc_id", "src_length"), "doc_id")
-        .select(
-            "doc_id",
-            "width",
-            "height",
-            "pix_sum",
-            (F.col("src_length") == F.col("n_bytes")).alias("length_agrees"),
-        )
-    )
+    return _decode_fixture(spark, sf_dir, "png")
 
 
 def _x306_sql() -> str:
@@ -2986,38 +2818,19 @@ def _audio_store_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    h = extract_audio_stats(documents_as_audio_media(docs)).withColumn(
-        "shard", (F.col("fingerprint") % AUD_STORE_SHARDS).cast("long")
-    )
-    return h.groupBy("shard", "fingerprint").agg(
-        F.count(F.lit(1)).alias("refs"),
-        F.sum("n_bytes").alias("logical"),
-        F.min_by("n_bytes", "doc_id").alias("stored"),
-    )
+    h = extract_audio_stats(documents_as_audio_media(docs))
+    shard = (F.col("fingerprint") % AUD_STORE_SHARDS).cast("long")
+    return _store_groups(h, "fingerprint", shard)
 
 
-_SQL_AUDIO_GROUPS = f"""
+def _audio_store_ctes() -> str:
+    groups = _groups_sql("a", "ab", f"fingerprint % {AUD_STORE_SHARDS}", "fingerprint")
+    ab = """
         ab AS (
           SELECT afp.doc_id, afp.fingerprint,
                  CAST(44 + 2 * ad.n AS BIGINT) AS n_bytes
-          FROM afp JOIN ad USING (doc_id)),
-        agroups AS (
-          SELECT fingerprint % {AUD_STORE_SHARDS} AS shard, fingerprint,
-                 COUNT(*) AS refs,
-                 SUM(n_bytes) AS logical,
-                 MIN_BY(n_bytes, doc_id) AS stored
-          FROM ab GROUP BY 1, 2),
-        aagg AS (
-          SELECT CAST(SUM(refs) AS BIGINT) AS n_objects,
-                 CAST(SUM(logical) AS BIGINT) AS total_bytes,
-                 CAST(SUM(logical) - SUM(stored) AS BIGINT)
-                   AS reclaimable_bytes
-          FROM agroups)"""
-
-_SQL_AUDIO_DECISION = (
-    f"CASE WHEN ({BP_SCALE} * reclaimable_bytes) // total_bytes "
-    f">= {AUD_RECLAIM_BP} THEN 'dedup' ELSE 'hold' END"
-)
+          FROM afp JOIN ad USING (doc_id)),"""
+    return f"{_audio_ctes()},\n        {_audio_fp_ctes()},\n        {ab}{groups}"
 
 
 def x301_audio_dedup_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3031,17 +2844,7 @@ def x301_audio_dedup_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _x301_sql() -> str:
-    return f"""
-        WITH {_audio_ctes()},
-        {_audio_fp_ctes()},
-        {_SQL_AUDIO_GROUPS}
-        SELECT n_objects, total_bytes, reclaimable_bytes,
-               ({BP_SCALE} * reclaimable_bytes) // total_bytes
-                 AS reclaim_bp,
-               CAST({AUD_RECLAIM_BP} AS BIGINT) AS thr_bp,
-               {_SQL_AUDIO_DECISION} AS decision
-        FROM aagg
-        """
+    return _store_policy_sql(_audio_store_ctes(), "a", AUD_RECLAIM_BP)
 
 
 register(
@@ -3058,62 +2861,13 @@ def x302_policy_routed_audio_store(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """The audio store's shard manifest served THROUGH x301's decision
-    (the x284 shape): 'dedup' stores one object per distinct
-    fingerprint, 'hold' stores every clip verbatim; the decision is
-    named in every row so one gate hash proves decision and manifest
-    agree.  Scale shapes: one fingerprint-keyed shuffle + a
-    AUD_STORE_SHARDS-key rollup."""
-    decision = (
-        x301_audio_dedup_policy(spark, sf_dir).collect()[0].decision
-    )  # 1-row bounded decision (the x235 pattern)
-    g = _audio_store_groups(spark, sf_dir)
-    if decision == "dedup":
-        out = g.groupBy("shard").agg(
-            F.count(F.lit(1)).cast("long").alias("n_objects"),
-            F.sum("refs").cast("long").alias("n_logical_refs"),
-            F.sum("stored").cast("long").alias("stored_bytes"),
-            F.sum("logical").cast("long").alias("logical_bytes"),
-        )
-    else:
-        out = g.groupBy("shard").agg(
-            F.sum("refs").cast("long").alias("n_objects"),
-            F.sum("refs").cast("long").alias("n_logical_refs"),
-            F.sum("logical").cast("long").alias("stored_bytes"),
-            F.sum("logical").cast("long").alias("logical_bytes"),
-        )
-    return out.select(
-        F.lit(decision).alias("decision"),
-        "shard",
-        "n_objects",
-        "n_logical_refs",
-        "stored_bytes",
-        "logical_bytes",
-    )
+    (``_policy_routed_store``).  Scale shapes: one fingerprint-keyed
+    shuffle + a AUD_STORE_SHARDS-key rollup."""
+    return _policy_routed_store(_audio_store_groups(spark, sf_dir), AUD_RECLAIM_BP)
 
 
 def _x302_sql() -> str:
-    return f"""
-        WITH {_audio_ctes()},
-        {_audio_fp_ctes()},
-        {_SQL_AUDIO_GROUPS},
-        adec AS (SELECT {_SQL_AUDIO_DECISION} AS decision FROM aagg),
-        aper AS (
-          SELECT shard,
-                 CAST(COUNT(*) AS BIGINT) AS dd_objects,
-                 CAST(SUM(refs) AS BIGINT) AS n_refs,
-                 CAST(SUM(stored) AS BIGINT) AS dd_bytes,
-                 CAST(SUM(logical) AS BIGINT) AS logical_bytes
-          FROM agroups GROUP BY shard)
-        SELECT (SELECT decision FROM adec) AS decision,
-               shard,
-               CASE WHEN (SELECT decision FROM adec) = 'dedup'
-                    THEN dd_objects ELSE n_refs END AS n_objects,
-               n_refs AS n_logical_refs,
-               CASE WHEN (SELECT decision FROM adec) = 'dedup'
-                    THEN dd_bytes ELSE logical_bytes END AS stored_bytes,
-               logical_bytes
-        FROM aper
-        """
+    return _store_manifest_sql(_audio_store_ctes(), "a", AUD_RECLAIM_BP)
 
 
 register(
@@ -3267,43 +3021,22 @@ def _video_store_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    h = extract_video_fingerprints(
-        documents_as_video_media(docs)
-    ).withColumn(
-        "shard", (F.col("fingerprint") % VID_STORE_SHARDS).cast("long")
-    )
-    return h.groupBy("shard", "fingerprint").agg(
-        F.count(F.lit(1)).alias("refs"),
-        F.sum("n_bytes").alias("logical"),
-        F.min_by("n_bytes", "doc_id").alias("stored"),
-    )
+    h = extract_video_fingerprints(documents_as_video_media(docs))
+    shard = (F.col("fingerprint") % VID_STORE_SHARDS).cast("long")
+    return _store_groups(h, "fingerprint", shard)
 
 
-_SQL_VIDEO_GROUPS = f"""
+def _video_store_ctes() -> str:
+    groups = _groups_sql("v", "vb", f"fingerprint % {VID_STORE_SHARDS}", "fingerprint")
+    vb = """
         vb AS (
           SELECT vfp.doc_id, vfp.fingerprint,
                  CAST(33 + strlen(CAST(vd.w AS VARCHAR))
                          + strlen(CAST(vd.h AS VARCHAR))
                          + vd.nf * (6 + 3 * vd.w * vd.h) AS BIGINT)
                    AS n_bytes
-          FROM vfp JOIN vd USING (doc_id)),
-        vgroups AS (
-          SELECT fingerprint % {VID_STORE_SHARDS} AS shard, fingerprint,
-                 COUNT(*) AS refs,
-                 SUM(n_bytes) AS logical,
-                 MIN_BY(n_bytes, doc_id) AS stored
-          FROM vb GROUP BY 1, 2),
-        vagg AS (
-          SELECT CAST(SUM(refs) AS BIGINT) AS n_objects,
-                 CAST(SUM(logical) AS BIGINT) AS total_bytes,
-                 CAST(SUM(logical) - SUM(stored) AS BIGINT)
-                   AS reclaimable_bytes
-          FROM vgroups)"""
-
-_SQL_VIDEO_DECISION = (
-    f"CASE WHEN ({BP_SCALE} * reclaimable_bytes) // total_bytes "
-    f">= {VID_RECLAIM_BP} THEN 'dedup' ELSE 'hold' END"
-)
+          FROM vfp JOIN vd USING (doc_id)),"""
+    return f"{_video_ctes()},\n        {_SQL_VIDEO_FP_CTE},\n        {vb}{groups}"
 
 
 def x308_video_dedup_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3316,17 +3049,7 @@ def x308_video_dedup_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _x308_sql() -> str:
-    return f"""
-        WITH {_video_ctes()},
-        {_SQL_VIDEO_FP_CTE},
-        {_SQL_VIDEO_GROUPS}
-        SELECT n_objects, total_bytes, reclaimable_bytes,
-               ({BP_SCALE} * reclaimable_bytes) // total_bytes
-                 AS reclaim_bp,
-               CAST({VID_RECLAIM_BP} AS BIGINT) AS thr_bp,
-               {_SQL_VIDEO_DECISION} AS decision
-        FROM vagg
-        """
+    return _store_policy_sql(_video_store_ctes(), "v", VID_RECLAIM_BP)
 
 
 register(
@@ -3343,58 +3066,12 @@ def x309_policy_routed_video_store(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """The video store's shard manifest served THROUGH x308's decision
-    (the x284/x302 shape), decision named in every row."""
-    decision = (
-        x308_video_dedup_policy(spark, sf_dir).collect()[0].decision
-    )  # 1-row bounded decision (the x235 pattern)
-    g = _video_store_groups(spark, sf_dir)
-    if decision == "dedup":
-        out = g.groupBy("shard").agg(
-            F.count(F.lit(1)).cast("long").alias("n_objects"),
-            F.sum("refs").cast("long").alias("n_logical_refs"),
-            F.sum("stored").cast("long").alias("stored_bytes"),
-            F.sum("logical").cast("long").alias("logical_bytes"),
-        )
-    else:
-        out = g.groupBy("shard").agg(
-            F.sum("refs").cast("long").alias("n_objects"),
-            F.sum("refs").cast("long").alias("n_logical_refs"),
-            F.sum("logical").cast("long").alias("stored_bytes"),
-            F.sum("logical").cast("long").alias("logical_bytes"),
-        )
-    return out.select(
-        F.lit(decision).alias("decision"),
-        "shard",
-        "n_objects",
-        "n_logical_refs",
-        "stored_bytes",
-        "logical_bytes",
-    )
+    (``_policy_routed_store``), decision named in every row."""
+    return _policy_routed_store(_video_store_groups(spark, sf_dir), VID_RECLAIM_BP)
 
 
 def _x309_sql() -> str:
-    return f"""
-        WITH {_video_ctes()},
-        {_SQL_VIDEO_FP_CTE},
-        {_SQL_VIDEO_GROUPS},
-        vdec AS (SELECT {_SQL_VIDEO_DECISION} AS decision FROM vagg),
-        vper AS (
-          SELECT shard,
-                 CAST(COUNT(*) AS BIGINT) AS dd_objects,
-                 CAST(SUM(refs) AS BIGINT) AS n_refs,
-                 CAST(SUM(stored) AS BIGINT) AS dd_bytes,
-                 CAST(SUM(logical) AS BIGINT) AS logical_bytes
-          FROM vgroups GROUP BY shard)
-        SELECT (SELECT decision FROM vdec) AS decision,
-               shard,
-               CASE WHEN (SELECT decision FROM vdec) = 'dedup'
-                    THEN dd_objects ELSE n_refs END AS n_objects,
-               n_refs AS n_logical_refs,
-               CASE WHEN (SELECT decision FROM vdec) = 'dedup'
-                    THEN dd_bytes ELSE logical_bytes END AS stored_bytes,
-               logical_bytes
-        FROM vper
-        """
+    return _store_manifest_sql(_video_store_ctes(), "v", VID_RECLAIM_BP)
 
 
 register(
@@ -3559,31 +3236,15 @@ def tar_shard_dir(spark: SparkSession, sf_dir: str) -> str:
     return dest
 
 
-def x305_tar_shard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Write the tar shards (write-once), then prove the round-trip by
-    RE-READING them: ``binaryFile`` over *.tar → stdlib tar parse per
-    shard (one mapInPandas stage, no shuffle) → per-member byte-identity
-    check against the regenerated image → per-shard rollup.  Output:
-    (shard_id, n_members, member_bytes, first_doc, last_doc,
-    all_match) — membership and byte accounting must equal the packing
-    law's prediction, and all_match pins every member's bytes."""
+def tar_shard_stats(files: DataFrame) -> DataFrame:
+    """binaryFile rows of .tar shards → stdlib tar parse per shard (one
+    mapInPandas stage, no shuffle) → per-member byte-identity check
+    against the regenerated image → per-shard rollup (shard_id,
+    n_members, member_bytes, first_doc, last_doc, all_match).  A whole
+    shard sits in one binary row, so any split of the rows into batches
+    rolls up to the same shards (x305 and its twin x311)."""
     import pandas as pd
     from pyspark.sql import types as T
-
-    from ..operators.media import make_image
-
-    dest = tar_shard_dir(spark, sf_dir)
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tar")
-        .load(dest)
-        .select(
-            F.regexp_extract(F.col("path"), r"shard_(\d+)\.tar$", 1)
-            .cast("long")
-            .alias("shard_id"),
-            F.col("content"),
-        )
-    )
 
     member_schema = T.StructType(
         [
@@ -3628,14 +3289,32 @@ def x305_tar_shard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    members = files.mapInPandas(parse_tars, member_schema)
-    return members.groupBy("shard_id").agg(
+    shards = files.select(
+        F.regexp_extract(F.col("path"), r"shard_(\d+)\.tar$", 1)
+        .cast("long")
+        .alias("shard_id"),
+        F.col("content"),
+    )
+    return shards.mapInPandas(parse_tars, member_schema).groupBy("shard_id").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.sum("member_bytes").cast("long").alias("member_bytes"),
         F.min("doc_id").alias("first_doc"),
         F.max("doc_id").alias("last_doc"),
         F.bool_and("payload_matches").alias("all_match"),
     )
+
+
+def x305_tar_shard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Write the tar shards (write-once), then prove the round-trip by
+    RE-READING them through ``binaryFile`` and ``tar_shard_stats``:
+    membership and byte accounting must equal the packing law's
+    prediction, and all_match pins every member's bytes."""
+    files = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.tar")
+        .load(tar_shard_dir(spark, sf_dir))
+    )
+    return tar_shard_stats(files)
 
 
 def _x305_sql() -> str:

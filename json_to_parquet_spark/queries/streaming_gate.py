@@ -34,16 +34,20 @@ windows closed by the final watermark) and is oracle-checked directly.
 
 from __future__ import annotations
 
+import fnmatch
+import importlib
+import math
 import os
 import shutil
 import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources.catalog import load_table
-from . import QuerySpec, register
+from . import _REGISTRY, QuerySpec, register
 from .convert_gate import FIXTURE_PATH, GATE_DIR, ensure_convert_fixture
 
 # v2 suffix tracks convert_gate.FIXTURE_PATH: the fixture is cached on
@@ -127,6 +131,88 @@ def _read_batches(spark: SparkSession, dest: str) -> DataFrame:
     ``_write_batch_idempotent`` (partition-discovers ``bid=N`` dirs,
     drops the synthetic column)."""
     return spark.read.parquet(dest).drop("bid")
+
+
+def _batch_handler(
+    body: Callable[[DataFrame], DataFrame], dest: str
+) -> Callable[[DataFrame, int], None]:
+    """The ``foreachBatch`` callback of every twin: ``body``'s result for
+    micro-batch ``bid`` into the idempotent ``bid=N`` sink."""
+
+    def handle(bdf: DataFrame, bid: int) -> None:
+        _write_batch_idempotent(body(bdf), bid, dest)
+
+    return handle
+
+
+def _twin(
+    spark: SparkSession,
+    sf_dir: str,
+    tag: str,
+    feed: "DataFrame | tuple[str, str]",
+    body: Callable[[DataFrame], DataFrame],
+    n_batches: int = 4,
+) -> DataFrame:
+    """Run a streaming twin: stage ``feed`` as a file source, drain it
+    with availableNow over ``n_batches`` micro-batches through ``body``
+    (the batch operator applied to one micro-batch), and return the
+    union of the per-batch results.
+
+    ``feed`` is either a DataFrame, staged as ``n_batches`` Parquet
+    files hash-partitioned on its first column and streamed back with
+    ``feed.schema`` one file per trigger, or a ``(directory, glob)``
+    pair whose matching files are copied in and streamed as
+    ``binaryFile``, ⌈files / n_batches⌉ per trigger.  Every gate run
+    starts from fresh source, sink and checkpoint directories."""
+    sf_tag = os.path.basename(os.path.normpath(sf_dir))
+    src, dest, ckpt = (
+        os.path.join(GATE_DIR, f"{kind}_{tag}_{sf_tag}")
+        for kind in ("src", "out", "ckpt")
+    )
+    _fresh(src, dest, ckpt)
+    if isinstance(feed, DataFrame):
+        feed.repartition(n_batches, feed.columns[0]).write.parquet(src)
+        stream = (
+            spark.readStream.schema(feed.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+    else:
+        fixture, glob = feed
+        os.makedirs(src)
+        names = sorted(fnmatch.filter(os.listdir(fixture), glob))
+        for f in names:
+            shutil.copy(os.path.join(fixture, f), os.path.join(src, f))
+        stream = (
+            spark.readStream.format("binaryFile")
+            # streaming sources require the schema up front; binaryFile's
+            # is fixed by the format
+            .schema(
+                "path string, modificationTime timestamp, "
+                "length long, content binary"
+            )
+            .option("pathGlobFilter", glob)
+            .option("maxFilesPerTrigger", max(1, math.ceil(len(names) / n_batches)))
+            .load(src)
+        )
+    q = (
+        stream.writeStream.foreachBatch(_batch_handler(body, dest))
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    _drain(q, 300)
+    return _read_batches(spark, dest)
+
+
+def _oracle_of(module: str, name: str) -> str:
+    """``name``'s registered oracle, reused verbatim by its streaming
+    twin (anti-drift: the twin can never diverge from the batch op's
+    contract without the gate seeing it).  The producer module is
+    imported first, so a direct ``import streaming_gate`` does not
+    depend on registry()'s import order."""
+    importlib.import_module(f"{__package__}.{module}")
+    return _REGISTRY[name].oracle
 
 
 def x28_stream_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1099,10 +1185,11 @@ register(
 
 
 # Per-call (harness_seconds, drain_seconds) split for x172, appended on
-# every invocation: the gate harness cost (fixture regeneration, base
-# index build, output re-read) dominates the local wall clock but
-# amortizes to zero in a real continuous stream, where the drain loop is
-# the only recurring cost.  bench.py reports the two as separate rows
+# every invocation: the gate harness cost (base index build, output
+# re-read) dominates the local wall clock but amortizes to zero in a
+# real continuous stream, where the drain loop is the only recurring
+# cost.  The drain share is the ``_twin`` call: staging the feed plus
+# the micro-batch loop.  bench.py reports the two as separate rows
 # (VERDICT r6 ask #6) plus the drain amortized PER MICRO-BATCH
 # (drain / X172_N_BATCHES — VERDICT r12 ask #6): the per-arriving-batch
 # marginal cost is the number a continuous deployment actually pays,
@@ -1122,167 +1209,41 @@ def x172_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     once, each arriving batch pays only its own signatures plus a
     band-keyed join into the index.
 
-    Drained with availableNow over one-file micro-batches; every batch
-    doc is in exactly one micro-batch and pairs are keyed by batch doc,
-    so the union of per-batch outputs equals the one-shot batch result —
-    x111's REGISTERED oracle is reused verbatim (anti-drift: the
-    streaming twin can never diverge from the batch op's contract
-    without the gate seeing it)."""
-    from .dedup import (
-        _ARITH_HASHES,
-        _BAND_MIX,
-        _charfold,
-        _x111_sql,  # noqa: F401  (oracle reuse documented above)
-        ARITH_P,
-        INC_BATCH_OFFSET,
-        INC_DROP_FRAC,
-        LSH_BANDS,
-        LSH_ROWS,
-        MINHASH_HASHES,
-        shingles,
-    )
-    from pyspark.sql import Column
+    Every batch doc is in exactly one micro-batch and pairs are keyed by
+    batch doc, so the union of per-batch outputs equals the one-shot
+    batch result; the body is x111's ``lsh_probe`` and x111's
+    REGISTERED oracle is reused verbatim (anti-drift: the streaming twin
+    can never diverge from the batch op's contract without the gate
+    seeing it)."""
+    from .dedup import inc_batch_docs, lsh_buckets, lsh_probe, lsh_signatures
 
     t_entry = time.perf_counter()
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"src_x172_{sf_tag}")
-    dest = os.path.join(GATE_DIR, f"out_x172_{sf_tag}")
-    ckpt = os.path.join(GATE_DIR, f"ckpt_x172_{sf_tag}")
-    _fresh(src, dest, ckpt)
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def sig_of(corpus: DataFrame) -> DataFrame:
-        posting = corpus.select(
-            "doc_id", F.explode(shingles(F.col("text"))).alias("sh")
-        ).withColumn("fp", _charfold(F.col("sh")))
-        mins = [
-            F.min((F.lit(a) * F.col("fp") + F.lit(b)) % F.lit(ARITH_P)).alias(
-                f"h{j}"
-            )
-            for j, (a, b) in enumerate(_ARITH_HASHES)
-        ]
-        return posting.groupBy("doc_id").agg(*mins)
-
-    def buckets_of(sig: DataFrame) -> DataFrame:
-        def _bucket(b: int) -> Column:
-            expr = F.col(f"h{b * LSH_ROWS}")
-            for r in range(1, LSH_ROWS):
-                expr = (expr * _BAND_MIX + F.col(f"h{b * LSH_ROWS + r}")) % F.lit(
-                    ARITH_P
-                )
-            return expr
-
-        return sig.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).cast("long").alias("band"),
-                            _bucket(b).alias("bucket"),
-                        )
-                        for b in range(LSH_BANDS)
-                    ]
-                )
-            ).alias("bb"),
-        ).select("doc_id", "bb.band", "bb.bucket")
-
     # The static, pre-built side: base signatures + band index, persisted
     # once and probed by every micro-batch.
-    base_sig = sig_of(docs).persist()
-    base_idx = buckets_of(base_sig).persist()
+    base_sig = lsh_signatures(docs).persist()
+    base_idx = lsh_buckets(base_sig).persist()
     base_idx.count()  # materialize before the stream starts
-
-    # Arriving documents: x111's batch transform (suffix-truncated,
-    # id-offset), spread over 4 files = 4 micro-batches.
-    words = F.split(F.col("text"), " ")
-    drop_n = F.floor(F.size(words) / F.lit(INC_DROP_FRAC)).cast("int")
-    suffix = F.array_join(
-        F.slice(words, drop_n + F.lit(1), F.size(words) - drop_n), " "
-    )
-    batch_docs = docs.select(
-        (F.col("doc_id") + INC_BATCH_OFFSET).alias("doc_id"),
-        suffix.alias("text"),
-    )
-    # hash-partitioned by key: deterministic batch membership without
-    # repartitionByRange's extra sampling job; the union of per-batch
-    # outputs is batch-assignment-invariant (pairs are keyed by batch
-    # doc), so the oracle contract is untouched.
-    batch_docs.repartition(X172_N_BATCHES, "doc_id").write.parquet(src)
-
-    n_eq = sum(
-        (F.col(f"a{j}") == F.col(f"b{j}")).cast("long")
-        for j in range(MINHASH_HASHES)
-    )
-    sb = base_sig.select(
-        F.col("doc_id").alias("base_id"),
-        *[F.col(f"h{j}").alias(f"b{j}") for j in range(MINHASH_HASHES)],
-    )
-
-    def handle_batch(bdf: DataFrame, _bid: int) -> None:
-        bsig = sig_of(bdf).persist()
-        bb = buckets_of(bsig).alias("new")
-        cand = (
-            bb.join(
-                base_idx.alias("base"),
-                (F.col("new.band") == F.col("base.band"))
-                & (F.col("new.bucket") == F.col("base.bucket")),
-            )
-            .select(
-                F.col("new.doc_id").alias("batch_id"),
-                F.col("base.doc_id").alias("base_id"),
-            )
-            .dropDuplicates(["batch_id", "base_id"])
-        )
-        sa = bsig.select(
-            F.col("doc_id").alias("batch_id"),
-            *[F.col(f"h{j}").alias(f"a{j}") for j in range(MINHASH_HASHES)],
-        )
-        out = (
-            cand.join(sa, "batch_id")
-            .join(sb, "base_id")
-            .select(
-                "batch_id",
-                "base_id",
-                n_eq.alias("n_eq"),
-                (n_eq.cast("double") / F.lit(float(MINHASH_HASHES))).alias(
-                    "est_sim"
-                ),
-            )
-        )
-        out.write.mode("append").parquet(dest)
-        bsig.unpersist()
-
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
     t_drain = time.perf_counter()
-    q = (
-        stream.writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    out = _twin(
+        spark,
+        sf_dir,
+        "x172",
+        inc_batch_docs(docs),
+        lambda bdf: lsh_probe(lsh_signatures(bdf), base_sig, base_idx),
+        n_batches=X172_N_BATCHES,
     )
-    _drain(q, 300)
-    drain_s = time.perf_counter() - t_drain
-    X172_SPLIT.append((t_drain - t_entry, drain_s))
+    X172_SPLIT.append((t_drain - t_entry, time.perf_counter() - t_drain))
     base_sig.unpersist()
     base_idx.unpersist()
-    return spark.read.parquet(dest).orderBy("batch_id", "base_id")
+    return out.orderBy("batch_id", "base_id")
 
 
 register(
     QuerySpec(
         "x172_stream_neardup",
         x172_stream_neardup,
-        # Anti-drift: the streaming twin is gated against x111's batch
-        # oracle verbatim — see docstring.
-        __import__(
-            "json_to_parquet_spark.queries.dedup", fromlist=["_x111_sql"]
-        )._x111_sql(),
+        _oracle_of("dedup", "x111_incremental_neardup"),
         "streaming LSH near-dup: micro-batches probe the static band index",
     )
 )
@@ -1301,68 +1262,36 @@ def x212_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .curation import gopher_pass_rates, gopher_rule_counts
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"src_x212_{sf_tag}")
-    dest = os.path.join(GATE_DIR, f"out_x212_{sf_tag}")
-    ckpt = os.path.join(GATE_DIR, f"ckpt_x212_{sf_tag}")
-    _fresh(src, dest, ckpt)
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source", "n_chars"
     )
-    docs.repartition(4, "doc_id").write.parquet(src)
-
-    def handle_batch(bdf, _bid: int) -> None:
-        gopher_rule_counts(bdf).write.mode("append").parquet(dest)
-
-    q = (
-        spark.readStream.schema("doc_id bigint, text string, source string, n_chars bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q, 300)
-    return gopher_pass_rates(spark.read.parquet(dest))
-
-
-def _register_x212() -> None:
-    # Anti-drift: the streaming twin is gated against x203's batch
-    # oracle VERBATIM (the x172 registry-reuse pattern; curation
-    # registers before this module in registry()'s import order).
-    # Explicit producer import: direct `import streaming_gate`
-    # (tests, tooling) must not depend on registry()'s import
-    # order for this lookup to resolve (the ADVICE-r12 x270
-    # lesson applied to every _REGISTRY reuse in this module).
-    from . import _REGISTRY, curation  # noqa: F401
-
-    register(
-        QuerySpec(
-            "x212_stream_quality_gate",
-            x212_stream_quality_gate,
-            _REGISTRY["x203_gopher_rules"].oracle,
-            "streaming Gopher gate: per-micro-batch rule partials == batch result",
-        )
+    return gopher_pass_rates(
+        _twin(spark, sf_dir, "x212", docs, gopher_rule_counts)
     )
 
 
-_register_x212()
+register(
+    QuerySpec(
+        "x212_stream_quality_gate",
+        x212_stream_quality_gate,
+        _oracle_of("curation", "x203_gopher_rules"),
+        "streaming Gopher gate: per-micro-batch rule partials == batch result",
+    )
+)
 
 
 # --- x223: streaming index CDC — micro-batch adds into the frozen quantizer ----
 def x223_stream_index_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of x220's incremental index maintenance: the base
-    corpus's assignments are written once (the index build job), the
+    """Streaming twin of x220's incremental index maintenance: the
     ~10% add-batch arrives as a file-source stream, and every
     micro-batch routes its vectors against the SAME frozen quantizer
     frames (`route_two_level` — bit-identical tie/rounding semantics)
-    and appends its narrow (vec_id, is_add, cell) partials; the drained
-    union feeds the identical split logic, so x220's REGISTERED oracle
-    is reused verbatim (the x172/x212 anti-drift pattern applied to the
-    index layer).  This is the shape a continuously-ingesting vector
-    store actually runs: per-slice assignment partials appended to the
+    into narrow (vec_id, is_add, cell) partials; their union with the
+    base corpus's assignments (the index build job's output) feeds the
+    identical split logic, so x220's REGISTERED oracle is reused
+    verbatim (the x172/x212 anti-drift pattern applied to the index
+    layer).  This is the shape a continuously-ingesting vector store
+    actually runs: per-slice assignment partials appended to the
     placement ledger, splits decided at compaction time, no re-route of
     history."""
     from .similarity import (
@@ -1374,12 +1303,6 @@ def x223_stream_index_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         two_level_cent_sup,
     )
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"src_x223_{sf_tag}")
-    dest = os.path.join(GATE_DIR, f"out_x223_{sf_tag}")
-    ckpt = os.path.join(GATE_DIR, f"ckpt_x223_{sf_tag}")
-    _fresh(src, dest, ckpt)
-
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     is_add = F.col("vec_id") % ADD_MOD == ADD_MOD - 1
     sup = emb.filter(F.col("vec_id") < ivf_k0(spark, sf_dir)).select(
@@ -1387,54 +1310,37 @@ def x223_stream_index_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cent_sup = two_level_cent_sup(spark, sf_dir).localCheckpoint()
     nlist = ivf_nlist(spark, sf_dir)
-    # the index BUILD job's output: base assignments, written once
-    route_two_level(
-        emb.filter(~is_add), sup, cent_sup, cent_rows=nlist
-    ).select(
-        "vec_id", F.lit(False).alias("is_add"), F.col("c_id").alias("cell")
-    ).write.parquet(dest)
-    # the add stream: 4 files → 4 micro-batches
-    emb.filter(is_add).repartition(4, "vec_id").write.parquet(src)
 
-    def handle_batch(bdf: DataFrame, _bid: int) -> None:
-        route_two_level(bdf, sup, cent_sup, cent_rows=nlist).select(
-            "vec_id", F.lit(True).alias("is_add"), F.col("c_id").alias("cell")
-        ).write.mode("append").parquet(dest)
-
-    q = (
-        spark.readStream.schema("vec_id bigint, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q, 300)
-    placed = spark.read.parquet(dest).localCheckpoint()
-    return maintenance_ledger(spark, sf_dir, placed)
-
-
-def _register_x223() -> None:
-    # Anti-drift: gated against x220's batch oracle VERBATIM (similarity
-    # registers before this module in registry()'s import order).
-    # Explicit producer import: direct `import streaming_gate`
-    # (tests, tooling) must not depend on registry()'s import
-    # order for this lookup to resolve (the ADVICE-r12 x270
-    # lesson applied to every _REGISTRY reuse in this module).
-    from . import _REGISTRY, similarity  # noqa: F401
-
-    register(
-        QuerySpec(
-            "x223_stream_index_cdc",
-            x223_stream_index_cdc,
-            _REGISTRY["x220_ivf_incremental_maintenance"].oracle,
-            "streaming index CDC: per-micro-batch frozen-quantizer adds == batch ledger",
+    def placed(vecs: DataFrame, add: bool) -> DataFrame:
+        return route_two_level(vecs, sup, cent_sup, cent_rows=nlist).select(
+            "vec_id", F.lit(add).alias("is_add"), F.col("c_id").alias("cell")
         )
+
+    adds = _twin(
+        spark, sf_dir, "x223", emb.filter(is_add), lambda bdf: placed(bdf, True)
     )
+    ledger = placed(emb.filter(~is_add), False).unionByName(adds).localCheckpoint()
+    return maintenance_ledger(spark, sf_dir, ledger)
 
 
-_register_x223()
+register(
+    QuerySpec(
+        "x223_stream_index_cdc",
+        x223_stream_index_cdc,
+        _oracle_of("similarity", "x220_ivf_incremental_maintenance"),
+        "streaming index CDC: per-micro-batch frozen-quantizer adds == batch ledger",
+    )
+)
+
+
+def _tombstones(base: DataFrame):
+    """Delete-feed body shared by x234 and x264: resolve a micro-batch of
+    bare vec_ids against the FROZEN (vec_id, cell) layout — one key-equi
+    hash join per batch, how a store turns an id-keyed delete into a
+    cell-keyed tombstone."""
+    return lambda bdf: bdf.join(base.select("vec_id", "cell"), "vec_id").select(
+        "vec_id", "cell"
+    )
 
 
 # --- x234: streaming DELETE CDC — micro-batch tombstones into the ledger -------
@@ -1444,90 +1350,53 @@ def x234_stream_tombstone_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (x223 streams adds; this streams deletes): the index layout
     (vec_id → cell) is built once, DELETE events arrive as a 4-file
     micro-batch stream of bare vec_ids, and every batch resolves its
-    ids against the FROZEN layout (one key-equi hash join per batch —
-    how a real vector store turns an id-keyed delete into a list-keyed
-    tombstone) and appends narrow (vec_id, cell) tombstone partials to
-    the delete ledger.  The drained ledger left-joined back to the
-    layout feeds ``tombstone_rollup`` — x224's arithmetic VERBATIM —
-    so x224's REGISTERED oracle gates the whole loop (the x172/x212/
-    x223 anti-drift pattern).
+    ids against the FROZEN layout (``_tombstones``) into narrow
+    (vec_id, cell) tombstone partials.  The drained ledger left-joined
+    back to the layout feeds ``tombstone_rollup`` — x224's arithmetic
+    VERBATIM — so x224's REGISTERED oracle gates the whole loop (the
+    x172/x212/x223 anti-drift pattern).
 
     Scale shapes: base layout is the ~n^1.25 assignment written once;
     each micro-batch's work is batch-sized (id join against the
-    cell-keyed layout + a narrow append); the final rollup is one
+    cell-keyed layout + a narrow write); the final rollup is one
     key-shuffle agg of (cell, flag) rows."""
     from .similarity import TOMB_MOD, tombstone_rollup, two_level_lists
 
     sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"src_x234_{sf_tag}")
     base_dir = os.path.join(GATE_DIR, f"base_x234_{sf_tag}")
-    del_dir = os.path.join(GATE_DIR, f"del_x234_{sf_tag}")
-    ckpt = os.path.join(GATE_DIR, f"ckpt_x234_{sf_tag}")
-    _fresh(src, base_dir, del_dir, ckpt)
-
+    _fresh(base_dir)
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id")
     # the index BUILD job's output: every vector's inverted list, once
     emb.join(two_level_lists(spark, sf_dir), "vec_id").select(
         "vec_id", F.col("list_c").alias("cell")
     ).write.parquet(base_dir)
     base = spark.read.parquet(base_dir)
-    # the delete feed: bare ids, 4 files -> 4 micro-batches
-    emb.filter(F.col("vec_id") % TOMB_MOD == 2).repartition(
-        4, "vec_id"
-    ).write.parquet(src)
-
-    def handle_batch(bdf: DataFrame, _bid: int) -> None:
-        bdf.join(base, "vec_id").select("vec_id", "cell").write.mode(
-            "append"
-        ).parquet(del_dir)
-
-    q = (
-        spark.readStream.schema("vec_id bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q, 300)
-    drained = spark.read.parquet(del_dir).select(
+    dels = emb.filter(F.col("vec_id") % TOMB_MOD == 2)
+    drained = _twin(spark, sf_dir, "x234", dels, _tombstones(base)).select(
         "vec_id", F.lit(True).alias("dead_f")
     )
-    placed = base.join(drained.select("vec_id", "dead_f"), "vec_id", "left").select(
+    placed = base.join(drained, "vec_id", "left").select(
         "cell", F.coalesce("dead_f", F.lit(False)).alias("dead")
     )
     return tombstone_rollup(placed)
 
 
-def _register_x234() -> None:
-    # Anti-drift: gated against x224's batch oracle VERBATIM (similarity
-    # registers before this module in registry()'s import order).
-    # Explicit producer import: direct `import streaming_gate`
-    # (tests, tooling) must not depend on registry()'s import
-    # order for this lookup to resolve (the ADVICE-r12 x270
-    # lesson applied to every _REGISTRY reuse in this module).
-    from . import _REGISTRY, similarity  # noqa: F401
-
-    register(
-        QuerySpec(
-            "x234_stream_tombstone_cdc",
-            x234_stream_tombstone_cdc,
-            _REGISTRY["x224_tombstone_compaction"].oracle,
-            "streaming delete CDC: micro-batch tombstones == x224's batch ledger",
-        )
+register(
+    QuerySpec(
+        "x234_stream_tombstone_cdc",
+        x234_stream_tombstone_cdc,
+        _oracle_of("similarity", "x224_tombstone_compaction"),
+        "streaming delete CDC: micro-batch tombstones == x224's batch ledger",
     )
-
-
-_register_x234()
+)
 
 
 def x242_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of x237's drift MONITOR — how the PSI check runs
     in production: the incoming (drifted) snapshot arrives as a 4-file
     micro-batch stream; each batch routes its vectors through the
-    FROZEN serving quantizer (the x223 frozen-frames pattern) and
-    appends narrow (c_id, cnt) occupancy partials; the drained partials
+    FROZEN serving quantizer (the x223 frozen-frames pattern) into
+    narrow (c_id, cnt) occupancy partials; the drained partials
     sum into the new snapshot's cell counts (exact integers — partial
     counts compose associatively, so batching cannot change the total),
     and the PSI/decision arithmetic is ``drift_psi`` — x237's code
@@ -1544,52 +1413,27 @@ def x242_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         cent_sup_for,
         drift_psi,
         route_two_level,
+        serving_occupancy_path,
         DRIFT_RETRAIN_PSI,
     )
-
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"src_x242_{sf_tag}")
-    part_dir = os.path.join(GATE_DIR, f"parts_x242_{sf_tag}")
-    ckpt = os.path.join(GATE_DIR, f"ckpt_x242_{sf_tag}")
-    _fresh(src, part_dir, ckpt)
 
     corpus, sup, _cent_seed, cent_lloyd, nlist = _quantizer_frames(
         spark, sf_dir
     )
-    cs = cent_sup_for(cent_lloyd, sup)
-    # freeze the routing frames the handler closes over (bounded:
+    # freeze the routing frames the body closes over (bounded:
     # K0 + nlist rows — the serving quantizer, not the corpus)
     sup_f = sup.localCheckpoint()
-    cs_f = cs.localCheckpoint()
-    # the incoming feed: the drifted snapshot, 4 files -> 4 micro-batches
-    _drifted(corpus).repartition(4, "vec_id").write.parquet(src)
-
-    def handle_batch(bdf: DataFrame, _bid: int) -> None:
-        (
-            route_two_level(bdf, sup_f, cs_f, cent_rows=nlist)
-            .groupBy("c_id")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .write.mode("append")
-            .parquet(part_dir)
-        )
-
-    q = (
-        spark.readStream.schema("vec_id bigint, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q, 300)
-    pops_new = (
-        spark.read.parquet(part_dir)
+    cs_f = cent_sup_for(cent_lloyd, sup).localCheckpoint()
+    parts = _twin(
+        spark,
+        sf_dir,
+        "x242",
+        _drifted(corpus),
+        lambda bdf: route_two_level(bdf, sup_f, cs_f, cent_rows=nlist)
         .groupBy("c_id")
-        .agg(F.sum("cnt").alias("cn"))
+        .agg(F.count(F.lit(1)).alias("cnt")),
     )
-    from .similarity import serving_occupancy_path
-
+    pops_new = parts.groupBy("c_id").agg(F.sum("cnt").alias("cn"))
     # serving-side occupancy = index metadata, read from the store
     pops_old = spark.read.parquet(serving_occupancy_path(spark, sf_dir))
     psi_df = drift_psi(cent_lloyd.select("c_id"), pops_old, pops_new)
@@ -1631,8 +1475,8 @@ def x251_stream_label_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs in production: the add batch arrives as a 4-file micro-batch
     stream; each batch routes its vectors through the FROZEN quantizer
     (per-vector independent, so the routed partials compose exactly —
-    the x242 occupancy argument applied to assignments) and appends
-    narrow (vec_id, cell, d) rows; the drained set is tail-rung, linked
+    the x242 occupancy argument applied to assignments) into narrow
+    (vec_id, cell, d) rows; the drained set is tail-rung, linked
     against the persisted base segment, and voted against the frozen
     base-LP label state — x250's tail VERBATIM (`_label_cdc_stats`),
     gated against x250's registered oracle (the x172/x212/x223/x234/
@@ -1646,133 +1490,85 @@ def x251_stream_label_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .graph_ssl import _quantizer_frames as _graph_qf
     from .similarity import ivf_nlist, route_two_level
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"src_x251_{sf_tag}")
-    part_dir = os.path.join(GATE_DIR, f"parts_x251_{sf_tag}")
-    ckpt = os.path.join(GATE_DIR, f"ckpt_x251_{sf_tag}")
-    _fresh(src, part_dir, ckpt)
-
     _emb, sup, cs = _graph_qf(spark, sf_dir)
     nlist = ivf_nlist(spark, sf_dir)
     sup_f = sup.localCheckpoint()
     cs_f = cs.localCheckpoint()
     _e, _b, adds = _gadd_frames(spark, sf_dir)
-    adds.select("vec_id", F.col("v").alias("embedding")).repartition(
-        4, "vec_id"
-    ).write.parquet(src)
-
-    def handle_batch(bdf: DataFrame, _bid: int) -> None:
-        (
-            route_two_level(
-                bdf, sup_f, cs_f, cent_rows=nlist, include_dist=True
-            )
-            .select("vec_id", F.col("c_id").alias("cell"), "d")
-            .write.mode("append")
-            .parquet(part_dir)
-        )
-
-    q = (
-        spark.readStream.schema("vec_id bigint, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    parts = _twin(
+        spark,
+        sf_dir,
+        "x251",
+        adds.select("vec_id", F.col("v").alias("embedding")),
+        lambda bdf: route_two_level(
+            bdf, sup_f, cs_f, cent_rows=nlist, include_dist=True
+        ).select("vec_id", F.col("c_id").alias("cell"), "d"),
     )
-    _drain(q, 300)
-    return _label_cdc_stats(spark, sf_dir, spark.read.parquet(part_dir))
-
-
-def _x251_sql() -> str:
-    from .graph_ssl import _x250_sql
-
-    # shared oracle: streaming partials compose to exactly the batch
-    # labeler's inputs, so the output must match x250 bit-for-bit
-    return _x250_sql()
+    return _label_cdc_stats(spark, sf_dir, parts)
 
 
 register(
     QuerySpec(
         "x251_stream_label_cdc",
         x251_stream_label_cdc,
-        _x251_sql(),
+        # streaming partials compose to exactly the batch labeler's
+        # inputs, so the output must match x250 bit-for-bit
+        _oracle_of("graph_ssl", "x250_label_prop_cdc"),
         "streaming label CDC: micro-batch routed partials + one drained vote == x250 bit-for-bit",
     )
 )
+
+
+def _word_count(bdf: DataFrame) -> DataFrame:
+    """(word, cnt) over a batch of documents: lower-cased, space-split."""
+    return (
+        bdf.select(F.explode(F.split(F.lower("text"), " ")).alias("word"))
+        .filter(F.col("word") != "")
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
+def _drained_word_counts(spark: SparkSession, sf_dir: str, tag: str) -> DataFrame:
+    """The tokenizer ingestion slice streamed through ``_word_count``;
+    the drained count partials summed per word (exact integers composing
+    additively, so batching cannot change any total).  Feeds x254 and
+    x270."""
+    from .tokenizer import BPE_CDC_MOD
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    slice_ = docs.filter(F.col("doc_id") % BPE_CDC_MOD == 3)
+    parts = _twin(spark, sf_dir, tag, slice_, _word_count)
+    return parts.groupBy("word").agg(F.sum("cnt").alias("cnt"))
 
 
 def x254_stream_bpe_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of x252's incremental BPE retrain — how tokenizer
     maintenance consumes a document feed: the ingestion slice arrives
     as a 4-file micro-batch stream; each batch tokenizes ITS documents
-    and appends narrow (word, cnt) count partials (counts are exact
-    integers that compose additively, so batching cannot change any
-    total — the x242/x251 argument applied to word frequencies); the
-    drained partials sum into the slice's word-count table and the
-    vocab-sized retrain runs ONCE via `_bpe_cdc_stats` — x252's tail
-    VERBATIM, gated against x252's registered oracle (the anti-drift
-    pattern).
+    into narrow (word, cnt) count partials (``_drained_word_counts`` —
+    the x242/x251 argument applied to word frequencies); the drained
+    sum is the slice's word-count table and the vocab-sized retrain
+    runs ONCE via `_bpe_cdc_stats` — x252's tail VERBATIM, gated against
+    x252's registered oracle (the anti-drift pattern).
 
     Scale shapes: per micro-batch work is batch-sized (one explode +
     token-keyed partial agg); the drained sum is a vocab-sized shuffle;
     the merge loops run in one Arrow task over the tagged counts."""
-    from .tokenizer import BPE_CDC_MOD, _bpe_cdc_stats
+    from .tokenizer import _bpe_cdc_stats
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"src_x254_{sf_tag}")
-    part_dir = os.path.join(GATE_DIR, f"parts_x254_{sf_tag}")
-    ckpt = os.path.join(GATE_DIR, f"ckpt_x254_{sf_tag}")
-    _fresh(src, part_dir, ckpt)
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs.filter(F.col("doc_id") % BPE_CDC_MOD == 3).repartition(
-        4, "doc_id"
-    ).write.parquet(src)
-
-    def handle_batch(bdf: DataFrame, _bid: int) -> None:
-        (
-            bdf.select(
-                F.explode(F.split(F.lower("text"), " ")).alias("word")
-            )
-            .filter(F.col("word") != "")
-            .groupBy("word")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .write.mode("append")
-            .parquet(part_dir)
-        )
-
-    q = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    return _bpe_cdc_stats(
+        spark, sf_dir, _drained_word_counts(spark, sf_dir, "x254")
     )
-    _drain(q, 300)
-    drained = (
-        spark.read.parquet(part_dir)
-        .groupBy("word")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    return _bpe_cdc_stats(spark, sf_dir, drained)
-
-
-def _x254_sql() -> str:
-    from .tokenizer import _x252_sql
-
-    # shared oracle: count partials compose to exactly the batch
-    # trainer's inputs, so the rule table must match x252 bit-for-bit
-    return _x252_sql()
 
 
 register(
     QuerySpec(
         "x254_stream_bpe_cdc",
         x254_stream_bpe_cdc,
-        _x254_sql(),
+        # count partials compose to exactly the batch trainer's inputs,
+        # so the rule table must match x252 bit-for-bit
+        _oracle_of("tokenizer", "x252_bpe_incremental"),
         "streaming BPE CDC: micro-batch word-count partials + one drained retrain == x252 bit-for-bit",
     )
 )
@@ -1786,14 +1582,12 @@ def x264_stream_graph_tombstones(
     (x251 streams adds/labels; this streams deletes, as x234 does for
     the IVF family): delete events arrive as a 4-file micro-batch
     stream of bare vec_ids; each batch resolves its ids against the
-    FROZEN routing (one key-equi hash join per batch — how a store
-    turns an id-keyed delete into a cell-keyed dirty mark) and appends
-    narrow (vec_id, cell) tombstone partials to the delete ledger; the
-    drained ledger's id set feeds ``_graph_tombstone_compact_from`` —
-    x263's compactor VERBATIM — so x263's registered oracle gates the
-    whole loop (the x172/x212/x223/x234/x251 anti-drift pattern:
-    delete-set membership composes as a set union, so batching cannot
-    change the compaction).
+    FROZEN routing (``_tombstones``, x234's body) into narrow (vec_id,
+    cell) tombstone partials; the drained ledger's id set feeds
+    ``_graph_tombstone_compact_from`` — x263's compactor VERBATIM — so
+    x263's registered oracle gates the whole loop (the
+    x172/x212/x223/x234/x251 anti-drift pattern: delete-set membership
+    composes as a set union, so batching cannot change the compaction).
 
     Scale shapes: the frozen routing base is the ~n^1.25 assignment
     written once; each micro-batch's work is batch-sized; the
@@ -1803,12 +1597,8 @@ def x264_stream_graph_tombstones(
     from .similarity import TOMB_MOD
 
     sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"src_x264_{sf_tag}")
     base_dir = os.path.join(GATE_DIR, f"base_x264_{sf_tag}")
-    del_dir = os.path.join(GATE_DIR, f"del_x264_{sf_tag}")
-    ckpt = os.path.join(GATE_DIR, f"ckpt_x264_{sf_tag}")
-    _fresh(src, base_dir, del_dir, ckpt)
-
+    _fresh(base_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -1818,131 +1608,51 @@ def x264_stream_graph_tombstones(
     # reuses this frame instead of paying a second ~n^1.25 assignment)
     _route_with_dist(spark, sf_dir, emb).write.parquet(base_dir)
     base = spark.read.parquet(base_dir)
-    # the delete feed: bare ids, 4 files -> 4 micro-batches
-    emb.select("vec_id").filter(F.col("vec_id") % TOMB_MOD == 2).repartition(
-        4, "vec_id"
-    ).write.parquet(src)
-
-    def handle_batch(bdf: DataFrame, _bid: int) -> None:
-        bdf.join(base.select("vec_id", "cell"), "vec_id").select(
-            "vec_id", "cell"
-        ).write.mode("append").parquet(del_dir)
-
-    q = (
-        spark.readStream.schema("vec_id bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q, 300)
-    drained = spark.read.parquet(del_dir).select("vec_id")
-    return _graph_tombstone_compact_from(spark, sf_dir, drained, routed=base)
-
-
-def _register_x264() -> None:
-    # Anti-drift: gated against x263's batch oracle VERBATIM (graph_ssl
-    # registers before this module in registry()'s import order).
-    # Explicit producer import: direct `import streaming_gate`
-    # (tests, tooling) must not depend on registry()'s import
-    # order for this lookup to resolve (the ADVICE-r12 x270
-    # lesson applied to every _REGISTRY reuse in this module).
-    from . import _REGISTRY, graph_ssl  # noqa: F401
-
-    register(
-        QuerySpec(
-            "x264_stream_graph_tombstones",
-            x264_stream_graph_tombstones,
-            _REGISTRY["x263_graph_tombstone_compact"].oracle,
-            "streaming graph deletes: drained micro-batch tombstones == x263's batch compaction",
-        )
+    dels = emb.select("vec_id").filter(F.col("vec_id") % TOMB_MOD == 2)
+    drained = _twin(spark, sf_dir, "x264", dels, _tombstones(base))
+    return _graph_tombstone_compact_from(
+        spark, sf_dir, drained.select("vec_id"), routed=base
     )
 
 
-_register_x264()
+register(
+    QuerySpec(
+        "x264_stream_graph_tombstones",
+        x264_stream_graph_tombstones,
+        _oracle_of("graph_ssl", "x263_graph_tombstone_compact"),
+        "streaming graph deletes: drained micro-batch tombstones == x263's batch compaction",
+    )
+)
 
 
 def x270_stream_retok_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of x266's swap-adoption policy — how tokenizer
     maintenance actually reaches the swap decision on a live feed: the
-    ingestion slice arrives as a 4-file micro-batch stream; each batch
-    appends narrow (word, cnt) count partials (x254's drain — exact
-    integers composing additively, so batching cannot change any
-    total); the drained sum feeds the impact measurement and the
-    integer policy ONCE (`_swap_impact_from` → `_swap_policy_from`,
-    x266's Column expressions byte-for-byte), gated against x266's
-    registered oracle (the anti-drift pattern: x254 proves the drained
-    counts equal the batch trainer's, this proves the DECISION built
-    on them equals the batch policy's).
+    ingestion slice streams through x254's drain
+    (``_drained_word_counts``); the drained sum feeds the impact
+    measurement and the integer policy ONCE (`_swap_impact_from` →
+    `_swap_policy_from`, x266's Column expressions byte-for-byte), gated
+    against x266's registered oracle (the anti-drift pattern: x254
+    proves the drained counts equal the batch trainer's, this proves
+    the DECISION built on them equals the batch policy's).
 
     Scale shapes: per micro-batch work is batch-sized; the drained sum
     is a vocab-sized shuffle; measure + decide run in one vocab-sized
     Arrow task + a 1-row select."""
-    from .tokenizer import BPE_CDC_MOD, _swap_impact_from, _swap_policy_from
+    from .tokenizer import _swap_impact_from, _swap_policy_from
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"src_x270_{sf_tag}")
-    part_dir = os.path.join(GATE_DIR, f"parts_x270_{sf_tag}")
-    ckpt = os.path.join(GATE_DIR, f"ckpt_x270_{sf_tag}")
-    _fresh(src, part_dir, ckpt)
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs.filter(F.col("doc_id") % BPE_CDC_MOD == 3).repartition(
-        4, "doc_id"
-    ).write.parquet(src)
-
-    def handle_batch(bdf: DataFrame, _bid: int) -> None:
-        (
-            bdf.select(
-                F.explode(F.split(F.lower("text"), " ")).alias("word")
-            )
-            .filter(F.col("word") != "")
-            .groupBy("word")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .write.mode("append")
-            .parquet(part_dir)
-        )
-
-    q = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q, 300)
-    drained = (
-        spark.read.parquet(part_dir)
-        .groupBy("word")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    drained = _drained_word_counts(spark, sf_dir, "x270")
     return _swap_policy_from(_swap_impact_from(spark, sf_dir, drained))
 
 
-def _register_x270() -> None:
-    # Anti-drift: gated against x266's batch oracle VERBATIM.  registry()
-    # imports THIS module before tokenizer, so force the x266
-    # registration explicitly rather than relying on the accident that
-    # _x254_sql() above happens to import .tokenizer first (ADVICE r12:
-    # a refactor of x254's oracle builder would otherwise turn every
-    # registry() call into a KeyError here).
-    from . import _REGISTRY, tokenizer  # noqa: F401
-
-    register(
-        QuerySpec(
-            "x270_stream_retok_policy",
-            x270_stream_retok_policy,
-            _REGISTRY["x266_retok_swap_policy"].oracle,
-            "streaming swap policy: the decision over drained count partials == x266's batch decision",
-        )
+register(
+    QuerySpec(
+        "x270_stream_retok_policy",
+        x270_stream_retok_policy,
+        _oracle_of("tokenizer", "x266_retok_swap_policy"),
+        "streaming swap policy: the decision over drained count partials == x266's batch decision",
     )
-
-
-_register_x270()
+)
 
 
 def x275_stream_append_optimize(
@@ -1951,7 +1661,7 @@ def x275_stream_append_optimize(
     """Streaming twin of x273's incremental OPTIMIZE — how a warehouse
     maintenance job actually learns about an append: the ingest's
     partition-commit feed.  The appended dates' events arrive as a
-    4-file micro-batch stream; each batch appends narrow (d, cnt)
+    4-file micro-batch stream; each batch emits narrow (d, cnt)
     partition-manifest partials (date membership composes as a set
     union — the x264 delete-ledger argument applied to appends, so
     batching cannot change which bins the merge touches); the drained
@@ -1977,12 +1687,8 @@ def x275_stream_append_optimize(
     )
 
     sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"src_x275_{sf_tag}")
-    man_dir = os.path.join(GATE_DIR, f"manifest_x275_{sf_tag}")
     dest = os.path.join(GATE_DIR, f"layout_x275_{sf_tag}")
-    ckpt = os.path.join(GATE_DIR, f"ckpt_x275_{sf_tag}")
-    _fresh(src, man_dir, dest, ckpt)
-
+    _fresh(dest)
     spine = _event_date_spine(spark, sf_dir)
     app_dates = {
         r.d
@@ -1993,33 +1699,19 @@ def x275_stream_append_optimize(
         .collect()  # ≤ EVENTS_APPEND_DATES rows — spine metadata
     }
     ev = spark.read.parquet(events_partitioned_path(spark, sf_dir))
-    (
+    appended = (
         ev.withColumn("d", F.col("d").cast("string"))
         .filter(F.col("d").isin(sorted(app_dates)))
         .select("event_id", "d")
-        .repartition(4, "event_id")
-        .write.parquet(src)
     )
-
-    def handle_batch(bdf: DataFrame, _bid: int) -> None:
-        (
-            bdf.groupBy("d")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .write.mode("append")
-            .parquet(man_dir)
-        )
-
-    q = (
-        spark.readStream.schema("event_id bigint, d string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    manifest = _twin(
+        spark,
+        sf_dir,
+        "x275",
+        appended,
+        lambda bdf: bdf.groupBy("d").agg(F.count(F.lit(1)).alias("cnt")),
     )
-    _drain(q, 300)
-    drained = spark.read.parquet(man_dir).select("d").distinct()
+    drained = manifest.select("d").distinct()
     got_dates = {r.d for r in drained.collect()}
     if got_dates != app_dates:  # partial drain must fail loudly
         raise AssertionError(
@@ -2031,197 +1723,89 @@ def x275_stream_append_optimize(
     return _bin_content_proof(spark.read.parquet(dest))
 
 
-def _register_x275() -> None:
-    # Anti-drift: gated against x273's oracle VERBATIM (== x265's
-    # full-rewrite oracle — scale_layout registers before this module).
-    # Explicit producer import: direct `import streaming_gate`
-    # (tests, tooling) must not depend on registry()'s import
-    # order for this lookup to resolve (the ADVICE-r12 x270
-    # lesson applied to every _REGISTRY reuse in this module).
-    from . import _REGISTRY, scale_layout  # noqa: F401
-
-    register(
-        QuerySpec(
-            "x275_stream_append_optimize",
-            x275_stream_append_optimize,
-            _REGISTRY["x273_append_optimize_execute"].oracle,
-            "streaming append OPTIMIZE: the drained partition manifest merges into exactly the full rewrite's layout",
-        )
+register(
+    QuerySpec(
+        "x275_stream_append_optimize",
+        x275_stream_append_optimize,
+        # == x265's full-rewrite oracle
+        _oracle_of("scale_layout", "x273_append_optimize_execute"),
+        "streaming append OPTIMIZE: the drained partition manifest merges into exactly the full rewrite's layout",
     )
+)
 
 
-_register_x275()
+# --- binaryFile twins: files land in a prefix, each micro-batch decodes -------
+# only its own.  Per-file rows are independent, so the union of per-batch
+# outputs equals the one-shot batch read by construction.  The decode
+# twins' body IS their batch entry's ``decode_media_files`` (one
+# mapInPandas stage: no shuffle, per-partition Python, whole-Arrow-batch
+# transfer), so each reuses its batch entry's registered oracle verbatim.
+def _decode_twin(spark: SparkSession, sf_dir: str, tag: str, ext: str) -> DataFrame:
+    from .multimodal import MEDIA_LEGS, decode_media_files
+
+    fixture = MEDIA_LEGS[ext][1](spark, sf_dir)
+    return _twin(
+        spark,
+        sf_dir,
+        tag,
+        (fixture, f"*.{ext}"),
+        lambda bdf: decode_media_files(bdf, ext),
+    ).orderBy("doc_id")
 
 
 def x278_stream_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the binaryFile media ingest (x277): real .ppm
     files arrive as a ``binaryFile`` FILE STREAM (the blob-store
-    continuous-ingest shape — new media objects land in a prefix and
-    each micro-batch decodes only its own files), drained with
-    availableNow over ~4 file-batches into an append sink.  Per-file
-    rows are independent, so the union of per-batch outputs equals the
-    one-shot batch read by construction — x277's REGISTERED oracle is
-    reused verbatim (the x172/x242/x251/x254/x264/x270/x275 anti-drift
-    pattern applied to the media path).  The decode stage is the SAME
-    ``extract_image_stats`` mapInPandas the batch path runs: no
-    shuffle, per-partition Python, whole-Arrow-batch transfer."""
-    import math
-    import shutil as _sh
+    continuous-ingest shape), drained with availableNow over ~4
+    file-batches."""
+    return _decode_twin(spark, sf_dir, "x278", "ppm")
 
-    from ..operators.media import extract_image_stats
-    from .multimodal import media_fixture_dir
 
-    fixture = media_fixture_dir(spark, sf_dir)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"src_x278_{sf_tag}")
-    dest = os.path.join(GATE_DIR, f"out_x278_{sf_tag}")
-    ckpt = os.path.join(GATE_DIR, f"ckpt_x278_{sf_tag}")
-    _fresh(src, dest, ckpt)
-    os.makedirs(src, exist_ok=True)
-    names = sorted(f for f in os.listdir(fixture) if f.endswith(".ppm"))
-    for f in names:
-        _sh.copy(os.path.join(fixture, f), os.path.join(src, f))
-    per_trigger = max(1, math.ceil(len(names) / 4))
-
-    def handle_batch(bdf, _bid: int) -> None:
-        files = bdf.select(
-            F.regexp_extract(F.col("path"), r"img_(\d+)\.ppm$", 1)
-            .cast("long")
-            .alias("doc_id"),
-            F.col("length").alias("src_length"),
-            F.col("content").alias("payload"),
-        )
-        out = extract_image_stats(files).join(
-            files.select("doc_id", "src_length"), "doc_id"
-        )
-        (
-            out.select(
-                "doc_id",
-                "src_length",
-                "n_bytes",
-                "width",
-                "height",
-                "pix_sum",
-                (F.col("src_length") == F.col("n_bytes")).alias(
-                    "length_agrees"
-                ),
-            )
-            .write.mode("append")
-            .parquet(dest)
-        )
-
-    q = (
-        spark.readStream.format("binaryFile")
-        # streaming sources require the schema up front; binaryFile's is
-        # fixed by the format
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .option("pathGlobFilter", "*.ppm")
-        .option("maxFilesPerTrigger", per_trigger)
-        .load(src)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+register(
+    QuerySpec(
+        "x278_stream_media_decode",
+        x278_stream_media_decode,
+        _oracle_of("multimodal", "x277_media_binaryfile_source"),
+        "streaming binaryFile media ingest: drained per-batch decodes union to the batch read",
     )
-    _drain(q, 300)
-    return spark.read.parquet(dest).orderBy("doc_id")
-
-
-def _register_x278() -> None:
-    # Anti-drift: gated against x277's oracle VERBATIM.  registry()
-    # imports this module before multimodal, so force the registration
-    # explicitly (the x270 lesson, ADVICE r12).
-    from . import _REGISTRY, multimodal  # noqa: F401
-
-    register(
-        QuerySpec(
-            "x278_stream_media_decode",
-            x278_stream_media_decode,
-            _REGISTRY["x277_media_binaryfile_source"].oracle,
-            "streaming binaryFile media ingest: drained per-batch decodes union to the batch read",
-        )
-    )
-
-
-_register_x278()
+)
 
 
 def x282_stream_media_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the perceptual-hash extraction (x279): real
     .ppm files arrive as a ``binaryFile`` FILE STREAM and each
     micro-batch decodes + dHashes only its own files with the SAME
-    ``extract_image_dhash`` mapInPandas the batch path runs, appending
-    per-image hash rows.  Per-file rows are independent, so the union
-    of per-batch outputs equals the one-shot batch computation by
-    construction — the oracle is x279's SQL restricted to the fixture's
-    file subset (doc_id ≡ 0 mod MEDIA_FILE_MOD), the x278 anti-drift
-    shape: the streaming hash path can never diverge from the batch
-    op's contract without the gate seeing it."""
-    import math
-    import shutil as _sh
-
+    ``extract_image_dhash`` mapInPandas the batch path runs.  The oracle
+    is x279's SQL restricted to the fixture's file subset (doc_id ≡ 0
+    mod MEDIA_FILE_MOD): the streaming hash path can never diverge from
+    the batch op's contract without the gate seeing it."""
     from ..operators.media import extract_image_dhash
-    from .multimodal import media_fixture_dir
+    from .multimodal import media_files, media_fixture_dir
 
-    fixture = media_fixture_dir(spark, sf_dir)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"src_x282_{sf_tag}")
-    dest = os.path.join(GATE_DIR, f"out_x282_{sf_tag}")
-    ckpt = os.path.join(GATE_DIR, f"ckpt_x282_{sf_tag}")
-    _fresh(src, dest, ckpt)
-    os.makedirs(src, exist_ok=True)
-    names = sorted(f for f in os.listdir(fixture) if f.endswith(".ppm"))
-    for f in names:
-        _sh.copy(os.path.join(fixture, f), os.path.join(src, f))
-    per_trigger = max(1, math.ceil(len(names) / 4))
-
-    def handle_batch(bdf, bid: int) -> None:
-        files = bdf.select(
-            F.regexp_extract(F.col("path"), r"img_(\d+)\.ppm$", 1)
-            .cast("long")
-            .alias("doc_id"),
-            F.col("content").alias("payload"),
-        )
-        _write_batch_idempotent(extract_image_dhash(files), bid, dest)
-
-    q = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .option("pathGlobFilter", "*.ppm")
-        .option("maxFilesPerTrigger", per_trigger)
-        .load(src)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q, 300)
-    return _read_batches(spark, dest).orderBy("doc_id")
+    feed = (media_fixture_dir(spark, sf_dir), "*.ppm")
+    return _twin(
+        spark,
+        sf_dir,
+        "x282",
+        feed,
+        lambda bdf: extract_image_dhash(media_files(bdf, "ppm")),
+    ).orderBy("doc_id")
 
 
-def _register_x282() -> None:
-    # Oracle builder imported from multimodal directly (not a _REGISTRY
-    # lookup) so this registration carries no import-order dependency —
-    # the ADVICE-r12 x270 lesson.
+def _x282_sql() -> str:
     from .multimodal import MEDIA_FILE_MOD, _x279_sql
 
-    register(
-        QuerySpec(
-            "x282_stream_media_dhash",
-            x282_stream_media_dhash,
-            _x279_sql(where=f"WHERE doc_id % {MEDIA_FILE_MOD} = 0"),
-            "streaming binaryFile dHash: drained per-batch hashes union to the batch extraction",
-        )
+    return _x279_sql(where=f"WHERE doc_id % {MEDIA_FILE_MOD} = 0")
+
+
+register(
+    QuerySpec(
+        "x282_stream_media_dhash",
+        x282_stream_media_dhash,
+        _x282_sql(),
+        "streaming binaryFile dHash: drained per-batch hashes union to the batch extraction",
     )
-
-
-_register_x282()
+)
 
 
 def x285_stream_media_dedup_policy(
@@ -2231,7 +1815,7 @@ def x285_stream_media_dedup_policy(
     blob-store maintenance loop actually reaches the decision on a
     live ingest: the corpus arrives as a 4-file micro-batch stream;
     each batch decodes + dHashes ONLY its own images (the same
-    ``extract_image_dhash`` stage) and appends narrow per-hash partials
+    ``extract_image_dhash`` stage) into narrow per-hash partials
     (refs, logical bytes, min doc, min doc's bytes); the drained
     partials compose exactly — counts and byte sums add, and the
     keeper is min-of-mins with its bytes carried by ``min_by`` on the
@@ -2249,39 +1833,18 @@ def x285_stream_media_dedup_policy(
     )
     from .multimodal import _dedup_policy_from
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"src_x285_{sf_tag}")
-    part_dir = os.path.join(GATE_DIR, f"parts_x285_{sf_tag}")
-    ckpt = os.path.join(GATE_DIR, f"ckpt_x285_{sf_tag}")
-    _fresh(src, part_dir, ckpt)
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    docs.repartition(4, "doc_id").write.parquet(src)
-
-    def handle_batch(bdf: DataFrame, bid: int) -> None:
+    def partials(bdf: DataFrame) -> DataFrame:
         h = extract_image_dhash(documents_as_image_media(bdf, fmt="ppm"))
-        partials = h.groupBy("dhash_hex").agg(
+        return h.groupBy("dhash_hex").agg(
             F.count(F.lit(1)).alias("refs"),
             F.sum("n_bytes").alias("logical"),
             F.min("doc_id").alias("min_doc"),
             F.min_by("n_bytes", "doc_id").alias("min_doc_bytes"),
         )
-        # Idempotent per-batch sink: a retried batch must not
-        # double-count refs/bytes and flip the decision (ADVICE r13).
-        _write_batch_idempotent(partials, bid, part_dir)
 
-    q = (
-        spark.readStream.schema("doc_id bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q, 300)
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     drained = (
-        _read_batches(spark, part_dir)
+        _twin(spark, sf_dir, "x285", docs, partials)
         .groupBy("dhash_hex")
         .agg(
             F.sum("refs").alias("refs"),
@@ -2292,109 +1855,22 @@ def x285_stream_media_dedup_policy(
     return _dedup_policy_from(drained)
 
 
-def _register_x285() -> None:
-    # Anti-drift: gated against x283's batch oracle VERBATIM (oracle
-    # builder imported directly from multimodal — no _REGISTRY
-    # import-order dependency, the ADVICE-r12 x270 lesson).
-    from .multimodal import _x283_sql
-
-    register(
-        QuerySpec(
-            "x285_stream_media_dedup_policy",
-            x285_stream_media_dedup_policy,
-            _x283_sql(),
-            "streaming store-dedup policy: drained per-hash partials reach exactly the batch decision",
-        )
+register(
+    QuerySpec(
+        "x285_stream_media_dedup_policy",
+        x285_stream_media_dedup_policy,
+        _oracle_of("multimodal", "x283_media_dedup_policy"),
+        "streaming store-dedup policy: drained per-hash partials reach exactly the batch decision",
     )
-
-
-_register_x285()
+)
 
 
 def x292_stream_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the binaryFile audio ingest (x290): real .wav
     files arrive as a ``binaryFile`` FILE STREAM, each micro-batch
-    chunk-walks + stats only its own clips with the SAME
-    ``extract_audio_stats`` mapInPandas the batch path runs, appending
-    per-clip rows.  Per-file independence ⇒ union == the one-shot
-    batch read, so x290's REGISTERED oracle is reused verbatim (the
-    x278 anti-drift shape on the audio leg)."""
-    import math
-    import shutil as _sh
-
-    from ..operators.media import extract_audio_stats
-    from .multimodal import audio_fixture_dir
-
-    fixture = audio_fixture_dir(spark, sf_dir)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"src_x292_{sf_tag}")
-    dest = os.path.join(GATE_DIR, f"out_x292_{sf_tag}")
-    ckpt = os.path.join(GATE_DIR, f"ckpt_x292_{sf_tag}")
-    _fresh(src, dest, ckpt)
-    os.makedirs(src, exist_ok=True)
-    names = sorted(f for f in os.listdir(fixture) if f.endswith(".wav"))
-    for f in names:
-        _sh.copy(os.path.join(fixture, f), os.path.join(src, f))
-    per_trigger = max(1, math.ceil(len(names) / 4))
-
-    def handle_batch(bdf, bid: int) -> None:
-        files = bdf.select(
-            F.regexp_extract(F.col("path"), r"clip_(\d+)\.wav$", 1)
-            .cast("long")
-            .alias("doc_id"),
-            F.col("length").alias("src_length"),
-            F.col("content").alias("payload"),
-        )
-        out = extract_audio_stats(files).join(
-            files.select("doc_id", "src_length"), "doc_id"
-        )
-        _write_batch_idempotent(
-            out.select(
-                "doc_id",
-                "src_length",
-                "n_bytes",
-                "sample_rate",
-                "n_samples",
-                "sum_abs",
-                (F.col("src_length") == F.col("n_bytes")).alias(
-                    "length_agrees"
-                ),
-            ),
-            bid,
-            dest,
-        )
-
-    q = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .option("pathGlobFilter", "*.wav")
-        .option("maxFilesPerTrigger", per_trigger)
-        .load(src)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q, 300)
-    return _read_batches(spark, dest).orderBy("doc_id")
-
-
-def _register_x292() -> None:
-    # Oracle builder imported from multimodal directly — no
-    # import-order dependency (the ADVICE-r12 x270 lesson).
-    from .multimodal import _x290_sql
-
-    register(
-        QuerySpec(
-            "x292_stream_audio_decode",
-            x292_stream_audio_decode,
-            _x290_sql(),
-            "streaming binaryFile audio ingest: drained per-batch chunk-walk decodes union to the batch read",
-        )
-    )
+    chunk-walks + stats only its own clips (the x278 shape on the audio
+    leg)."""
+    return _decode_twin(spark, sf_dir, "x292", "wav")
 
 
 def x304_stream_video_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2402,307 +1878,69 @@ def x304_stream_video_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the modality-symmetry gap (image had x278/x282, audio x292, video
     none; VERDICT r13 ask #4): real .y4m files arrive as a
     ``binaryFile`` FILE STREAM, each micro-batch tag-parses +
-    frame-walks only its own clips with the SAME ``extract_video_stats``
-    mapInPandas the batch path runs, writing per-clip rows through the
-    idempotent ``bid=N`` sink.  Per-file independence ⇒ drained union
-    == the one-shot batch read, so x296's oracle is reused verbatim."""
-    import math
-    import shutil as _sh
+    frame-walks only its own clips."""
+    return _decode_twin(spark, sf_dir, "x304", "y4m")
 
-    from ..operators.media import extract_video_stats
-    from .multimodal import video_fixture_dir
 
-    fixture = video_fixture_dir(spark, sf_dir)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"src_x304_{sf_tag}")
-    dest = os.path.join(GATE_DIR, f"out_x304_{sf_tag}")
-    ckpt = os.path.join(GATE_DIR, f"ckpt_x304_{sf_tag}")
-    _fresh(src, dest, ckpt)
-    os.makedirs(src, exist_ok=True)
-    names = sorted(f for f in os.listdir(fixture) if f.endswith(".y4m"))
-    for f in names:
-        _sh.copy(os.path.join(fixture, f), os.path.join(src, f))
-    per_trigger = max(1, math.ceil(len(names) / 4))
-
-    def handle_batch(bdf, bid: int) -> None:
-        files = bdf.select(
-            F.regexp_extract(F.col("path"), r"vid_(\d+)\.y4m$", 1)
-            .cast("long")
-            .alias("doc_id"),
-            F.col("length").alias("src_length"),
-            F.col("content").alias("payload"),
-        )
-        out = extract_video_stats(files).join(
-            files.select("doc_id", "src_length"), "doc_id"
-        )
-        _write_batch_idempotent(
-            out.select(
-                "doc_id",
-                "src_length",
-                "n_bytes",
-                "width",
-                "height",
-                "n_frames",
-                "n_cuts",
-                (F.col("src_length") == F.col("n_bytes")).alias(
-                    "length_agrees"
-                ),
-            ),
-            bid,
-            dest,
-        )
-
-    q = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .option("pathGlobFilter", "*.y4m")
-        .option("maxFilesPerTrigger", per_trigger)
-        .load(src)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+register(
+    QuerySpec(
+        "x304_stream_video_decode",
+        x304_stream_video_decode,
+        _oracle_of("multimodal", "x296_video_binaryfile_source"),
+        "streaming binaryFile video ingest: drained per-batch frame-walk decodes union to the batch read",
     )
-    _drain(q, 300)
-    return _read_batches(spark, dest).orderBy("doc_id")
-
-
-def _register_x304() -> None:
-    # Oracle builder imported from multimodal directly — no
-    # import-order dependency (the ADVICE-r12 x270 lesson).
-    from .multimodal import _x296_sql
-
-    register(
-        QuerySpec(
-            "x304_stream_video_decode",
-            x304_stream_video_decode,
-            _x296_sql(),
-            "streaming binaryFile video ingest: drained per-batch frame-walk decodes union to the batch read",
-        )
-    )
-
-
-_register_x304()
+)
 
 
 def x307_stream_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the PNG binaryFile ingest (x306): real .png
     files arrive as a ``binaryFile`` FILE STREAM, each micro-batch
-    inflates + unfilters only its own files with the SAME
-    ``extract_image_stats`` mapInPandas the batch path runs, writing
-    per-image rows through the idempotent ``bid=N`` sink.  Per-file
-    independence ⇒ drained union == the one-shot batch read, so x306's
-    oracle is reused verbatim (the x278 anti-drift shape on the
+    inflates + unfilters only its own files (the x278 shape on the
     compressed-format leg)."""
-    import math
-    import shutil as _sh
-
-    from ..operators.media import extract_image_stats
-    from .multimodal import png_fixture_dir
-
-    fixture = png_fixture_dir(spark, sf_dir)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"src_x307_{sf_tag}")
-    dest = os.path.join(GATE_DIR, f"out_x307_{sf_tag}")
-    ckpt = os.path.join(GATE_DIR, f"ckpt_x307_{sf_tag}")
-    _fresh(src, dest, ckpt)
-    os.makedirs(src, exist_ok=True)
-    names = sorted(f for f in os.listdir(fixture) if f.endswith(".png"))
-    for f in names:
-        _sh.copy(os.path.join(fixture, f), os.path.join(src, f))
-    per_trigger = max(1, math.ceil(len(names) / 4))
-
-    def handle_batch(bdf, bid: int) -> None:
-        files = bdf.select(
-            F.regexp_extract(F.col("path"), r"img_(\d+)\.png$", 1)
-            .cast("long")
-            .alias("doc_id"),
-            F.col("length").alias("src_length"),
-            F.col("content").alias("payload"),
-        )
-        out = extract_image_stats(files).join(
-            files.select("doc_id", "src_length"), "doc_id"
-        )
-        _write_batch_idempotent(
-            out.select(
-                "doc_id",
-                "width",
-                "height",
-                "pix_sum",
-                (F.col("src_length") == F.col("n_bytes")).alias(
-                    "length_agrees"
-                ),
-            ),
-            bid,
-            dest,
-        )
-
-    q = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .option("pathGlobFilter", "*.png")
-        .option("maxFilesPerTrigger", per_trigger)
-        .load(src)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q, 300)
-    return _read_batches(spark, dest).orderBy("doc_id")
+    return _decode_twin(spark, sf_dir, "x307", "png")
 
 
 def x311_stream_tar_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the tar shard re-read (x305): .tar shards land
     as a ``binaryFile`` FILE STREAM (the arrival shape of a WebDataset
-    drop-off directory) and each micro-batch parses ONLY its own
-    shards — a whole shard always sits in one binary row, so the
-    per-shard rollup (member count, byte sum, doc range, identity
-    check) is computable batch-locally and the drained union equals
-    the one-shot batch read; x305's oracle is reused verbatim.
-    Idempotent ``bid=N`` sink."""
-    import math
-    import shutil as _sh
+    drop-off directory) over 2 micro-batches and each micro-batch runs
+    x305's ``tar_shard_stats`` on ONLY its own shards — a whole shard
+    always sits in one binary row, so the per-shard rollup is
+    batch-local and the drained union equals the one-shot batch read;
+    x305's oracle is reused verbatim."""
+    from .multimodal import tar_shard_dir, tar_shard_stats
 
-    from ..operators.media import make_image
-    from .multimodal import tar_shard_dir
-
-    fixture = tar_shard_dir(spark, sf_dir)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"src_x311_{sf_tag}")
-    dest = os.path.join(GATE_DIR, f"out_x311_{sf_tag}")
-    ckpt = os.path.join(GATE_DIR, f"ckpt_x311_{sf_tag}")
-    _fresh(src, dest, ckpt)
-    os.makedirs(src, exist_ok=True)
-    names = sorted(f for f in os.listdir(fixture) if f.endswith(".tar"))
-    for f in names:
-        _sh.copy(os.path.join(fixture, f), os.path.join(src, f))
-    per_trigger = max(1, math.ceil(len(names) / 2))
-
-    member_schema = T.StructType(
-        [
-            T.StructField("shard_id", T.LongType()),
-            T.StructField("n_members", T.LongType()),
-            T.StructField("member_bytes", T.LongType()),
-            T.StructField("first_doc", T.LongType()),
-            T.StructField("last_doc", T.LongType()),
-            T.StructField("all_match", T.BooleanType()),
-        ]
-    )
-
-    def parse_tars(it):
-        import io
-        import re
-        import tarfile
-
-        import pandas as pd
-
-        for pdf in it:
-            rows: dict[str, list] = {
-                k: [] for k in member_schema.fieldNames()
-            }
-            for sid, content in zip(pdf["shard_id"], pdf["content"]):
-                docs, sizes, match = [], [], True
-                with tarfile.open(
-                    fileobj=io.BytesIO(bytes(content)), mode="r:"
-                ) as tf:
-                    for m in tf.getmembers():
-                        doc_id = int(
-                            re.fullmatch(
-                                r"img_(\d+)\.ppm", m.name
-                            ).group(1)
-                        )
-                        payload = tf.extractfile(m).read()
-                        docs.append(doc_id)
-                        sizes.append(len(payload))
-                        match = match and payload == make_image(
-                            doc_id, "ppm"
-                        )
-                rows["shard_id"].append(int(sid))
-                rows["n_members"].append(len(docs))
-                rows["member_bytes"].append(sum(sizes))
-                rows["first_doc"].append(min(docs))
-                rows["last_doc"].append(max(docs))
-                rows["all_match"].append(match)
-            yield pd.DataFrame(
-                {
-                    k: pd.Series(
-                        rows[k],
-                        dtype="bool" if k == "all_match" else "int64",
-                    )
-                    for k in member_schema.fieldNames()
-                }
-            )
-
-    def handle_batch(bdf, bid: int) -> None:
-        shards = bdf.select(
-            F.regexp_extract(F.col("path"), r"shard_(\d+)\.tar$", 1)
-            .cast("long")
-            .alias("shard_id"),
-            F.col("content"),
-        )
-        _write_batch_idempotent(
-            shards.mapInPandas(parse_tars, member_schema), bid, dest
-        )
-
-    q = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .option("pathGlobFilter", "*.tar")
-        .option("maxFilesPerTrigger", per_trigger)
-        .load(src)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q, 300)
-    return _read_batches(spark, dest).orderBy("shard_id")
-
-
-def _register_x311() -> None:
-    # Oracle builder imported from multimodal directly — no
-    # import-order dependency (the ADVICE-r12 x270 lesson).
-    from .multimodal import _x305_sql
-
-    register(
-        QuerySpec(
-            "x311_stream_tar_ingest",
-            x311_stream_tar_ingest,
-            _x305_sql(),
-            "streaming tar shard ingest: per-batch shard parses union to the batch round-trip read",
-        )
+    feed = (tar_shard_dir(spark, sf_dir), "*.tar")
+    return _twin(spark, sf_dir, "x311", feed, tar_shard_stats, n_batches=2).orderBy(
+        "shard_id"
     )
 
 
-_register_x311()
-
-
-def _register_x307() -> None:
-    # Oracle builder imported from multimodal directly — no
-    # import-order dependency (the ADVICE-r12 x270 lesson).
-    from .multimodal import _x306_sql
-
-    register(
-        QuerySpec(
-            "x307_stream_png_decode",
-            x307_stream_png_decode,
-            _x306_sql(),
-            "streaming binaryFile PNG ingest: drained per-batch inflate+unfilter decodes union to the batch read",
-        )
+register(
+    QuerySpec(
+        "x311_stream_tar_ingest",
+        x311_stream_tar_ingest,
+        _oracle_of("multimodal", "x305_tar_shard_roundtrip"),
+        "streaming tar shard ingest: per-batch shard parses union to the batch round-trip read",
     )
+)
 
 
-_register_x307()
+register(
+    QuerySpec(
+        "x307_stream_png_decode",
+        x307_stream_png_decode,
+        _oracle_of("multimodal", "x306_png_binaryfile_source"),
+        "streaming binaryFile PNG ingest: drained per-batch inflate+unfilter decodes union to the batch read",
+    )
+)
 
 
-_register_x292()
+register(
+    QuerySpec(
+        "x292_stream_audio_decode",
+        x292_stream_audio_decode,
+        _oracle_of("multimodal", "x290_audio_binaryfile_source"),
+        "streaming binaryFile audio ingest: drained per-batch chunk-walk decodes union to the batch read",
+    )
+)

@@ -117,37 +117,6 @@ def test_fixture_formats_pixel_identical():
         assert (pw, ph) == image_dims(d)
 
 
-def test_x277_fixture_dir_cache_keying(spark, sf_dir):
-    """The binaryFile fixture dir is keyed on constants + documents
-    fingerprint (GATE_DIR invariant) and contains one real decodable
-    .ppm per doc_id ≡ 0 mod MEDIA_FILE_MOD."""
-    import os
-
-    from json_to_parquet_spark.queries.multimodal import (
-        MEDIA_FILE_MOD,
-        media_fixture_dir,
-    )
-    from json_to_parquet_spark.queries.similarity import _data_fingerprint
-    from json_to_parquet_spark.sources.catalog import load_table
-
-    d1 = media_fixture_dir(spark, sf_dir)
-    assert _data_fingerprint(sf_dir, "documents") in os.path.basename(d1)
-    n_docs = (
-        load_table(spark, sf_dir, "documents")
-        .filter(f"doc_id % {MEDIA_FILE_MOD} = 0")
-        .count()
-    )
-    files = [f for f in os.listdir(d1) if f.endswith(".ppm")]
-    assert len(files) == n_docs
-    doc_id = int(sorted(files)[0][4:-4])
-    w, h, c, rgb = decode_image_pixels(
-        open(os.path.join(d1, sorted(files)[0]), "rb").read()
-    )
-    assert (w, h) == image_dims(doc_id) and rgb == image_rgb(doc_id, w, h)
-    # write-once: second call returns the same path without rebuilding
-    assert media_fixture_dir(spark, sf_dir) == d1
-
-
 # --- round-16 additions: the perceptual dHash family (x279-x282) -------------
 
 

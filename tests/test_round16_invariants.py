@@ -120,21 +120,6 @@ def test_x284_dedup_branch_matches_x281(spark, sf_dir):
     )
 
 
-def test_x285_streaming_decision_equals_batch(spark, sf_dir):
-    """The drained per-hash partials must compose to exactly the batch
-    policy row — decision, basis points, and every byte count."""
-    from json_to_parquet_spark.queries.multimodal import (
-        x283_media_dedup_policy,
-    )
-    from json_to_parquet_spark.queries.streaming_gate import (
-        x285_stream_media_dedup_policy,
-    )
-
-    got = x285_stream_media_dedup_policy(spark, sf_dir).collect()
-    want = x283_media_dedup_policy(spark, sf_dir).collect()
-    assert [r.asDict() for r in got] == [r.asDict() for r in want]
-
-
 def test_x286_coverage_complete_and_pairs_bounded(spark, sf_dir):
     """On the gate corpus the audit must show full DOC coverage (every
     doc with a true near-dup linked to ≥ 1 candidate partner) while

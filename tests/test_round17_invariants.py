@@ -1,17 +1,13 @@
 """Round-17 invariants: ADVICE-r13 fixes, each guarded so a regression
-fails loudly — (1) ``decode_wav`` rejects a chunk whose declared size
-overruns the payload instead of silently decoding fewer samples, and
-(2) the ``foreachBatch`` parquet sinks are idempotent under micro-batch
-retry (a replayed batch overwrites its own ``bid=N`` directory rather
-than appending a duplicate that could flip a drained policy decision).
-The third fix, x293's loud non-convergence, now lives with the shared
-routine in ``tests/test_connected_components.py``."""
+fails loudly — ``decode_wav`` rejects a chunk whose declared size
+overruns the payload instead of silently decoding fewer samples.  The
+other two fixes live with their subjects: the idempotent ``foreachBatch``
+sink in ``tests/test_streaming_twins.py``, x293's loud non-convergence
+with the shared routine in ``tests/test_connected_components.py``."""
 
 from __future__ import annotations
 
 import pytest
-
-from pyspark.sql import functions as F
 
 
 def test_decode_wav_rejects_truncated_data_chunk():
@@ -181,36 +177,6 @@ def test_banding_pigeonhole_laws():
         )
 
 
-def test_tar_store_rebuilds_byte_identical(spark, sf_dir):
-    """Wiping the tar shard store and rebuilding must reproduce every
-    shard file byte-for-byte (deterministic packing, member order, and
-    tar metadata) — the store-determinism guarantee bare_check makes,
-    pinned in-suite at fixture scale."""
-    import hashlib
-    import os
-    import shutil
-
-    from json_to_parquet_spark.queries.multimodal import tar_shard_dir
-
-    dest = tar_shard_dir(spark, sf_dir)
-
-    def digest(d: str) -> dict[str, str]:
-        return {
-            f: hashlib.sha256(
-                open(os.path.join(d, f), "rb").read()
-            ).hexdigest()
-            for f in sorted(os.listdir(d))
-            if f.endswith(".tar")
-        }
-
-    first = digest(dest)
-    assert first, "no shards written"
-    shutil.rmtree(dest)
-    dest2 = tar_shard_dir(spark, sf_dir)
-    assert dest2 == dest
-    assert digest(dest2) == first
-
-
 def test_png_byte_length_not_law_shaped():
     """Documents why x306 checks length_agrees instead of a predicted
     byte count: two same-geometry images compress to different DEFLATE
@@ -226,23 +192,3 @@ def test_png_byte_length_not_law_shaped():
     flat = encode_png(w, h, bytes(3 * w * h))  # constant image
     patt = make_image(3, "png")
     assert len(flat) != len(patt)
-
-
-def test_foreachbatch_sink_is_idempotent_under_retry(spark, tmp_path):
-    """Replaying a micro-batch (same bid, same rows — the Structured
-    Streaming retry contract) must leave the drained union unchanged;
-    a genuinely new bid must append."""
-    from json_to_parquet_spark.queries.streaming_gate import (
-        _read_batches,
-        _write_batch_idempotent,
-    )
-
-    dest = str(tmp_path / "sink")
-    b0 = spark.range(5).select(F.col("id").alias("doc_id"))
-    b1 = spark.range(5, 8).select(F.col("id").alias("doc_id"))
-    _write_batch_idempotent(b0, 0, dest)
-    _write_batch_idempotent(b0, 0, dest)  # retry of batch 0
-    _write_batch_idempotent(b1, 1, dest)
-    out = _read_batches(spark, dest)
-    assert out.columns == ["doc_id"]
-    assert sorted(r.doc_id for r in out.collect()) == list(range(8))
