@@ -21,14 +21,12 @@ import datetime
 import gzip
 import json
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import QuerySpec, register
-
-GATE_DIR = os.path.join(tempfile.gettempdir(), "spark_graft_gate")
+from .store import GATE_DIR
 # v2: variable-length item lists (incl. empty), list<struct> nested inside
 # a struct, and null _dt values.  The path is versioned because the
 # fixture is generated lazily and cached — an old cached v1 file must

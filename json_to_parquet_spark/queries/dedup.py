@@ -1015,8 +1015,8 @@ def lsh_probe(
 
 def x111_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base_sig = lsh_signatures(docs).persist()
-    batch_sig = lsh_signatures(inc_batch_docs(docs)).persist()
+    base_sig = lsh_signatures(docs)
+    batch_sig = lsh_signatures(inc_batch_docs(docs))
     base_idx = lsh_buckets(base_sig)  # the pre-built index
     return lsh_probe(batch_sig, base_sig, base_idx).orderBy("batch_id", "base_id")
 

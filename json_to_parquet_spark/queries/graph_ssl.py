@@ -21,6 +21,8 @@ from ..sources.catalog import load_table
 from . import QuerySpec, register
 from .retrieval import _SQL_COS
 from .similarity import (
+    IVF_K0_MIN,
+    IVF_N_CENTROIDS,
     SQL_IVF_NLIST,
     _SQL_SUP_VECSUP,
     _sql_asn,
@@ -33,6 +35,7 @@ from .similarity import (
     l2norm,
     route_two_level,
 )
+from .store import build_once, store_token
 
 # Capacity-capped neighbour generation (x233's ring trick, symmetric
 # variant): every vector's candidates are the members of its ring
@@ -207,27 +210,14 @@ def knn_graph_path(spark: SparkSession, sf_dir: str) -> str:
     persisted edges are bit-identical to what the SQL twins recompute
     inline.  Path embeds every build constant + the source fingerprint
     (the GATE_DIR cache-keying invariant)."""
-    import hashlib
-    import os
 
-    from .convert_gate import GATE_DIR
-    from .similarity import IVF_K0_MIN, IVF_N_CENTROIDS, _data_fingerprint
+    def build(d: str) -> None:
+        _topk_edges(_knn_scored(spark, sf_dir)).write.mode("overwrite").parquet(d)
 
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    sig = repr(
-        ("knng-v1", KNNG_CAP, KNNG_OV, KNNG_K, IVF_N_CENTROIDS, IVF_K0_MIN)
+    tok = store_token(
+        "knng-v1", KNNG_CAP, KNNG_OV, KNNG_K, IVF_N_CENTROIDS, IVF_K0_MIN
     )
-    token = hashlib.sha256(sig.encode()).hexdigest()[:8]
-    dest = os.path.join(
-        GATE_DIR, f"knng_{tag}_{token}_d{_data_fingerprint(sf_dir)}"
-    )
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
-        (
-            _topk_edges(_knn_scored(spark, sf_dir))
-            .write.mode("overwrite")
-            .parquet(dest)
-        )
-    return dest
+    return build_once(sf_dir, "knng", f"_{tok}", build)
 
 
 def knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1110,34 +1100,14 @@ def base_graph_paths(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     serving_occupancy_path economics).  Path embeds every build
     constant + the source fingerprint (the GATE_DIR cache-keying
     invariant)."""
-    import hashlib
     import os
 
-    from .convert_gate import GATE_DIR
-    from .similarity import IVF_K0_MIN, IVF_N_CENTROIDS, _data_fingerprint
-
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    sig = repr(
-        (
-            "gseg-v1", KNNG_CAP, KNNG_OV, KNNG_K, GADD_MOD,
-            IVF_N_CENTROIDS, IVF_K0_MIN,
-        )
-    )
-    token = hashlib.sha256(sig.encode()).hexdigest()[:8]
-    root = os.path.join(
-        GATE_DIR, f"gseg_{tag}_{token}_d{_data_fingerprint(sf_dir)}"
-    )
-    edges_p = os.path.join(root, "edges")
-    placed_p = os.path.join(root, "placed")
-    if not (
-        os.path.exists(os.path.join(edges_p, "_SUCCESS"))
-        and os.path.exists(os.path.join(placed_p, "_SUCCESS"))
-    ):
+    def build(d: str) -> None:
         emb, base, _adds = _gadd_frames(spark, sf_dir)
         placed = _ring_place(
             _route_with_dist(spark, sf_dir, base), keep_d=True
         ).localCheckpoint()
-        placed.write.mode("overwrite").parquet(placed_p)
+        placed.write.mode("overwrite").parquet(os.path.join(d, "placed"))
         scored_half = _score_pairs(
             _ring_half_pairs(placed), emb
         ).localCheckpoint()
@@ -1155,9 +1125,15 @@ def base_graph_paths(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
                 "src_id",
             )
             .write.mode("overwrite")
-            .parquet(edges_p)
+            .parquet(os.path.join(d, "edges"))
         )
-    return edges_p, placed_p
+
+    tok = store_token(
+        "gseg-v1", KNNG_CAP, KNNG_OV, KNNG_K, GADD_MOD,
+        IVF_N_CENTROIDS, IVF_K0_MIN,
+    )
+    root = build_once(sf_dir, "gseg", f"_{tok}", build)
+    return os.path.join(root, "edges"), os.path.join(root, "placed")
 
 
 def x246_graph_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2148,30 +2124,15 @@ def _knn2_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
 def knn2_graph_path(spark: SparkSession, sf_dir: str) -> str:
     """Build-once store for the multi-probe graph (knn_graph_path's
     economics and cache-keying discipline)."""
-    import hashlib
-    import os
 
-    from .convert_gate import GATE_DIR
-    from .similarity import IVF_K0_MIN, IVF_N_CENTROIDS, _data_fingerprint
+    def build(d: str) -> None:
+        _topk_edges(_knn2_scored(spark, sf_dir)).write.mode("overwrite").parquet(d)
 
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    sig = repr(
-        (
-            "knng2-v1", KNNG_CAP, KNNG_OV, KNNG_K, KNNG_NPLACE2,
-            IVF_N_CENTROIDS, IVF_K0_MIN,
-        )
+    tok = store_token(
+        "knng2-v1", KNNG_CAP, KNNG_OV, KNNG_K, KNNG_NPLACE2,
+        IVF_N_CENTROIDS, IVF_K0_MIN,
     )
-    token = hashlib.sha256(sig.encode()).hexdigest()[:8]
-    dest = os.path.join(
-        GATE_DIR, f"knng2_{tag}_{token}_d{_data_fingerprint(sf_dir)}"
-    )
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
-        (
-            _topk_edges(_knn2_scored(spark, sf_dir))
-            .write.mode("overwrite")
-            .parquet(dest)
-        )
-    return dest
+    return build_once(sf_dir, "knng2", f"_{tok}", build)
 
 
 def x249_multiprobe_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2344,24 +2305,8 @@ def base_lp_path(spark: SparkSession, sf_dir: str) -> str:
     are bit-identical to the oracle's inline recomputation.  Path
     embeds every constant the state depends on + the source
     fingerprint (the GATE_DIR cache-keying invariant)."""
-    import hashlib
-    import os
 
-    from .convert_gate import GATE_DIR
-    from .similarity import IVF_K0_MIN, IVF_N_CENTROIDS, _data_fingerprint
-
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    sig = repr(
-        (
-            "glp-v1", KNNG_CAP, KNNG_OV, KNNG_K, GADD_MOD,
-            LP_SEED_MOD, LP_ROUNDS, IVF_N_CENTROIDS, IVF_K0_MIN,
-        )
-    )
-    token = hashlib.sha256(sig.encode()).hexdigest()[:8]
-    dest = os.path.join(
-        GATE_DIR, f"glp_{tag}_{token}_d{_data_fingerprint(sf_dir)}"
-    )
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
+    def build(d: str) -> None:
         lab_emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", F.col("label").cast("long").alias("label")
         )
@@ -2375,10 +2320,13 @@ def base_lp_path(spark: SparkSession, sf_dir: str) -> str:
         base_seeds = base_l.filter(F.col("vec_id") % LP_SEED_MOD == 0).select(
             "vec_id", F.col("label").alias("lab"), F.lit("seed").alias("via")
         )
-        _frozen_lp(base_edges, base_seeds).write.mode("overwrite").parquet(
-            dest
-        )
-    return dest
+        _frozen_lp(base_edges, base_seeds).write.mode("overwrite").parquet(d)
+
+    tok = store_token(
+        "glp-v1", KNNG_CAP, KNNG_OV, KNNG_K, GADD_MOD,
+        LP_SEED_MOD, LP_ROUNDS, IVF_N_CENTROIDS, IVF_K0_MIN,
+    )
+    return build_once(sf_dir, "glp", f"_{tok}", build)
 
 
 def _label_cdc_stats(

@@ -56,6 +56,7 @@ from ..operators.media import (
 )
 from ..sources.catalog import load_table
 from . import QuerySpec, register
+from .store import build_once, store_token
 
 
 def x14_multimodal_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -709,29 +710,16 @@ def _file_fixture(
     media files EXIST (they are the corpus being ingested) — generating
     them is harness work, not engine work; the engine path under test
     starts at ``spark.read.format("binaryFile")``."""
-    import hashlib
     import os
 
-    from .convert_gate import GATE_DIR
-    from .similarity import _data_fingerprint
-
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    sig = repr((f"{kind}files-v1", MEDIA_FILE_MOD, *law))
-    token = hashlib.sha256(sig.encode()).hexdigest()[:8]
-    dest = os.path.join(
-        GATE_DIR,
-        f"{kind}_{tag}_{token}_d{_data_fingerprint(sf_dir, 'documents')}",
-    )
-    marker = os.path.join(dest, "_SUCCESS")
-    if not os.path.exists(marker):
-        os.makedirs(dest, exist_ok=True)
+    def build(d: str) -> None:
         docs = load_table(spark, sf_dir, "documents").select("doc_id")
         for r in docs.filter(F.col("doc_id") % MEDIA_FILE_MOD == 0).collect():
-            with open(os.path.join(dest, name_fmt.format(r.doc_id)), "wb") as f:
+            with open(os.path.join(d, name_fmt.format(r.doc_id)), "wb") as f:
                 f.write(make(int(r.doc_id)))
-        with open(marker, "w"):
-            pass
-    return dest
+
+    tok = store_token(f"{kind}files-v1", MEDIA_FILE_MOD, *law)
+    return build_once(sf_dir, kind, f"_{tok}", build, "documents")
 
 
 _IMG_LAW = (IMG_W_MOD, IMG_W_MIN, IMG_H_MOD, IMG_H_MIN, IMG_PIX_MOD)
@@ -3111,10 +3099,10 @@ def tar_shard_dir(spark: SparkSession, sf_dir: str) -> str:
     prefix sum (range partition → partition-local window → tiny offset
     broadcast — never a global single-partition window); each shard is
     then written by ONE applyInPandas task: members in doc order,
-    deterministic tar metadata (mtime 0, uid/gid 0, mode 0644, USTAR),
-    atomic rename.  At 100 TB this is the production shard-writer
-    shape: one task per output shard, bytes never on the driver."""
-    import hashlib
+    deterministic tar metadata (mtime 0, uid/gid 0, mode 0644, USTAR);
+    ``build_once`` publishes the shard set whole.  At 100 TB this is
+    the production shard-writer shape: one task per output shard, bytes
+    never on the driver."""
     import os
 
     from pyspark.sql import Window
@@ -3129,111 +3117,87 @@ def tar_shard_dir(spark: SparkSession, sf_dir: str) -> str:
         documents_as_image_media,
     )
     from ..sources.catalog import load_table as _lt
-    from .convert_gate import GATE_DIR
-    from .similarity import _data_fingerprint
 
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    sig = repr(
-        (
-            "tarshards-v1",
-            MEDIA_FILE_MOD,
-            TAR_SHARD_BYTES,
-            IMG_W_MOD,
-            IMG_W_MIN,
-            IMG_H_MOD,
-            IMG_H_MIN,
-            IMG_PIX_MOD,
+    def build(d: str) -> None:
+        docs = (
+            _lt(spark, sf_dir, "documents")
+            .select("doc_id")
+            .filter(F.col("doc_id") % MEDIA_FILE_MOD == 0)
         )
-    )
-    token = hashlib.sha256(sig.encode()).hexdigest()[:8]
-    dest = os.path.join(
-        GATE_DIR,
-        f"tarshards_{tag}_{token}_d{_data_fingerprint(sf_dir, 'documents')}",
-    )
-    marker = os.path.join(dest, "_SUCCESS")
-    if os.path.exists(marker):
-        return dest
-    os.makedirs(dest, exist_ok=True)
-
-    docs = (
-        _lt(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % MEDIA_FILE_MOD == 0)
-    )
-    media = documents_as_image_media(docs, fmt="ppm").withColumn(
-        "n_bytes", F.octet_length("payload").cast("long")
-    )
-    # x117's two-phase prefix sum → shard assignment.
-    parts = media.repartitionByRange(F.col("doc_id")).withColumn(
-        "pid", F.spark_partition_id()
-    )
-    wp = (
-        Window.partitionBy("pid")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = parts.withColumn("local_cum", F.sum("n_bytes").over(wp))
-    totals = local.groupBy("pid").agg(F.sum("n_bytes").alias("tot"))
-    wo = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "pid", F.coalesce(F.sum("tot").over(wo), F.lit(0)).alias("offset")
-    )
-    assigned = local.join(F.broadcast(offsets), "pid").select(
-        "doc_id",
-        "payload",
-        F.floor(
-            (F.col("local_cum") + F.col("offset") - 1) / TAR_SHARD_BYTES
+        media = documents_as_image_media(docs, fmt="ppm").withColumn(
+            "n_bytes", F.octet_length("payload").cast("long")
         )
-        .cast("long")
-        .alias("shard_id"),
+        # x117's two-phase prefix sum → shard assignment.
+        parts = media.repartitionByRange(F.col("doc_id")).withColumn(
+            "pid", F.spark_partition_id()
+        )
+        wp = (
+            Window.partitionBy("pid")
+            .orderBy("doc_id")
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        local = parts.withColumn("local_cum", F.sum("n_bytes").over(wp))
+        totals = local.groupBy("pid").agg(F.sum("n_bytes").alias("tot"))
+        wo = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
+        offsets = totals.select(
+            "pid", F.coalesce(F.sum("tot").over(wo), F.lit(0)).alias("offset")
+        )
+        assigned = local.join(F.broadcast(offsets), "pid").select(
+            "doc_id",
+            "payload",
+            F.floor(
+                (F.col("local_cum") + F.col("offset") - 1) / TAR_SHARD_BYTES
+            )
+            .cast("long")
+            .alias("shard_id"),
+        )
+
+        out_schema = T.StructType(
+            [
+                T.StructField("shard_id", T.LongType()),
+                T.StructField("n_members", T.LongType()),
+            ]
+        )
+
+        def write_shard(pdf):
+            import io
+            import tarfile
+
+            import pandas as pd
+
+            pdf = pdf.sort_values("doc_id")
+            sid = int(pdf["shard_id"].iloc[0])
+            buf = io.BytesIO()
+            with tarfile.open(
+                fileobj=buf, mode="w", format=tarfile.USTAR_FORMAT
+            ) as tf:
+                for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                    b = bytes(payload)
+                    info = tarfile.TarInfo(name=f"img_{int(doc_id):08d}.ppm")
+                    info.size = len(b)
+                    info.mtime = 0
+                    info.uid = info.gid = 0
+                    info.mode = 0o644
+                    tf.addfile(info, io.BytesIO(b))
+            with open(os.path.join(d, f"shard_{sid:06d}.tar"), "wb") as f:
+                f.write(buf.getvalue())
+            return pd.DataFrame({"shard_id": [sid], "n_members": [len(pdf)]})
+
+        # One task per shard; the tiny manifest is the action that drives
+        # the distributed write (bounded: one row per shard).
+        n_shards = (
+            assigned.groupBy("shard_id")
+            .applyInPandas(write_shard, out_schema)
+            .count()
+        )
+        if n_shards == 0:
+            raise RuntimeError("tar shard writer produced no shards")
+
+    tok = store_token(
+        "tarshards-v1", MEDIA_FILE_MOD, TAR_SHARD_BYTES, IMG_W_MOD,
+        IMG_W_MIN, IMG_H_MOD, IMG_H_MIN, IMG_PIX_MOD,
     )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("shard_id", T.LongType()),
-            T.StructField("n_members", T.LongType()),
-        ]
-    )
-
-    def write_shard(pdf):
-        import io
-        import tarfile
-
-        import pandas as pd
-
-        pdf = pdf.sort_values("doc_id")
-        sid = int(pdf["shard_id"].iloc[0])
-        buf = io.BytesIO()
-        with tarfile.open(
-            fileobj=buf, mode="w", format=tarfile.USTAR_FORMAT
-        ) as tf:
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                info = tarfile.TarInfo(name=f"img_{int(doc_id):08d}.ppm")
-                info.size = len(b)
-                info.mtime = 0
-                info.uid = info.gid = 0
-                info.mode = 0o644
-                tf.addfile(info, io.BytesIO(b))
-        path = os.path.join(dest, f"shard_{sid:06d}.tar")
-        tmp = f"{path}.tmp-{os.getpid()}"
-        with open(tmp, "wb") as f:
-            f.write(buf.getvalue())
-        os.replace(tmp, path)
-        return pd.DataFrame({"shard_id": [sid], "n_members": [len(pdf)]})
-
-    # One task per shard; the tiny manifest is the action that drives
-    # the distributed write (bounded: one row per shard).
-    n_shards = (
-        assigned.groupBy("shard_id")
-        .applyInPandas(write_shard, out_schema)
-        .count()
-    )
-    if n_shards == 0:
-        raise RuntimeError("tar shard writer produced no shards")
-    with open(marker, "w"):
-        pass
-    return dest
+    return build_once(sf_dir, "tarshards", f"_{tok}", build, "documents")
 
 
 def tar_shard_stats(files: DataFrame) -> DataFrame:

@@ -46,8 +46,8 @@ from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
 from . import QuerySpec, register
-from .convert_gate import GATE_DIR
 from .helpers import SQL_DEC_SUM, dec_sum, inline_rows
+from .store import build_once
 
 # x98's oracle references a parquet file by literal path (DuckDB's
 # parquet_metadata takes a filename, not a view), so the registered SQL
@@ -76,18 +76,10 @@ def events_partitioned_path(spark: SparkSession, sf_dir: str) -> str:
     partition directory gets ONE well-sized file — the layout a daily
     ingest job produces — instead of tasks × dates tiny files (the
     small-files failure mode). Content is deterministic (derived from
-    the driver's testdata), so cache across calls on the _SUCCESS
-    marker; the source fingerprint in the path busts the cache if the
-    testdata is regenerated in place (the GATE_DIR cache-keying
-    invariant — code-review r14)."""
-    from .similarity import _data_fingerprint
+    the driver's testdata), so it is a build-once store keyed on the
+    events fingerprint."""
 
-    dest = os.path.join(
-        GATE_DIR,
-        f"events_part_{_sf_tag(sf_dir)}"
-        f"_d{_data_fingerprint(sf_dir, 'events')}",
-    )
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
+    def build(d: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         (
             ev.withColumn("d", F.date_format("ts", "yyyy-MM-dd"))
@@ -96,9 +88,10 @@ def events_partitioned_path(spark: SparkSession, sf_dir: str) -> str:
             .repartition("d")
             .write.mode("overwrite")
             .partitionBy("d")
-            .parquet(dest)
+            .parquet(d)
         )
-    return dest
+
+    return build_once(sf_dir, "events_part", "", build, "events")
 
 
 # --- x96: static partition pruning over a hive layout ------------------------
@@ -390,14 +383,8 @@ def orders_evolved_path(spark: SparkSession, sf_dir: str) -> str:
     gen=1 files lack the later-added ``o_orderpriority`` column, gen=2
     files carry it. Timestamp columns are excluded so the fixture is
     byte-stable across writer sessions (helpers rule 4)."""
-    from .similarity import _data_fingerprint
 
-    dest = os.path.join(
-        GATE_DIR,
-        f"orders_evolved_{_sf_tag(sf_dir)}"
-        f"_d{_data_fingerprint(sf_dir, 'orders')}",
-    )
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
+    def build(d: str) -> None:
         od = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
             "o_orderpriority",
@@ -406,12 +393,10 @@ def orders_evolved_path(spark: SparkSession, sf_dir: str) -> str:
             "o_orderpriority"
         )
         gen2 = od.filter(F.col("o_orderkey") % EVOLVE_SPLIT_MOD != 0)
-        gen1.coalesce(1).write.mode("overwrite").parquet(os.path.join(dest, "gen=1"))
-        gen2.coalesce(1).write.mode("overwrite").parquet(os.path.join(dest, "gen=2"))
-        # directory-level marker after both generations landed
-        with open(os.path.join(dest, "_SUCCESS"), "w"):
-            pass
-    return dest
+        gen1.coalesce(1).write.mode("overwrite").parquet(os.path.join(d, "gen=1"))
+        gen2.coalesce(1).write.mode("overwrite").parquet(os.path.join(d, "gen=2"))
+
+    return build_once(sf_dir, "orders_evolved", "", build, "orders")
 
 
 def x105_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -478,23 +463,17 @@ register(
 
 
 def events_orc_path(spark: SparkSession, sf_dir: str) -> str:
-    from .similarity import _data_fingerprint
-
-    dest = os.path.join(
-        GATE_DIR,
-        f"events_orc_{_sf_tag(sf_dir)}"
-        f"_d{_data_fingerprint(sf_dir, 'events')}",
-    )
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
+    def build(d: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         (
             ev.withColumn("ts_us", F.unix_micros("ts"))
             .drop("ts")
             .write.mode("overwrite")
             .option("compression", "zstd")
-            .orc(dest)
+            .orc(d)
         )
-    return dest
+
+    return build_once(sf_dir, "events_orc", "", build, "events")
 
 
 def x108_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1284,14 +1263,8 @@ def compacted_events_path(spark: SparkSession, sf_dir: str) -> str:
     puts each bin's rows in exactly one task).  Path embeds the bin
     target + the events fingerprint (the GATE_DIR cache-keying
     invariant)."""
-    from .similarity import _data_fingerprint
 
-    dest = os.path.join(
-        GATE_DIR,
-        f"events_cmp_{_sf_tag(sf_dir)}_t{COMPACT_TARGET_ROWS}"
-        f"_d{_data_fingerprint(sf_dir, 'events')}",
-    )
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
+    def build(d: str) -> None:
         ev = spark.read.parquet(events_partitioned_path(spark, sf_dir))
         # The rewrite consumes the SAME bin assignment x170 plans with
         # (shared helper — plan and execution cannot disagree).
@@ -1302,9 +1275,12 @@ def compacted_events_path(spark: SparkSession, sf_dir: str) -> str:
             .repartition("bin")
             .write.mode("overwrite")
             .partitionBy("bin")
-            .parquet(dest)
+            .parquet(d)
         )
-    return dest
+
+    return build_once(
+        sf_dir, "events_cmp", f"_t{COMPACT_TARGET_ROWS}", build, "events"
+    )
 
 
 def x265_layout_compact_execute(
@@ -1666,17 +1642,13 @@ def incremental_events_path(spark: SparkSession, sf_dir: str) -> str:
     OPTIMIZE layout: base-prefix compaction + append-touched-bins-only
     merge.  Path embeds the bin target, the append-split constant, and
     the events fingerprint (the GATE_DIR cache-keying invariant)."""
-    from .similarity import _data_fingerprint
 
-    dest = os.path.join(
-        GATE_DIR,
-        f"events_inc_{_sf_tag(sf_dir)}_t{COMPACT_TARGET_ROWS}"
-        f"_a{EVENTS_APPEND_DATES}_d{_data_fingerprint(sf_dir, 'events')}",
-    )
-    if not os.path.exists(os.path.join(dest, "_APPENDED")):
-        _inc_write_base(spark, sf_dir, dest)
-        _inc_append_merge(spark, sf_dir, dest)
-    return dest
+    def build(d: str) -> None:
+        _inc_write_base(spark, sf_dir, d)
+        _inc_append_merge(spark, sf_dir, d)
+
+    key = f"_t{COMPACT_TARGET_ROWS}_a{EVENTS_APPEND_DATES}"
+    return build_once(sf_dir, "events_inc", key, build, "events")
 
 
 def x273_append_optimize_execute(

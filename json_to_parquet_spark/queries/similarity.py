@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
 from . import QuerySpec, register
+from .store import build_once, store_token
 
 N_QUERY_VECS = 5  # vec_id < 5 are the query vectors
 TOP_K = 10
@@ -1004,22 +1005,9 @@ register(
 
 
 def ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
-    from .convert_gate import GATE_DIR
-
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    # nlist in the path: a layout built under a different cell count
-    # must never be mistaken for this one (the count is data-derived);
-    # source fingerprint: an in-place testdata regeneration must bust
-    # the cached layout (the GATE_DIR cache-keying invariant — this
-    # path predates it and was the last vector store without one)
-    dest = os.path.join(
-        GATE_DIR,
-        f"ivf_index_{tag}_tl_nl{ivf_nlist(spark, sf_dir)}"
-        f"_d{_data_fingerprint(sf_dir)}",
-    )
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
+    # nlist in the key: a layout built under a different cell count
+    # must never be mistaken for this one (the count is data-derived)
+    def build(d: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
         # assignment = the shared two-level quantizer, so the layout is
         # EXACTLY x21's inverted lists (x21's oracle is reused verbatim)
@@ -1028,8 +1016,11 @@ def ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
         )
         lists.repartition("list_c").write.mode("overwrite").partitionBy(
             "list_c"
-        ).parquet(dest)
-    return dest
+        ).parquet(d)
+
+    return build_once(
+        sf_dir, "ivf_index", f"_tl_nl{ivf_nlist(spark, sf_dir)}", build
+    )
 
 
 def x121_ivf_partitioned_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2623,43 +2614,6 @@ register(
 # hold.
 
 
-def _tomb_routing_token() -> str:
-    """8-hex digest of every constant the layout's routing + tombstone
-    rules depend on (VERDICT r9 nit): a future change to the two-level
-    quantizer or the tombstone arithmetic changes the cache path, so a
-    long-lived GATE_DIR can never serve a layout built under different
-    rules."""
-    import hashlib
-
-    sig = repr(
-        ("two-level-v1", IVF_N_CENTROIDS, IVF_K0_MIN, TOMB_MOD, TOMB_PCT)
-    )
-    return hashlib.sha256(sig.encode()).hexdigest()[:8]
-
-
-def _data_fingerprint(sf_dir: str, table: str = "embeddings") -> str:
-    """Cheap fingerprint of a source table (size + mtime_ns, summed
-    over files if a directory) — folded into the cache path so a
-    regenerated-in-place testdata dir busts the cached layout instead
-    of serving an index over data that no longer exists (ADVICE r9).
-    Defaults to the embeddings table (every vector store); x252's
-    word-count store fingerprints ``documents``."""
-    import os
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isdir(path):
-        size = mtime = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                st = os.stat(os.path.join(root, f))
-                size += st.st_size
-                mtime = max(mtime, st.st_mtime_ns)
-    else:
-        st = os.stat(path)
-        size, mtime = st.st_size, st.st_mtime_ns
-    return f"{size}_{mtime}"
-
-
 def _tomb_placed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, embedding, dead, cell) — every vector with its tombstone
     flag and inverted-list id; the deterministic source frame both
@@ -2741,25 +2695,19 @@ def tomb_index_path(spark: SparkSession, sf_dir: str) -> str:
     that touches only their partition directories; cold cells keep
     their tombstones in the phase-1 files, physically untouched
     (asserted byte-identical by tests/test_round10_invariants.py).
-    The path embeds nlist, the tombstone parameters, a routing-rule
-    token, and a source-data fingerprint, so a layout built under
-    different rules — or over regenerated data — is never mistaken for
-    this one."""
-    import os
+    The key embeds nlist, the tombstone parameters and a token over
+    every routing + tombstone constant, so a layout built under
+    different rules is never mistaken for this one."""
 
-    from .convert_gate import GATE_DIR
+    def build(d: str) -> None:
+        _tomb_write_base(spark, sf_dir, d)
+        _tomb_compact_hot(spark, sf_dir, d)
 
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    nlist = ivf_nlist(spark, sf_dir)
-    dest = os.path.join(
-        GATE_DIR,
-        f"tomb_index_{tag}_nl{nlist}_m{TOMB_MOD}_p{TOMB_PCT}"
-        f"_r{_tomb_routing_token()}_d{_data_fingerprint(sf_dir)}",
+    tok = store_token(
+        "two-level-v1", IVF_N_CENTROIDS, IVF_K0_MIN, TOMB_MOD, TOMB_PCT
     )
-    if not os.path.exists(os.path.join(dest, "_COMPACTED")):
-        _tomb_write_base(spark, sf_dir, dest)
-        _tomb_compact_hot(spark, sf_dir, dest)
-    return dest
+    key = f"_nl{ivf_nlist(spark, sf_dir)}_m{TOMB_MOD}_p{TOMB_PCT}_r{tok}"
+    return build_once(sf_dir, "tomb_index", key, build)
 
 
 def x227_compaction_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2951,23 +2899,9 @@ def lloyd_cent_path(spark: SparkSession, sf_dir: str) -> str:
     embeds the training constants, a routing-rule token, and the source
     fingerprint, so no rule change or data regeneration can serve a
     stale quantizer."""
-    import hashlib
-    import os
-
-    from .convert_gate import GATE_DIR
-
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     nlist = ivf_nlist(spark, sf_dir)
-    sig = repr(
-        ("lloyd-v1", IVF_N_CENTROIDS, IVF_K0_MIN, LLOYD_ROUNDS,
-         LLOYD_SAMPLE_PER_CELL)
-    )
-    token = hashlib.sha256(sig.encode()).hexdigest()[:8]
-    dest = os.path.join(
-        GATE_DIR,
-        f"lloyd_cent_{tag}_nl{nlist}_{token}_d{_data_fingerprint(sf_dir)}",
-    )
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
+
+    def build(d: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
         )
@@ -2979,8 +2913,13 @@ def lloyd_cent_path(spark: SparkSession, sf_dir: str) -> str:
         ).select("vec_id", "v")
         lloyd_refine(samp, cent_seed, LLOYD_ROUNDS).write.mode(
             "overwrite"
-        ).parquet(dest)
-    return dest
+        ).parquet(d)
+
+    tok = store_token(
+        "lloyd-v1", IVF_N_CENTROIDS, IVF_K0_MIN, LLOYD_ROUNDS,
+        LLOYD_SAMPLE_PER_CELL,
+    )
+    return build_once(sf_dir, "lloyd_cent", f"_nl{nlist}_{tok}", build)
 
 
 def _quantizer_frames(spark: SparkSession, sf_dir: str):
@@ -3985,23 +3924,8 @@ def drift_retrain_cent_path(spark: SparkSession, sf_dir: str) -> str:
     embeds every constant the training depends on (drift map, Lloyd
     budget, nlist) plus the source fingerprint — the GATE_DIR
     cache-keying invariant."""
-    import hashlib
-    import os
 
-    from .convert_gate import GATE_DIR
-
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    nlist = ivf_nlist(spark, sf_dir)
-    sig = repr(
-        ("drift-retrain-v1", DRIFT_GAIN, DRIFT_OFFSET, IVF_N_CENTROIDS,
-         IVF_K0_MIN, LLOYD_ROUNDS, LLOYD_SAMPLE_PER_CELL)
-    )
-    token = hashlib.sha256(sig.encode()).hexdigest()[:8]
-    dest = os.path.join(
-        GATE_DIR,
-        f"drift_recent_{tag}_nl{nlist}_{token}_d{_data_fingerprint(sf_dir)}",
-    )
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
+    def build(d: str) -> None:
         corpus, _sup, _cent_seed, cent_lloyd, _nl = _quantizer_frames(
             spark, sf_dir
         )
@@ -4010,8 +3934,14 @@ def drift_retrain_cent_path(spark: SparkSession, sf_dir: str) -> str:
         ).select("vec_id", F.col("embedding").alias("v"))
         lloyd_refine(samp_new, cent_lloyd, LLOYD_ROUNDS).write.mode(
             "overwrite"
-        ).parquet(dest)
-    return dest
+        ).parquet(d)
+
+    tok = store_token(
+        "drift-retrain-v1", DRIFT_GAIN, DRIFT_OFFSET, IVF_N_CENTROIDS,
+        IVF_K0_MIN, LLOYD_ROUNDS, LLOYD_SAMPLE_PER_CELL,
+    )
+    key = f"_nl{ivf_nlist(spark, sf_dir)}_{tok}"
+    return build_once(sf_dir, "drift_recent", key, build)
 
 
 def drift_psi(
@@ -4060,23 +3990,9 @@ def serving_occupancy_path(spark: SparkSession, sf_dir: str) -> str:
     as an nlist-row parquet keyed on the training constants + source
     fingerprint (the same key discipline as ``lloyd_cent_path``, whose
     quantizer this occupancy belongs to)."""
-    import hashlib
-    import os
-
-    from .convert_gate import GATE_DIR
-
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     nlist = ivf_nlist(spark, sf_dir)
-    sig = repr(
-        ("serve-occ-v1", IVF_N_CENTROIDS, IVF_K0_MIN, LLOYD_ROUNDS,
-         LLOYD_SAMPLE_PER_CELL)
-    )
-    token = hashlib.sha256(sig.encode()).hexdigest()[:8]
-    dest = os.path.join(
-        GATE_DIR,
-        f"serve_occ_{tag}_nl{nlist}_{token}_d{_data_fingerprint(sf_dir)}",
-    )
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
+
+    def build(d: str) -> None:
         corpus, sup, _cent_seed, cent_lloyd, _nl = _quantizer_frames(
             spark, sf_dir
         )
@@ -4087,9 +4003,14 @@ def serving_occupancy_path(spark: SparkSession, sf_dir: str) -> str:
             .groupBy("c_id")
             .agg(F.count(F.lit(1)).alias("co"))
             .write.mode("overwrite")
-            .parquet(dest)
+            .parquet(d)
         )
-    return dest
+
+    tok = store_token(
+        "serve-occ-v1", IVF_N_CENTROIDS, IVF_K0_MIN, LLOYD_ROUNDS,
+        LLOYD_SAMPLE_PER_CELL,
+    )
+    return build_once(sf_dir, "serve_occ", f"_nl{nlist}_{tok}", build)
 
 
 def x237_drift_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4433,30 +4354,21 @@ def drift_index_path(spark: SparkSession, sf_dir: str) -> str:
     retrained quantizer iff x237's loop adopts it.  Path embeds every
     constant the loop depends on + the source fingerprint (the
     GATE_DIR cache-keying invariant)."""
-    import hashlib
-    import os
 
-    from .convert_gate import GATE_DIR
-
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    nlist = ivf_nlist(spark, sf_dir)
-    sig = repr(
-        ("drift-reindex-v1", DRIFT_GAIN, DRIFT_OFFSET, DRIFT_RETRAIN_PSI,
-         IVF_N_CENTROIDS, IVF_K0_MIN, LLOYD_ROUNDS, LLOYD_SAMPLE_PER_CELL)
-    )
-    token = hashlib.sha256(sig.encode()).hexdigest()[:8]
-    dest = os.path.join(
-        GATE_DIR,
-        f"drift_idx_{tag}_nl{nlist}_{token}_d{_data_fingerprint(sf_dir)}",
-    )
-    if not os.path.exists(os.path.join(dest, "_REINDEXED")):
+    def build(d: str) -> None:
         # one adoption act shared by both phases (r15): its checkpointed
         # assignments serve the phase-1 layout AND the migration — the
         # whole store build pays 2 corpus assignments instead of 5.
         adoption = _drift_adoption(spark, sf_dir)
-        _drift_reindex_write_base(spark, sf_dir, dest, old=adoption[1])
-        _drift_reindex_migrate(spark, sf_dir, dest, adoption=adoption)
-    return dest
+        _drift_reindex_write_base(spark, sf_dir, d, old=adoption[1])
+        _drift_reindex_migrate(spark, sf_dir, d, adoption=adoption)
+
+    tok = store_token(
+        "drift-reindex-v1", DRIFT_GAIN, DRIFT_OFFSET, DRIFT_RETRAIN_PSI,
+        IVF_N_CENTROIDS, IVF_K0_MIN, LLOYD_ROUNDS, LLOYD_SAMPLE_PER_CELL,
+    )
+    key = f"_nl{ivf_nlist(spark, sf_dir)}_{tok}"
+    return build_once(sf_dir, "drift_idx", key, build)
 
 
 def x260_drift_reindex_execute(
@@ -4934,25 +4846,16 @@ def locdrift_index_path(spark: SparkSession, sf_dir: str) -> str:
     phase 1 (``_locd_write_base``) + incremental phase-2 migration
     (``_locd_migrate``).  Path embeds every fixture constant + the
     source fingerprint (the GATE_DIR cache-keying invariant)."""
-    import hashlib
-    import os
 
-    from .convert_gate import GATE_DIR
+    def build(d: str) -> None:
+        _locd_write_base(spark, sf_dir, d)
+        _locd_migrate(spark, sf_dir, d)
 
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    sig = repr(
-        ("locdrift-v1", LOCD_DIM, LOCD_BLOBS, LOCD_SCALE,
-         LOCD_JITTER_MOD, LOCD_SHIFT, LOCD_NLIST)
+    tok = store_token(
+        "locdrift-v1", LOCD_DIM, LOCD_BLOBS, LOCD_SCALE,
+        LOCD_JITTER_MOD, LOCD_SHIFT, LOCD_NLIST,
     )
-    token = hashlib.sha256(sig.encode()).hexdigest()[:8]
-    dest = os.path.join(
-        GATE_DIR,
-        f"locd_idx_{tag}_{token}_d{_data_fingerprint(sf_dir)}",
-    )
-    if not os.path.exists(os.path.join(dest, "_REINDEXED")):
-        _locd_write_base(spark, sf_dir, dest)
-        _locd_migrate(spark, sf_dir, dest)
-    return dest
+    return build_once(sf_dir, "locd_idx", f"_{tok}", build)
 
 
 _LOCD_SQL_BASE = f"""ids AS (SELECT vec_id FROM embeddings),
@@ -5203,37 +5106,20 @@ register(
 # contract without the gate seeing it).
 
 
-def _ivf_lists_token() -> str:
-    """8-hex digest of every constant the inverted-list routing depends
-    on (the _tomb_routing_token discipline): a two-level quantizer
-    retune changes the store path."""
-    import hashlib
-
-    sig = repr(("two-level-v1", IVF_N_CENTROIDS, IVF_K0_MIN))
-    return hashlib.sha256(sig.encode()).hexdigest()[:8]
-
-
 def ivf_lists_path(spark: SparkSession, sf_dir: str) -> str:
     """Build-once persisted inverted lists (vec_id, list_c =
-    partition): the materialized flat-IVF index.  Keyed on nlist + the
-    routing token + the source-data fingerprint (the CLAUDE.md store
-    invariant), so a retune or regenerated testdata busts the cache."""
-    import os
+    partition): the materialized flat-IVF index.  Keyed on nlist + a
+    token over the two-level routing constants + the source-data
+    fingerprint, so a retune or regenerated testdata busts the cache."""
 
-    from .convert_gate import GATE_DIR
-
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    nlist = ivf_nlist(spark, sf_dir)
-    dest = os.path.join(
-        GATE_DIR,
-        f"ivf_lists_{tag}_nl{nlist}_r{_ivf_lists_token()}"
-        f"_d{_data_fingerprint(sf_dir)}",
-    )
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
+    def build(d: str) -> None:
         two_level_lists(spark, sf_dir).write.mode("overwrite").partitionBy(
             "list_c"
-        ).parquet(dest)
-    return dest
+        ).parquet(d)
+
+    tok = store_token("two-level-v1", IVF_N_CENTROIDS, IVF_K0_MIN)
+    key = f"_nl{ivf_nlist(spark, sf_dir)}_r{tok}"
+    return build_once(sf_dir, "ivf_lists", key, build)
 
 
 def x291_ivf_persisted_search(

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
 from . import QuerySpec, register
+from .store import build_once, store_token
 
 # --- x101: BPE merge-rule training -------------------------------------------
 BPE_MERGES = 16  # learned merge rules (VERDICT r4 ask #7: ≥16)
@@ -242,20 +243,8 @@ def bpe_base_counts_path(spark: SparkSession, sf_dir: str) -> str:
     (word, cnt) over doc_id % BPE_CDC_MOD != 3.  Keyed on the rule
     constants + the DOCUMENTS fingerprint (the GATE_DIR cache-keying
     invariant; this store's source is text, not vectors)."""
-    import hashlib
-    import os
 
-    from .convert_gate import GATE_DIR
-    from .similarity import _data_fingerprint
-
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    sig = repr(("bpeinc-v1", BPE_CDC_MOD))
-    token = hashlib.sha256(sig.encode()).hexdigest()[:8]
-    dest = os.path.join(
-        GATE_DIR,
-        f"bpew_{tag}_{token}_d{_data_fingerprint(sf_dir, 'documents')}",
-    )
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
+    def build(d: str) -> None:
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
         base = docs.filter(F.col("doc_id") % BPE_CDC_MOD != 3)
         (
@@ -266,9 +255,11 @@ def bpe_base_counts_path(spark: SparkSession, sf_dir: str) -> str:
             .groupBy("word")
             .agg(F.count(F.lit(1)).alias("cnt"))
             .write.mode("overwrite")
-            .parquet(dest)
+            .parquet(d)
         )
-    return dest
+
+    tok = store_token("bpeinc-v1", BPE_CDC_MOD)
+    return build_once(sf_dir, "bpew", f"_{tok}", build, "documents")
 
 
 def x252_bpe_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -823,23 +814,13 @@ def bpe_lexicon_path(spark: SparkSession, sf_dir: str) -> str:
     buckets keep their phase-1 files byte-untouched.  The path embeds
     every constant the encoding depends on plus the documents
     fingerprint (the GATE_DIR cache-keying invariant)."""
-    import hashlib
-    import os
 
-    from .convert_gate import GATE_DIR
-    from .similarity import _data_fingerprint
+    def build(d: str) -> None:
+        _retok_write_base(spark, sf_dir, d)
+        _retok_migrate_hot(spark, sf_dir, d)
 
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    sig = repr(("retok-v1", BPE_MERGES, BPE_CDC_MOD, RETOK_NBUCKETS))
-    token = hashlib.sha256(sig.encode()).hexdigest()[:8]
-    dest = os.path.join(
-        GATE_DIR,
-        f"bpelex_{tag}_{token}_d{_data_fingerprint(sf_dir, 'documents')}",
-    )
-    if not os.path.exists(os.path.join(dest, "_RETOK_MIGRATED")):
-        _retok_write_base(spark, sf_dir, dest)
-        _retok_migrate_hot(spark, sf_dir, dest)
-    return dest
+    tok = store_token("retok-v1", BPE_MERGES, BPE_CDC_MOD, RETOK_NBUCKETS)
+    return build_once(sf_dir, "bpelex", f"_{tok}", build, "documents")
 
 
 def _retok_docs(
@@ -1150,29 +1131,19 @@ def bpe_hold_lexicon_path(spark: SparkSession, sf_dir: str) -> str:
     encode the old tokenizer emits for a new word).  Path embeds every
     constant the encoding depends on plus the documents fingerprint
     (the GATE_DIR cache-keying invariant)."""
-    import hashlib
-    import os
 
-    from .convert_gate import GATE_DIR
-    from .similarity import _data_fingerprint
-
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    sig = repr(("retok-hold-v1", BPE_MERGES, BPE_CDC_MOD, RETOK_NBUCKETS))
-    token = hashlib.sha256(sig.encode()).hexdigest()[:8]
-    dest = os.path.join(
-        GATE_DIR,
-        f"bpeholdlex_{tag}_{token}_d{_data_fingerprint(sf_dir, 'documents')}",
-    )
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
+    def build(d: str) -> None:
         (
             _lexicon_frame(spark, sf_dir, "applied")
             .withColumn("bucket", _word_bucket(F.col("word")))
             .repartition("bucket")
             .write.mode("overwrite")
             .partitionBy("bucket")
-            .parquet(dest)
+            .parquet(d)
         )
-    return dest
+
+    tok = store_token("retok-hold-v1", BPE_MERGES, BPE_CDC_MOD, RETOK_NBUCKETS)
+    return build_once(sf_dir, "bpeholdlex", f"_{tok}", build, "documents")
 
 
 def x267_policy_routed_retok(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -3,8 +3,11 @@
 (VERDICT r13 ask #6 — previously an ad hoc /tmp script, now in-tree).
 
 What it proves: every PERSISTED store the engine lazily builds under
-GATE_DIR (fixture media files, the IVF inverted-list layout, trained
-quantizers/centroids, kNN graphs, BPE lexicons, tar shards) rebuilds
+GATE_DIR through ``queries/store.build_once`` (fixture media files,
+the IVF inverted-list and partitioned-index layouts, trained
+quantizers/centroids, kNN graphs and the base graph segment, BPE
+lexicons, tar shards, and the events/orders layouts: date-partitioned,
+schema-evolved, ORC, compacted and incrementally compacted) rebuilds
 DETERMINISTICALLY — a bare ``SparkSession`` (none of session.py's
 confs, the correctness driver's posture) starting from an empty store
 directory must reach exactly the rows the DuckDB oracle recomputes
@@ -31,25 +34,33 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # One consumer per persisted store family (similarity / graph /
-# tokenizer / media fixtures / tar shards), so a wiped GATE_DIR forces
-# every store kind to rebuild from scratch.
+# tokenizer / media fixtures / tar shards / scale layouts), so a wiped
+# GATE_DIR forces every store kind to rebuild from scratch.
 DEFAULT_QUERIES = [
     "x291_ivf_persisted_search",    # ivf_lists_path
+    "x121_ivf_partitioned_index",   # ivf_index_path
     "x227_compaction_execute",      # tomb_index_path
     "x230_refined_ivf_search",      # lloyd_cent_path
-    "x260_drift_reindex_execute",   # drift_retrain_cent_path
+    "x260_drift_reindex_execute",   # drift_retrain_cent_path + drift_index_path
     "x268_locdrift_reindex_execute",  # locdrift_index_path
     "x235_policy_routed_search",    # serving_occupancy_path
     "x248_graph_beam_search",       # knn_graph_path
     "x262_graph_tombstone_serve",   # knn2_graph_path
-    "x259_policy_routed_graph_serve",  # base graph paths
-    "x267_policy_routed_retok",     # bpe_lexicon_path + hold twin
+    "x259_policy_routed_graph_serve",  # adopted kNN graph store
+    "x246_graph_compaction",        # base_graph_paths
+    "x250_label_prop_cdc",          # base_lp_path
+    "x267_policy_routed_retok",     # bpe_lexicon_path (swap at sf0.01)
     "x256_retok_execute",           # bpe_base_counts_path
     "x277_media_binaryfile_source",  # image fixture dir
     "x290_audio_binaryfile_source",  # audio fixture dir
     "x296_video_binaryfile_source",  # video fixture dir
     "x306_png_binaryfile_source",   # png fixture dir
     "x305_tar_shard_roundtrip",     # tar shard store
+    "x96_partition_prune",          # events_partitioned_path
+    "x105_schema_evolution",        # orders_evolved_path
+    "x108_orc_roundtrip",           # events_orc_path
+    "x265_layout_compact_execute",  # compacted_events_path
+    "x273_append_optimize_execute",  # incremental_events_path
 ]
 
 TABLES = [

@@ -11,12 +11,13 @@ JSON object, recorded into SFX10_PROBE.json as `execute_arrows_r13`:
 - x256/x257: the vocabulary-swap execution — the corpus-sized term is
   one explode + word-keyed join (x256) / one semi-join (x257); the
   lexicon store build (cold) is timed separately from warm serving,
-  the graph_probe build/serve decomposition.
+  the build/serve decomposition of f0551bf:scripts/graph_probe.py
+  (GRAPH_PROBE.json).
 - x258/x259: the graph adoption decision (audit-bounded 2-config
   sweep) and the beam serve routed through the adopted store.
 - x260/x261: the drift re-index — each run pays x237's monitor (the
   decision), so rows are min-of-1 at sfx10 by the same cold-build
-  protocol graph_probe uses.
+  protocol f0551bf:scripts/graph_probe.py used (GRAPH_PROBE.json).
 
 Usage:
     python scripts/execute_arrows_probe.py [--runs N] [--skip-sfx10]
@@ -98,7 +99,8 @@ def main() -> None:
             print(f"skip {sf_name}: {sf_dir} missing", file=sys.stderr)
             continue
         # cold store build for the lexicon, timed separately (the
-        # graph_probe build/serve decomposition; the drift stores build
+        # build/serve decomposition of f0551bf:scripts/graph_probe.py,
+        # GRAPH_PROBE.json; the drift stores build
         # inside their first query run and are called out below).  If a
         # prior session already built this scale's store, the timing
         # would be a no-op path check — label it so the row can never

@@ -200,6 +200,16 @@ def test_incremental_neardup_finds_suffix_twins(spark, sf_dir):
     del twins
 
 
+def test_x111_leaves_no_persisted_frame(spark, sf_dir):
+    """x111 returns a lazy frame, so nothing could ever unpersist a
+    frame it cached: collecting it must leave the session's persistent
+    RDD count unchanged."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    registry()["x111_incremental_neardup"].spark(spark, sf_dir).collect()
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_tokenize_pack_bins_respect_budget(spark, sf_dir):
     """No bin may exceed the token budget by more than one document's
     length (the greedy running-sum contract), digests must be distinct,

@@ -21,7 +21,7 @@ def test_fixture_dir_names_keep_their_keys(spark, sf_dir):
 
     from json_to_parquet_spark.operators import media as m
     from json_to_parquet_spark.queries import multimodal as mm
-    from json_to_parquet_spark.queries.similarity import _data_fingerprint
+    from json_to_parquet_spark.queries.store import data_fingerprint as _data_fingerprint
 
     img = (m.IMG_W_MOD, m.IMG_W_MIN, m.IMG_H_MOD, m.IMG_H_MIN, m.IMG_PIX_MOD)
     laws = {
@@ -58,7 +58,7 @@ def test_x277_fixture_dir_cache_keying(spark, sf_dir):
         MEDIA_FILE_MOD,
         media_fixture_dir,
     )
-    from json_to_parquet_spark.queries.similarity import _data_fingerprint
+    from json_to_parquet_spark.queries.store import data_fingerprint as _data_fingerprint
     from json_to_parquet_spark.sources.catalog import load_table
 
     d1 = media_fixture_dir(spark, sf_dir)

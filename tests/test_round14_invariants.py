@@ -310,7 +310,7 @@ def test_x272_hold_branch_never_builds_the_store(spark, dense_events_src):
         _sf_tag,
         x272_policy_routed_layout_serve,
     )
-    from json_to_parquet_spark.queries.similarity import _data_fingerprint
+    from json_to_parquet_spark.queries.store import data_fingerprint as _data_fingerprint
     from json_to_parquet_spark.sources.catalog import load_table
 
     got = x272_policy_routed_layout_serve(spark, dense_events_src).collect()

@@ -228,32 +228,6 @@ def test_audio_fingerprint_window_law():
     assert audio_fingerprint(falling) == 0
 
 
-def test_x291_persisted_search_equals_x21_and_store_reused(spark, sf_dir):
-    """The serving shape must return exactly the one-shot op's rows,
-    and the second call must serve from the existing store (write-once:
-    same path, no rebuild)."""
-    import os
-
-    from json_to_parquet_spark.queries.similarity import (
-        ivf_lists_path,
-        x21_ivf_ann,
-        x291_ivf_persisted_search,
-    )
-
-    got = sorted(
-        x291_ivf_persisted_search(spark, sf_dir).collect(),
-        key=lambda r: (r.q_id, r.rank),
-    )
-    want = sorted(
-        x21_ivf_ann(spark, sf_dir).collect(), key=lambda r: (r.q_id, r.rank)
-    )
-    assert [r.asDict() for r in got] == [r.asDict() for r in want]
-    p1 = ivf_lists_path(spark, sf_dir)
-    mtime = os.path.getmtime(os.path.join(p1, "_SUCCESS"))
-    assert ivf_lists_path(spark, sf_dir) == p1
-    assert os.path.getmtime(os.path.join(p1, "_SUCCESS")) == mtime
-
-
 # --- the video leg (x294-x296): real Y4M tag parse + frame walk ---------------
 
 
