@@ -1,23 +1,26 @@
 """Streaming evidence at the correctness gate.
 
-Round 1 verified the Structured Streaming operators only via pytest; the
-gate never saw them. These queries run REAL streaming jobs
-(``trigger(availableNow=True)``, checkpointed, then drained) and expose
-the results as ordinary DataFrames the driver can diff against a DuckDB
-oracle:
+These entries run REAL Structured Streaming jobs (file source,
+checkpointed, drained with availableNow) and expose what
+the drain produced as an ordinary DataFrame the driver diffs against a
+DuckDB oracle.  ``x28_stream_convert`` is the reference's event-driven
+contract (an object lands → a converted Parquet file appears; reference
+pyarrow/main.py:18-50); the others are the stateful operators and the
+streaming twins of batch entries.
 
-* ``x28_stream_convert`` — the reference's event-driven contract (one
-  object lands → converted parquet appears; reference pyarrow/main.py:18-50)
-  through the engine's file-source + ``foreachBatch`` stream, compared
-  against the same ``read_json`` oracle as q00.
-* ``x29_stream_dedup_keys`` — stateful streaming dedup
-  (``dropDuplicatesWithinWatermark``) over the events table. Only the key
-  columns are emitted, so the result is the exact distinct key set no
-  matter which physical duplicate row won the state race — which makes a
-  plain ``SELECT DISTINCT`` a valid oracle for a streaming-stateful op.
+Every entry drains through one harness:
 
-Both wipe their checkpoint/output dirs per invocation so every gate run
-reprocesses from scratch and is deterministic.
+* ``_scratch`` — fresh ``{src,out,ckpt}_{tag}_{sf}`` directories, wiped
+  per call, so every gate run reprocesses from scratch and is
+  deterministic;
+* ``_source`` — stages a feed (a DataFrame, one file per arrival
+  bucket, or a ``(directory, glob)`` binaryFile drop) and returns its
+  file stream;
+* ``_run`` — checkpoint, availableNow, start and ``_drain``;
+* one of three sinks: the idempotent ``bid=N`` Parquet sink of the
+  twins (``_twin``), the native file sink for event-sized results
+  (``_to_files``), and the driver-rows sink for bounded results
+  (``_to_rows``), which leaves no memory sink or temp view behind.
 
 The APPEND-mode emission set of the windowed/stateful aggregation
 operators (streaming/windowed.py, streaming/stateful.py) depends on
@@ -45,10 +48,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..sources.catalog import load_table
 from . import _REGISTRY, QuerySpec, register
 from .convert_gate import FIXTURE_PATH, GATE_DIR, ensure_convert_fixture
+from .helpers import inline_rows
 
 # v2 suffix tracks convert_gate.FIXTURE_PATH: the fixture is cached on
 # disk and the stream source reads the WHOLE directory, so a format
@@ -97,23 +102,111 @@ _FIXTURE_SCHEMA = T.StructType(
     ]
 )
 
+# One bound for every gate drain, sized for the slowest (x147's
+# outer join at sf0.01).
+DRAIN_TIMEOUT_S = 900
 
-def _drain(q, timeout_s: int) -> None:
+
+def _drain(q) -> None:
     """awaitTermination with the timeout treated as a FAILURE, not a
     shrug: every gate here reads the drained sink directly afterwards,
     so a still-running stream would silently hand the tail a PARTIAL
     directory (wrong stats that may still hash cleanly).  Raising turns
     the flake into a visible error (code-review r12 finding)."""
-    if not q.awaitTermination(timeout_s):
+    if not q.awaitTermination(DRAIN_TIMEOUT_S):
         q.stop()
         raise TimeoutError(
-            f"streaming drain did not complete within {timeout_s}s"
+            f"streaming drain did not complete within {DRAIN_TIMEOUT_S}s"
         )
 
 
-def _fresh(*paths: str) -> None:
-    for p in paths:
-        shutil.rmtree(p, ignore_errors=True)
+def _scratch(tag: str, sf_dir: str) -> tuple[str, str, str]:
+    """Fresh ``(src, out, ckpt)`` directories ``{kind}_{tag}_{sf}`` under
+    GATE_DIR.  They are wiped on every call and hold no warm state (the
+    persisted stores go through ``store.build_once``)."""
+    sf_tag = os.path.basename(os.path.normpath(sf_dir))
+    dirs = tuple(
+        os.path.join(GATE_DIR, f"{kind}_{tag}_{sf_tag}")
+        for kind in ("src", "out", "ckpt")
+    )
+    for d in dirs:
+        shutil.rmtree(d, ignore_errors=True)
+    return dirs
+
+
+def _write_buckets(frame: DataFrame, bucket: str, src: str) -> DataFrame:
+    """Fixture prep (gate harness, not the operator): one Parquet file
+    per value of ``bucket`` in value order, with strictly increasing
+    mtimes, so a one-file-per-trigger stream delivers exactly one bucket
+    per micro-batch, in order.  Returns the streamed columns."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = frame.drop(bucket)
+    pdf = frame.toPandas()  # bounded: the gate's event fixture, not 100 TB
+    os.makedirs(src)
+    t0 = time.time() - 86_400  # keep well inside maxFileAge
+    for i, (_b, part) in enumerate(pdf.groupby(bucket, sort=True)):
+        path = os.path.join(src, f"b{i:06d}.parquet")
+        pq.write_table(
+            pa.Table.from_pandas(part[rows.columns], preserve_index=False), path
+        )
+        os.utime(path, (t0 + i, t0 + i))
+    return rows
+
+
+def _source(
+    spark: SparkSession,
+    src: str,
+    feed: "DataFrame | tuple[str, str]",
+    n_batches: int = 4,
+    bucket: str | None = None,
+) -> DataFrame:
+    """Stage ``feed`` in ``src`` and return it as a file stream.
+
+    A DataFrame is written as given (the caller's partitioning sets the
+    micro-batches) and streamed back with its own schema, one file per
+    trigger; with ``bucket`` it is written one file per arrival bucket
+    instead (``_write_buckets``).  A ``(directory, glob)`` pair has its
+    matching files copied in and streamed as ``binaryFile``,
+    ⌈files / n_batches⌉ per trigger."""
+    if isinstance(feed, DataFrame):
+        if bucket is None:
+            feed.write.parquet(src)
+        else:
+            feed = _write_buckets(feed, bucket, src)
+        return (
+            spark.readStream.schema(feed.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+    fixture, glob = feed
+    os.makedirs(src)
+    names = sorted(fnmatch.filter(os.listdir(fixture), glob))
+    for f in names:
+        shutil.copy(os.path.join(fixture, f), os.path.join(src, f))
+    return (
+        spark.readStream.format("binaryFile")
+        # streaming sources require the schema up front; binaryFile's
+        # is fixed by the format
+        .schema(
+            "path string, modificationTime timestamp, "
+            "length long, content binary"
+        )
+        .option("pathGlobFilter", glob)
+        .option("maxFilesPerTrigger", max(1, math.ceil(len(names) / n_batches)))
+        .load(src)
+    )
+
+
+def _run(writer: DataStreamWriter, ckpt: str) -> None:
+    """Checkpoint the stream in ``ckpt``, drain everything present with
+    availableNow and wait for it (``_drain``)."""
+    _drain(
+        writer.option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def _write_batch_idempotent(bdf: DataFrame, bid: int, dest: str) -> None:
@@ -153,56 +246,63 @@ def _twin(
     body: Callable[[DataFrame], DataFrame],
     n_batches: int = 4,
 ) -> DataFrame:
-    """Run a streaming twin: stage ``feed`` as a file source, drain it
-    with availableNow over ``n_batches`` micro-batches through ``body``
-    (the batch operator applied to one micro-batch), and return the
-    union of the per-batch results.
-
-    ``feed`` is either a DataFrame, staged as ``n_batches`` Parquet
-    files hash-partitioned on its first column and streamed back with
-    ``feed.schema`` one file per trigger, or a ``(directory, glob)``
-    pair whose matching files are copied in and streamed as
-    ``binaryFile``, ⌈files / n_batches⌉ per trigger.  Every gate run
-    starts from fresh source, sink and checkpoint directories."""
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src, dest, ckpt = (
-        os.path.join(GATE_DIR, f"{kind}_{tag}_{sf_tag}")
-        for kind in ("src", "out", "ckpt")
-    )
-    _fresh(src, dest, ckpt)
+    """Run a streaming twin: stage ``feed``, drain it with availableNow
+    over ``n_batches`` micro-batches through ``body`` (the batch
+    operator applied to one micro-batch), and return the union of the
+    per-batch results.  A DataFrame feed is split into ``n_batches``
+    files hash-partitioned on its first column; a ``(directory, glob)``
+    feed streams as ``binaryFile`` (``_source``)."""
+    src, out, ckpt = _scratch(tag, sf_dir)
     if isinstance(feed, DataFrame):
-        feed.repartition(n_batches, feed.columns[0]).write.parquet(src)
-        stream = (
-            spark.readStream.schema(feed.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-    else:
-        fixture, glob = feed
-        os.makedirs(src)
-        names = sorted(fnmatch.filter(os.listdir(fixture), glob))
-        for f in names:
-            shutil.copy(os.path.join(fixture, f), os.path.join(src, f))
-        stream = (
-            spark.readStream.format("binaryFile")
-            # streaming sources require the schema up front; binaryFile's
-            # is fixed by the format
-            .schema(
-                "path string, modificationTime timestamp, "
-                "length long, content binary"
-            )
-            .option("pathGlobFilter", glob)
-            .option("maxFilesPerTrigger", max(1, math.ceil(len(names) / n_batches)))
-            .load(src)
-        )
-    q = (
-        stream.writeStream.foreachBatch(_batch_handler(body, dest))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        feed = feed.repartition(n_batches, feed.columns[0])
+    stream = _source(spark, src, feed, n_batches)
+    _run(stream.writeStream.foreachBatch(_batch_handler(body, out)), ckpt)
+    return _read_batches(spark, out)
+
+
+def _to_files(
+    spark: SparkSession, frame: DataFrame, out: str, ckpt: str, *partition_by: str
+) -> DataFrame:
+    """Drain ``frame`` through the native Parquet file sink (append,
+    exactly-once through its checkpointed sink log) and return what it
+    wrote.  For event-sized results: they never pass through the
+    driver."""
+    _run(
+        frame.writeStream.format("parquet")
+        .partitionBy(*partition_by)
+        .option("path", out),
+        ckpt,
     )
-    _drain(q, 300)
-    return _read_batches(spark, dest)
+    return spark.read.parquet(out)
+
+
+def _to_rows(
+    spark: SparkSession,
+    frame: DataFrame,
+    ckpt: str,
+    mode: str,
+    key: str | None = None,
+) -> DataFrame:
+    """Drain ``frame`` in output ``mode`` into driver rows and return
+    them as a VALUES relation (``helpers.inline_rows``): ``complete``
+    keeps the last batch's table, ``append`` every emitted row,
+    ``update`` the last row per ``key``.  For bounded results only (each
+    caller states its bound); nothing — no memory sink, query name or
+    temp view — outlives the call.  A replayed micro-batch replaces its
+    own rows, as in the ``bid=N`` sink."""
+    batches: dict[int, list] = {}
+
+    def collect(bdf: DataFrame, bid: int) -> None:
+        if mode == "complete":  # every batch re-emits the whole table
+            batches.clear()
+        batches[bid] = bdf.collect()
+
+    _run(frame.writeStream.outputMode(mode).foreachBatch(collect), ckpt)
+    rows = [r for bid in sorted(batches) for r in batches[bid]]
+    if key is not None:
+        rows = list({r[key]: r for r in rows}.values())
+    schema = ", ".join(f"{f.name} {f.dataType.typeName()}" for f in frame.schema)
+    return inline_rows(spark, rows, schema)
 
 
 def _oracle_of(module: str, name: str) -> str:
@@ -221,9 +321,7 @@ def x28_stream_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.convert_stream import stream_convert
 
     ensure_convert_fixture(STREAM_FIXTURE)
-    dest = os.path.join(GATE_DIR, "out_x28")
-    ckpt = os.path.join(GATE_DIR, "ckpt_x28")
-    _fresh(dest, ckpt)
+    _src, dest, ckpt = _scratch("x28", sf_dir)
     q = stream_convert(
         spark,
         STREAM_SRC_DIR,
@@ -233,7 +331,7 @@ def x28_stream_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
         sort_column="time",
         available_now=True,
     )
-    _drain(q, 300)
+    _drain(q)
     out = spark.read.parquet(dest)
     # F.get: 0-based, null-safe on the v2 fixture's ragged lists (ANSI []
     # access would throw out-of-bounds).
@@ -286,35 +384,16 @@ def x29_stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     once regardless of micro-batch boundaries."""
     from ..streaming.dedup import dedup_stream
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"events_{sf_tag}")
-    dest = os.path.join(GATE_DIR, f"out_x29_{sf_tag}")
-    ckpt = os.path.join(GATE_DIR, f"ckpt_x29_{sf_tag}")
-    _fresh(src, dest, ckpt)
-
+    src, out, ckpt = _scratch("x29", sf_dir)
     # Normalized copy (nanos → micros ts, see sources/catalog.py) because a
-    # streaming parquet source can't apply the nanos-as-long load shim.
+    # streaming parquet source can't apply the nanos-as-long load shim;
+    # one range per file forces several micro-batches.
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
-    ev.repartitionByRange(4, "ts").write.parquet(src)
-
-    stream = (
-        spark.readStream.schema("user_id bigint, event_type string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)  # force several micro-batches
-        .parquet(src)
-    )
+    stream = _source(spark, src, ev.repartitionByRange(4, "ts"))
     deduped = dedup_stream(
         stream, keys=["user_id", "event_type"], ts_col="ts", watermark="3650 days"
     ).select("user_id", "event_type")
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", dest)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q, 300)
-    return spark.read.parquet(dest)
+    return _to_files(spark, deduped, out, ckpt)
 
 
 register(
@@ -334,34 +413,14 @@ def x37_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded streams — the pattern for dimension enrichment at ingest).
     Every event appears exactly once regardless of batch boundaries, so
     the batch join is an exact oracle."""
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"events37_{sf_tag}")
-    dest = os.path.join(GATE_DIR, f"out_x37_{sf_tag}")
-    ckpt = os.path.join(GATE_DIR, f"ckpt_x37_{sf_tag}")
-    _fresh(src, dest, ckpt)
-
+    src, out, ckpt = _scratch("x37", sf_dir)
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
-    ev.repartitionByRange(4, "event_id").write.parquet(src)
+    stream = _source(spark, src, ev.repartitionByRange(4, "event_id"))
     user_dim = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_user_events"))
-
-    stream = (
-        spark.readStream.schema("event_id bigint, user_id bigint, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
     joined = stream.join(user_dim, "user_id").select(
         "event_id", "user_id", "event_type", F.col("n_user_events").cast("long")
     )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", dest)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q, 300)
-    return spark.read.parquet(dest)
+    return _to_files(spark, joined, out, ckpt)
 
 
 register(
@@ -387,35 +446,18 @@ def x67_stream_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     how the files were micro-batched, so a time-bucket GROUP BY is an
     exact oracle — this is the gate-checkable face of
     ``streaming/windowed.py`` (the append-mode emission schedule stays
-    pytest-covered; see module docstring). The memory sink is gate
+    pytest-covered; see module docstring). The driver-rows sink is gate
     harness only — it holds one row per (window, event_type), bounded by
     the stream's time span, never raw events; the production path writes
     append-mode to a real sink with the watermark bounding state."""
     from ..streaming.windowed import windowed_event_counts
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"events67_{sf_tag}")
-    _fresh(src)
-
+    src, _out, ckpt = _scratch("x67", sf_dir)
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type", "value")
-    ev.repartitionByRange(4, "ts").write.parquet(src)
-
-    stream = (
-        spark.readStream.schema("ts timestamp, event_type string, value double")
-        .option("maxFilesPerTrigger", 1)  # force cross-batch state merge
-        .parquet(src)
-    )
+    # one range per file forces cross-batch state merges
+    stream = _source(spark, src, ev.repartitionByRange(4, "ts"))
     agg = windowed_event_counts(stream, window_duration="1 day", watermark="1 hour")
-    name = f"x67_windows_{sf_tag}".replace(".", "_")  # dots invalid in view names
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q, 300)
-    return spark.table(name).orderBy("win_start_us", "event_type")
+    return _to_rows(spark, agg, ckpt, "complete").orderBy("win_start_us", "event_type")
 
 
 register(
@@ -452,37 +494,15 @@ def x70_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the lookback so state stays bounded; see streaming/joins.py.)"""
     from ..streaming.joins import purchases_with_recent_clicks
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"events70_{sf_tag}")
-    dest = os.path.join(GATE_DIR, f"out_x70_{sf_tag}")
-    ckpt = os.path.join(GATE_DIR, f"ckpt_x70_{sf_tag}")
-    _fresh(src, dest, ckpt)
-
+    src, out, ckpt = _scratch("x70", sf_dir)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts"
     )
-    ev.repartitionByRange(4, "ts").write.parquet(src)
-
-    stream = (
-        spark.readStream.schema(
-            "event_id bigint, user_id bigint, event_type string, ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)  # several micro-batches
-        .parquet(src)
-    )
+    stream = _source(spark, src, ev.repartitionByRange(4, "ts"))
     joined = purchases_with_recent_clicks(
         stream, lookback="30 minutes", watermark="3650 days"
     )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", dest)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q, 300)
-    return spark.read.parquet(dest)
+    return _to_files(spark, joined, out, ckpt)
 
 
 register(
@@ -518,18 +538,10 @@ def x81_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     active user); the complete-mode drain is gate harness only."""
     from .pipeline import SESSION_WINDOW_GAP_US
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"events81_{sf_tag}")
-    _fresh(src)
-
+    src, _out, ckpt = _scratch("x81", sf_dir)
     ev = load_table(spark, sf_dir, "events").select("ts", "user_id")
-    ev.repartitionByRange(4, "ts").write.parquet(src)
-
-    stream = (
-        spark.readStream.schema("ts timestamp, user_id long")
-        .option("maxFilesPerTrigger", 1)  # force cross-batch session merges
-        .parquet(src)
-    )
+    # one range per file forces cross-batch session merges
+    stream = _source(spark, src, ev.repartitionByRange(4, "ts"))
     # Gap derived from the same constant the oracle uses, so one retune
     # moves both sides (ADVICE r3: a hardcoded "10 minutes" here would
     # silently desynchronize from the SQL twin).
@@ -537,24 +549,14 @@ def x81_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     sess = stream.groupBy(
         "user_id", F.session_window("ts", gap).alias("sw")
     ).agg(F.count(F.lit(1)).alias("n_events"))
-    name = f"x81_sessions_{sf_tag}".replace(".", "_")
-    q = (
-        sess.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+    flat = sess.select(
+        "user_id",
+        F.unix_micros(F.col("sw.start")).alias("session_start_us"),
+        F.unix_micros(F.col("sw.end")).alias("session_end_us"),
+        F.col("n_events").cast("long").alias("n_events"),
     )
-    _drain(q, 300)
-    return (
-        spark.table(name)
-        .select(
-            "user_id",
-            F.unix_micros(F.col("sw.start")).alias("session_start_us"),
-            F.unix_micros(F.col("sw.end")).alias("session_end_us"),
-            F.col("n_events").cast("long").alias("n_events"),
-        )
-        .orderBy("user_id", "session_start_us")
+    return _to_rows(spark, flat, ckpt, "complete").orderBy(
+        "user_id", "session_start_us"
     )
 
 
@@ -611,11 +613,7 @@ def x87_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine)."""
     from ..streaming.cdc_stream import stream_apply_changes
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    base_dir = os.path.join(GATE_DIR, f"cdc_base_{sf_tag}")
-    chg_dir = os.path.join(GATE_DIR, f"cdc_chg_{sf_tag}")
-    ckpt = os.path.join(GATE_DIR, f"cdc_ckpt_{sf_tag}")
-    _fresh(base_dir, chg_dir, ckpt)
+    chg_dir, base_dir, ckpt = _scratch("x87", sf_dir)
 
     base = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
@@ -661,12 +659,12 @@ def x87_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         changes_dir=chg_dir,
         snapshot_dir=base_dir,
         checkpoint=ckpt,
-        schema="k bigint, cust bigint, price decimal(18,2), op string, version int",
+        schema=changes.schema,
         keys=["k"],
         available_now=True,
         max_files_per_trigger=1,
     )
-    _drain(q, 300)
+    _drain(q)
     return (
         spark.read.parquet(base_dir)
         .select("k", "cust", F.col("price").cast("string").alias("price_str"))
@@ -715,19 +713,10 @@ STREAM_HH_TOPK = 50
 
 
 def x109_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"docs109_{sf_tag}")
-    ck = os.path.join(GATE_DIR, f"ck_x109_{sf_tag}")
-    _fresh(src, ck)
-
+    src, _out, ckpt = _scratch("x109", sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs.repartition(4).write.parquet(src)
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)  # force cross-batch count merging
-        .parquet(src)
-    )
+    # four files, one per trigger, force cross-batch count merging
+    stream = _source(spark, src, docs.repartition(4))
     topk = (
         stream.select(F.explode(F.split("text", " ")).alias("tok"))
         .groupBy("tok")
@@ -735,20 +724,10 @@ def x109_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("cnt"), F.asc("tok"))
         .limit(STREAM_HH_TOPK)
     )
-    name = f"x109_hh_{sf_tag}".replace(".", "_")
-    q = (
-        topk.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q, 300)
     from pyspark.sql import Window as W
 
     w = W.orderBy(F.desc("cnt"), F.asc("tok"))
-    return spark.table(name).select(
+    return _to_rows(spark, topk, ckpt, "complete").select(
         F.row_number().over(w).cast("long").alias("rank"), "tok", "cnt"
     )
 
@@ -786,40 +765,19 @@ SINK_PRUNE_LO, SINK_PRUNE_HI = "2024-01-08", "2024-01-14"
 
 
 def x120_stream_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"events120_{sf_tag}")
-    dest = os.path.join(GATE_DIR, f"out_x120_{sf_tag}")
-    ck = os.path.join(GATE_DIR, f"ck_x120_{sf_tag}")
-    _fresh(src, dest, ck)
-
+    src, out, ckpt = _scratch("x120", sf_dir)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    ev.repartition(4).write.parquet(src)
-
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
+    stream = _source(spark, src, ev.repartition(4))
+    layout = (
         stream.withColumn("d", F.date_format("ts", "yyyy-MM-dd"))
         .withColumn("ts_us", F.unix_micros("ts"))
         .drop("ts")
-        .writeStream.format("parquet")
-        .option("path", dest)
-        .option("checkpointLocation", ck)
-        .partitionBy("d")
-        .trigger(availableNow=True)
-        .start()
     )
-    _drain(q, 300)
-
-    out = spark.read.parquet(dest)
     return (
-        out.filter((F.col("d") >= SINK_PRUNE_LO) & (F.col("d") <= SINK_PRUNE_HI))
+        _to_files(spark, layout, out, ckpt, "d")
+        .filter((F.col("d") >= SINK_PRUNE_LO) & (F.col("d") <= SINK_PRUNE_HI))
         .withColumn("d", F.col("d").cast("string"))
         .groupBy("d", "event_type")
         .agg(
@@ -880,12 +838,7 @@ X146_WIN_US = 3_600_000_000  # 1-hour tumbling windows
 
 
 def x146_stream_watermark_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"events146_{sf_tag}")
-    ckpt = os.path.join(GATE_DIR, f"ckpt146_{sf_tag}")
-    _fresh(src, ckpt)
-    os.makedirs(src, exist_ok=True)
-
+    src, _out, ckpt = _scratch("x146", sf_dir)
     # Arrival replay: bucket each event into the day its (jittered)
     # transport delivery lands in — SAME md5 arithmetic as the oracle.
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
@@ -900,62 +853,19 @@ def x146_stream_watermark_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts_us.alias("ts_us"),
         F.floor((ts_us + jitter) / F.lit(X146_DAY_US)).cast("long").alias("bkt"),
     )
-    # Fixture prep (gate harness, not the operator): materialize one file
-    # per arrival bucket with strictly increasing mtimes so the file
-    # stream delivers exactly one bucket per micro-batch, in order.
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    pdf = base.toPandas()  # bounded: the gate's event fixture, not 100 TB
-    t0 = _time.time() - 86_400  # keep well inside maxFileAge
-    for i, bkt in enumerate(sorted(pdf["bkt"].unique())):
-        path = os.path.join(src, f"b{i:06d}.parquet")
-        pq.write_table(
-            pa.table({"ts_us": pdf.loc[pdf["bkt"] == bkt, "ts_us"].to_numpy()}),
-            path,
-        )
-        os.utime(path, (t0 + i, t0 + i))
-
-    stream = (
-        spark.readStream.schema("ts_us long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = _source(spark, src, base, bucket="bkt")
     agg = (
         stream.select(F.timestamp_micros("ts_us").alias("ts"))
         .withWatermark("ts", X146_DELAY)
         .groupBy(F.window("ts", "1 hour"))
         .count()
-    )
-    emitted: list = []
-
-    def collect(batch_df: DataFrame, _bid: int) -> None:
-        emitted.extend(  # append emits each closed window once; bounded
-            (r["window"].start, int(r["count"])) for r in batch_df.collect()
+        .select(
+            F.unix_micros(F.col("window.start")).alias("window_start_us"),
+            F.col("count").alias("n_events"),
         )
-
-    q = (
-        agg.writeStream.outputMode("append")
-        .foreachBatch(collect)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    _drain(q, 600)
-
-    from datetime import timezone
-
-    rows = [
-        (int(k.replace(tzinfo=timezone.utc).timestamp() * 1_000_000), v)
-        for k, v in emitted
-    ]
-    from .helpers import inline_rows
-
-    return inline_rows(
-        spark, rows, "window_start_us long, n_events long"
-    ).orderBy("window_start_us")
+    # append emits each closed window once; bounded
+    return _to_rows(spark, agg, ckpt, "append").orderBy("window_start_us")
 
 
 register(
@@ -994,45 +904,16 @@ X147_DELAY_US = X147_DELAY_H * 3_600_000_000
 
 
 def x147_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"events147_{sf_tag}")
-    ckpt = os.path.join(GATE_DIR, f"ckpt147_{sf_tag}")
-    _fresh(src, ckpt)
-    os.makedirs(src, exist_ok=True)
-
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    src, _out, ckpt = _scratch("x147", sf_dir)
+    ts_us = F.unix_micros("ts")
     ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", F.unix_micros("ts").alias("ts_us")
+        "event_id",
+        "user_id",
+        "event_type",
+        ts_us.alias("ts_us"),
+        F.floor(ts_us / F.lit(X146_DAY_US)).cast("long").alias("bkt"),
     )
-    pdf = ev.toPandas()  # bounded: the gate's event fixture, not 100 TB
-    day_us = 86_400_000_000
-    pdf["bkt"] = pdf["ts_us"] // day_us
-    t0 = _time.time() - 86_400
-    for i, bkt in enumerate(sorted(pdf["bkt"].unique())):
-        path = os.path.join(src, f"b{i:06d}.parquet")
-        pq.write_table(
-            pa.Table.from_pandas(
-                pdf.loc[
-                    pdf["bkt"] == bkt,
-                    ["event_id", "user_id", "event_type", "ts_us"],
-                ],
-                preserve_index=False,
-            ),
-            path,
-        )
-        os.utime(path, (t0 + i, t0 + i))
-
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, event_type string, ts_us long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = _source(spark, src, ev, bucket="bkt")  # one arrival day per batch
     base = stream.select(
         "event_id", "user_id", "event_type", F.timestamp_micros("ts_us").alias("ts")
     )
@@ -1063,28 +944,9 @@ def x147_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             <= F.col("c_ts") + F.expr(f"INTERVAL {X147_LOOKAHEAD_H} HOUR")
         ),
         "leftOuter",
-    )
-    out: list = []
-
-    def collect(batch_df: DataFrame, _bid: int) -> None:
-        out.extend(  # matches + eviction-proven null rows; bounded
-            (int(r["c_id"]), None if r["p_id"] is None else int(r["p_id"]))
-            for r in batch_df.collect()
-        )
-
-    q = (
-        joined.writeStream.outputMode("append")
-        .foreachBatch(collect)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q, 900)
-    from .helpers import inline_rows
-
-    return inline_rows(spark, out, "c_id long, p_id long").orderBy(
-        "c_id", "p_id"
-    )
+    ).select("c_id", "p_id")
+    # matches + eviction-proven null rows; bounded
+    return _to_rows(spark, joined, ckpt, "append").orderBy("c_id", "p_id")
 
 
 register(
@@ -1134,40 +996,12 @@ def x148_stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     declared pytest skip."""
     from ..streaming.stateful import running_user_totals
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(GATE_DIR, f"events148_{sf_tag}")
-    ckpt = os.path.join(GATE_DIR, f"ckpt148_{sf_tag}")
-    _fresh(src, ckpt)
-
+    src, _out, ckpt = _scratch("x148", sf_dir)
     ev = load_table(spark, sf_dir, "events").select("user_id", "value", "ts")
-    ev.repartitionByRange(4, "ts").write.parquet(src)
-
-    stream = (
-        spark.readStream.schema("user_id long, value double, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    final: dict = {}
-
-    def upsert(batch_df: DataFrame, _bid: int) -> None:
-        for r in batch_df.collect():  # one row per user per batch; bounded
-            final[r["user_id"]] = (int(r["n_events"]), int(r["last_seen_us"]))
-
-    q = (
-        running_user_totals(stream)
-        .writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q, 600)
-    from .helpers import inline_rows
-
-    rows = [(int(u), n, us) for u, (n, us) in final.items()]
-    return inline_rows(
-        spark, rows, "user_id long, n_events long, last_seen_us long"
-    ).orderBy("user_id")
+    stream = _source(spark, src, ev.repartitionByRange(4, "ts"))
+    totals = running_user_totals(stream).select("user_id", "n_events", "last_seen_us")
+    # one row per user per batch; bounded
+    return _to_rows(spark, totals, ckpt, "update", key="user_id").orderBy("user_id")
 
 
 register(
@@ -1362,9 +1196,7 @@ def x234_stream_tombstone_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-shuffle agg of (cell, flag) rows."""
     from .similarity import TOMB_MOD, tombstone_rollup, two_level_lists
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    base_dir = os.path.join(GATE_DIR, f"base_x234_{sf_tag}")
-    _fresh(base_dir)
+    _src, base_dir, _ckpt = _scratch("x234_layout", sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id")
     # the index BUILD job's output: every vector's inverted list, once
     emb.join(two_level_lists(spark, sf_dir), "vec_id").select(
@@ -1596,9 +1428,7 @@ def x264_stream_graph_tombstones(
     from .graph_ssl import _graph_tombstone_compact_from, _route_with_dist
     from .similarity import TOMB_MOD
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    base_dir = os.path.join(GATE_DIR, f"base_x264_{sf_tag}")
-    _fresh(base_dir)
+    _src, base_dir, _ckpt = _scratch("x264_routing", sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -1686,9 +1516,7 @@ def x275_stream_append_optimize(
         events_partitioned_path,
     )
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    dest = os.path.join(GATE_DIR, f"layout_x275_{sf_tag}")
-    _fresh(dest)
+    _src, dest, _ckpt = _scratch("x275_layout", sf_dir)
     spine = _event_date_spine(spark, sf_dir)
     app_dates = {
         r.d

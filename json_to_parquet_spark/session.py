@@ -12,6 +12,11 @@ Execution knobs are sized for local[N] testing but written for a real
 cluster: AQE on (runtime re-plan, skew-join handling, partition coalescing),
 shuffle partitions ~ cores locally (on a 1000-executor cluster this is
 overridden to ~2-3× total cores via spark-submit conf, not code).
+
+Driver memory defaults to half the memory the box can give this process
+(the smaller of ``MemTotal`` and the cgroup limit, where one is set),
+capped at 48g, so a local JVM never grows past what the box holds;
+``SPARK_GRAFT_DRIVER_MEM`` overrides it.
 """
 
 from __future__ import annotations
@@ -25,6 +30,33 @@ from pyspark.sql import SparkSession
 PARQUET_PAGE_SIZE = 1_048_576
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+
+_MAX_DRIVER_MB = 48 * 1024
+
+
+def driver_memory(limits_bytes: list[int]) -> str:
+    """Half the smallest of the box's memory limits, capped at 48g, as a
+    Spark size string (``"7680m"``); 48g when no limit is known."""
+    return f"{min([b // 2**21 for b in limits_bytes] + [_MAX_DRIVER_MB])}m"
+
+
+def _memory_limits() -> list[int]:
+    """``MemTotal`` and any cgroup (v2 or v1) memory limit, in bytes."""
+    limits = []
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    limits.append(int(line.split()[1]) * 1024)
+    except OSError:
+        pass
+    for path in ("/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                limits.append(int(f.read()))
+        except (OSError, ValueError):  # absent, or "max" (no limit)
+            pass
+    return limits
 
 
 def build_session(
@@ -71,7 +103,10 @@ def build_session(
         # microsecond timestamp — see sources/catalog.py.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory(_memory_limits()),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

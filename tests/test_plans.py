@@ -368,8 +368,8 @@ def test_x111_batch_joins_on_band_index(spark, sf_dir):
 
 def test_x109_streaming_plan_is_stateful(spark, sf_dir):
     """The drained run must have executed a real streaming aggregate:
-    the memory-sink table exists and carries the top-K schema (rank
-    bounded by the configured K)."""
+    the last complete-mode batch, kept as driver rows, carries the top-K
+    schema (rank bounded by the configured K)."""
     from json_to_parquet_spark.queries.streaming_gate import STREAM_HH_TOPK
 
     df = registry()["x109_stream_heavy_hitters"].spark(spark, sf_dir)

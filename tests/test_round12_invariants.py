@@ -301,20 +301,6 @@ def test_x250_cdc_labels_recover_blobs_on_clustered(spark, sf_dir):
     assert correct / prop >= 0.95, (correct, prop)
 
 
-def test_x251_streaming_equals_batch_labeler(spark, sf_dir):
-    """The streaming labeler's drained routed partials must reproduce
-    x250's batch output BIT-FOR-BIT — routing is per-vector independent
-    so micro-batching cannot change any assignment (the anti-drift law
-    the shared oracle enforces at the gate, re-asserted engine-side)."""
-    from json_to_parquet_spark.queries import registry
-
-    reg = registry()
-    cols = ["label", "n_nodes", "n_seed", "n_prop", "n_prop_correct"]
-    got = _rows(reg["x251_stream_label_cdc"].spark(spark, sf_dir), cols)
-    want = _rows(reg["x250_label_prop_cdc"].spark(spark, sf_dir), cols)
-    assert got == want and len(got) > 0
-
-
 def test_x252_incremental_equals_full_retrain(spark, sf_dir):
     """Word counts are additive, so (persisted base counts ⊎ the
     slice's counts) must train EXACTLY x101's full-corpus merge table —
@@ -359,21 +345,6 @@ def test_x253_swap_impact_consistency(spark, sf_dir):
             for r in reg["x252_bpe_incremental"].spark(spark, sf_dir).collect()
         )
         assert changed_rules > 0
-
-
-def test_x254_streaming_equals_batch_retrain(spark, sf_dir):
-    """The streaming trainer's drained word-count partials must
-    reproduce x252's batch rule table BIT-FOR-BIT — counts are exact
-    integers composing additively, so micro-batching cannot change any
-    frequency (the anti-drift law the shared oracle enforces at the
-    gate, re-asserted engine-side)."""
-    from json_to_parquet_spark.queries import registry
-
-    reg = registry()
-    cols = ["iter", "w1", "w2", "merged", "pair_cnt", "changed"]
-    got = _rows(reg["x254_stream_bpe_cdc"].spark(spark, sf_dir), cols)
-    want = _rows(reg["x252_bpe_incremental"].spark(spark, sf_dir), cols)
-    assert got == want and len(got) > 0
 
 
 def test_x246_policy_is_the_shared_integer_rule(spark, sf_dir):

@@ -80,23 +80,6 @@ def test_x170_compaction_conserves_rows_and_files(spark, sf_dir):
         assert r.d_min <= r.d_max
 
 
-def test_x172_stream_equals_batch_twin(spark, sf_dir):
-    """The streaming loop's drained output must be bit-identical to
-    x111's one-shot batch result — same pipeline, same index, different
-    execution schedule."""
-    stream = sorted(
-        tuple(r)
-        for r in registry()["x172_stream_neardup"].spark(spark, sf_dir).collect()
-    )
-    batch = sorted(
-        tuple(r)
-        for r in registry()["x111_incremental_neardup"]
-        .spark(spark, sf_dir)
-        .collect()
-    )
-    assert stream == batch
-
-
 def test_x179_keywords_ranked_and_positive(spark, sf_dir):
     from json_to_parquet_spark.queries.pipeline import TR_TOP
 

@@ -1,14 +1,23 @@
-"""The streaming-twin harness: ``streaming_gate._twin`` stages a feed,
+"""The streaming gate harness: ``streaming_gate._twin`` stages a feed,
 drains it with availableNow through a twin's batch body and reads the
 idempotent ``bid=N`` sink back.  Every foreachBatch-to-Parquet twin runs
 through it, so these tests pin its contract once: the micro-batch split,
-replay safety, and which files a binaryFile feed reads."""
+replay safety, and which files a binaryFile feed reads.  They also pin
+that every gate stream leaves the session as it found it, and that each
+twin's drained output equals its batch entry's."""
 
 from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
+
+from json_to_parquet_spark.queries import registry
+
+
+def _rows(df, cols):
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
 def _sink(tag: str, sf_dir: str) -> str:
@@ -103,3 +112,97 @@ def test_x285_streaming_decision_equals_batch(spark, sf_dir):
     got = x285_stream_media_dedup_policy(spark, sf_dir).collect()
     want = x283_media_dedup_policy(spark, sf_dir).collect()
     assert [r.asDict() for r in got] == [r.asDict() for r in want]
+
+
+def test_x172_stream_equals_batch_twin(spark, sf_dir):
+    """The streaming loop's drained output must be bit-identical to
+    x111's one-shot batch result — same pipeline, same index, different
+    execution schedule."""
+    stream = sorted(
+        tuple(r)
+        for r in registry()["x172_stream_neardup"].spark(spark, sf_dir).collect()
+    )
+    batch = sorted(
+        tuple(r)
+        for r in registry()["x111_incremental_neardup"]
+        .spark(spark, sf_dir)
+        .collect()
+    )
+    assert stream == batch
+
+
+def test_x251_streaming_equals_batch_labeler(spark, sf_dir):
+    """The streaming labeler's drained routed partials must reproduce
+    x250's batch output BIT-FOR-BIT — routing is per-vector independent
+    so micro-batching cannot change any assignment (the anti-drift law
+    the shared oracle enforces at the gate, re-asserted engine-side)."""
+    from json_to_parquet_spark.queries import registry
+
+    reg = registry()
+    cols = ["label", "n_nodes", "n_seed", "n_prop", "n_prop_correct"]
+    got = _rows(reg["x251_stream_label_cdc"].spark(spark, sf_dir), cols)
+    want = _rows(reg["x250_label_prop_cdc"].spark(spark, sf_dir), cols)
+    assert got == want and len(got) > 0
+
+
+def test_x254_streaming_equals_batch_retrain(spark, sf_dir):
+    """The streaming trainer's drained word-count partials must
+    reproduce x252's batch rule table BIT-FOR-BIT — counts are exact
+    integers composing additively, so micro-batching cannot change any
+    frequency (the anti-drift law the shared oracle enforces at the
+    gate, re-asserted engine-side)."""
+    from json_to_parquet_spark.queries import registry
+
+    reg = registry()
+    cols = ["iter", "w1", "w2", "merged", "pair_cnt", "changed"]
+    got = _rows(reg["x254_stream_bpe_cdc"].spark(spark, sf_dir), cols)
+    want = _rows(reg["x252_bpe_incremental"].spark(spark, sf_dir), cols)
+    assert got == want and len(got) > 0
+
+
+def _temp_views(spark):
+    return sorted(t.name for t in spark.catalog.listTables() if t.isTemporary)
+
+
+def _persisted_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _sql_conf(spark):
+    return {k: v for k, v in spark.conf.getAll.items() if k.startswith("spark.sql.")}
+
+
+def _assert_leaves_session_as_found(spark, sf_dir, name):
+    """After one build + collect: no new temp view, no active stream, no
+    newly persisted RDD and no changed SQL conf.  Persisted RDDs are
+    compared by id, because the context cleaner may release an earlier
+    test's frames while this entry runs."""
+    views, rdds, conf = _temp_views(spark), _persisted_rdds(spark), _sql_conf(spark)
+    registry()[name].spark(spark, sf_dir).collect()
+    assert spark.streams.active == []
+    assert _temp_views(spark) == views
+    assert _persisted_rdds(spark) - rdds == set()
+    assert _sql_conf(spark) == conf
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["x67_stream_window", "x81_stream_session", "x109_stream_heavy_hitters"],
+)
+def test_complete_mode_stream_leaves_session_as_found(spark, sf_dir, name):
+    """The complete-mode drains land in driver rows: no memory sink, and
+    so no temp view, stays behind."""
+    _assert_leaves_session_as_found(spark, sf_dir, name)
+
+
+GATE_STREAMS = [
+    name
+    for name, spec in registry().items()
+    if spec.spark.__module__.endswith(".streaming_gate")
+]
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("name", GATE_STREAMS)
+def test_gate_stream_leaves_session_as_found(spark, sf_dir, name):
+    _assert_leaves_session_as_found(spark, sf_dir, name)
