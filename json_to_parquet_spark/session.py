@@ -17,6 +17,28 @@ Driver memory defaults to half the memory the box can give this process
 (the smaller of ``MemTotal`` and the cgroup limit, where one is set),
 capped at 48g, so a local JVM never grows past what the box holds;
 ``SPARK_GRAFT_DRIVER_MEM`` overrides it.
+
+File listing stays on the driver up to 1024 paths per level
+(``spark.sql.sources.parallelPartitionDiscovery.threshold``; Spark's
+default is 32).  A file stream hands each micro-batch's new files to the
+file index as explicit paths, and above the threshold Spark lists them
+with a job of one task per file: a 55-file binaryFile batch paid a
+55-task listing job before it decoded anything.  The value is
+session-wide because a stream reads the session's conf while it drains,
+not when it starts: setting the threshold before ``start()`` and
+restoring it right after left the listing job in place, and only a value
+held until ``awaitTermination()`` returned removed it.  A batch read of
+one table root is one listing call either way; a level of 33-1024 paths
+is now listed on the driver, and a larger one is still listed in
+parallel.
+
+PySpark's DataFrame call-site capture
+(``spark.python.sql.dataFrameDebugging.enabled``) is off: with it on,
+every ``F.*``/Column call in a driver-side build pays extra py4j round
+trips to record where it was made.  Two costs: PySpark reads the flag
+once per process, from the first active session, so a later session in
+the same process cannot turn it back on; and an engine error no longer
+names the DataFrame call site that built the failing expression.
 """
 
 from __future__ import annotations
@@ -93,6 +115,11 @@ def build_session(
         # tests force the threshold down to assert the injection
         # (tests/test_plans_helpers.py).
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+        # Micro-batch file lists are listed on the driver, not by a
+        # one-task-per-file job (module docstring).
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
+        # No per-Column call-site capture (module docstring).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # --- Parquet writer parity with the reference (SURVEY §4) ---
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.hadoop.parquet.page.size", str(PARQUET_PAGE_SIZE))

@@ -1,6 +1,6 @@
 """The session's driver-memory default (``session.driver_memory``): half
-the box's smallest memory limit, capped at 48g.  Pure arithmetic, no
-Spark."""
+the box's smallest memory limit, capped at 48g (pure arithmetic, no
+Spark), and the confs ``build_session`` pins on the suite's session."""
 
 from __future__ import annotations
 
@@ -25,3 +25,15 @@ def test_driver_memory_ignores_an_unlimited_cgroup():
 def test_driver_memory_is_capped_at_48g():
     assert driver_memory([512 * GIB]) == "49152m"
     assert driver_memory([]) == "49152m"
+
+
+def test_session_lists_micro_batch_files_on_the_driver(spark):
+    threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    assert spark.conf.get(threshold) == "1024"
+
+
+def test_session_turns_off_dataframe_call_site_capture(spark):
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False

@@ -79,6 +79,47 @@ def test_twin_binary_feed_reads_only_glob_matches(spark, sf_dir, tmp_path):
     assert sorted(os.listdir(src)) == [f"f_{i}.bin" for i in range(6)]
 
 
+def test_twin_micro_batch_lists_its_files_without_a_job(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A micro-batch's new files reach the file index as explicit paths;
+    the session lists 40 of them on the driver, so no stage of the
+    drain runs one task per file.  The body coalesces to one partition,
+    so the scan's own split (which follows the session's file-split
+    confs) cannot pass for a listing job."""
+    from json_to_parquet_spark.queries import streaming_gate
+
+    fixture = tmp_path / "fixture"
+    fixture.mkdir()
+    for i in range(40):
+        (fixture / f"f_{i:02d}.bin").write_bytes(bytes([i]))
+    drained = []
+    drain = streaming_gate._drain
+    monkeypatch.setattr(
+        streaming_gate, "_drain", lambda q: (drained.append(q), drain(q))
+    )
+
+    out = streaming_gate._twin(
+        spark,
+        sf_dir,
+        "test_twin_listing",
+        (str(fixture), "*.bin"),
+        lambda bdf: bdf.select("length").coalesce(1),
+        n_batches=1,
+    )
+    assert out.count() == 40
+    (q,) = drained
+    tracker = spark.sparkContext.statusTracker()
+    jobs = tracker.getJobIdsForGroup(str(q.runId))
+    assert jobs
+    tasks = [
+        tracker.getStageInfo(stage).numTasks
+        for job in jobs
+        for stage in tracker.getJobInfo(job).stageIds
+    ]
+    assert max(tasks) < 40, tasks
+
+
 def test_foreachbatch_sink_is_idempotent_under_retry(spark, tmp_path):
     """Replaying a micro-batch (same bid, same rows — the Structured
     Streaming retry contract) must leave the drained union unchanged;
