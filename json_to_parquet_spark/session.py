@@ -18,27 +18,24 @@ Driver memory defaults to half the memory the box can give this process
 capped at 48g, so a local JVM never grows past what the box holds;
 ``SPARK_GRAFT_DRIVER_MEM`` overrides it.
 
-File listing stays on the driver up to 1024 paths per level
+File listing stays on the driver up to 64 paths per level
 (``spark.sql.sources.parallelPartitionDiscovery.threshold``; Spark's
 default is 32).  A file stream hands each micro-batch's new files to the
 file index as explicit paths, and above the threshold Spark lists them
 with a job of one task per file: a 55-file binaryFile batch paid a
-55-task listing job before it decoded anything.  The value is
-session-wide because a stream reads the session's conf while it drains,
-not when it starts: setting the threshold before ``start()`` and
-restoring it right after left the listing job in place, and only a value
-held until ``awaitTermination()`` returned removed it.  A batch read of
-one table root is one listing call either way; a level of 33-1024 paths
-is now listed on the driver, and a larger one is still listed in
-parallel.
-
-PySpark's DataFrame call-site capture
-(``spark.python.sql.dataFrameDebugging.enabled``) is off: with it on,
-every ``F.*``/Column call in a driver-side build pays extra py4j round
-trips to record where it was made.  Two costs: PySpark reads the flag
-once per process, from the first active session, so a later session in
-the same process cannot turn it back on; and an engine error no longer
-names the DataFrame call site that built the failing expression.
+55-task listing job before it decoded anything.  64 is the measured
+traffic's bound, not a tuned value: the largest micro-batch any gate
+stream hands over is x278's ⌈219 / 4⌉ = 55 media files at sf0.1, and the
+largest directory level found (every gate store and testdata table at
+sf0.001/sf0.01, the benchmark's and the IVF stores at sf0.1) is an IVF
+store's 45 cell directories at sf0.1.  Those two are the only measured
+reads that moved to the driver; a level above 64 paths (the IVF stores'
+142 and 448 directories at sfx1 and sfx10, a cluster table with
+hundreds of partitions) is still listed by a parallel job, as at Spark's
+default.  The value is session-wide because a stream reads the session's conf
+while it drains, not when it starts: setting the threshold before
+``start()`` and restoring it right after left the listing job in place,
+and only a value held until ``awaitTermination()`` returned removed it.
 """
 
 from __future__ import annotations
@@ -89,8 +86,11 @@ def build_session(
 ) -> SparkSession:
     """Create (or reuse) the engine's SparkSession.
 
-    Defaults target local mode for tests/bench; every conf here is equally
-    valid on a cluster, where ``master``/memory come from spark-submit.
+    Defaults target local mode for tests/bench; on a cluster
+    ``master``/memory come from spark-submit.  The listing threshold is
+    sized to the gate's measured file counts (module docstring); a
+    deployment whose micro-batches or partition levels are larger sets
+    its own through ``extra_conf``.
     """
     cpus = DEFAULT_CPUS
     builder = (
@@ -117,9 +117,7 @@ def build_session(
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         # Micro-batch file lists are listed on the driver, not by a
         # one-task-per-file job (module docstring).
-        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
-        # No per-Column call-site capture (module docstring).
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "64")
         # --- Parquet writer parity with the reference (SURVEY §4) ---
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.hadoop.parquet.page.size", str(PARQUET_PAGE_SIZE))

@@ -1,6 +1,7 @@
 """The session's driver-memory default (``session.driver_memory``): half
 the box's smallest memory limit, capped at 48g (pure arithmetic, no
-Spark), and the confs ``build_session`` pins on the suite's session."""
+Spark), and the listing threshold ``build_session`` pins on the suite's
+session."""
 
 from __future__ import annotations
 
@@ -29,11 +30,4 @@ def test_driver_memory_is_capped_at_48g():
 
 def test_session_lists_micro_batch_files_on_the_driver(spark):
     threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    assert spark.conf.get(threshold) == "1024"
-
-
-def test_session_turns_off_dataframe_call_site_capture(spark):
-    from pyspark.errors.utils import is_debugging_enabled
-
-    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
-    assert is_debugging_enabled() is False
+    assert spark.conf.get(threshold) == "64"
