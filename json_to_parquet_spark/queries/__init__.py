@@ -34,11 +34,13 @@ _REGISTRY: dict[str, QuerySpec] = {}
 # Entries whose semantics changed after they earned a gate row: proof
 # from before the given round speaks for code that no longer exists, so
 # it counts as round 0.  Round 16 moved x26, x33 and x293 onto the one
-# shared ``dedup.connected_components``.
+# shared ``dedup.connected_components``, and x208's picks onto a
+# driver-side traversal.
 _REPROVE: dict[str, int] = {
     "x26_dedup_clusters": 16,
     "x33_dedup_survivors": 16,
     "x293_image_neardup_clusters": 16,
+    "x208_kcenter_coreset": 16,
 }
 
 

@@ -48,7 +48,7 @@ from .dedup import (
     shingles,
 )
 from .evalsuite import BATCH_OFFSET, RECALL_K, SKETCH_EVAL_MAX_ID
-from .helpers import SQL_DEC_SUM, dec_sum
+from .helpers import SQL_DEC_SUM, dec_sum, rnd6
 from .similarity import (
     IVF_N_PROBE,
     SQL_IVF_NLIST,
@@ -375,14 +375,7 @@ def x103_embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ``pca_power_distributed_loop`` (bit-identical, equality-tested).
     cov_rows = cov.collect()  # bounded: d² rows at any corpus size
     mean_rows = sorted(means.collect(), key=lambda r: r.i)
-    from decimal import ROUND_HALF_UP, Decimal
-
-    q6 = Decimal("0.000001")
-
-    def rnd6(x: float) -> float:
-        # F.round(x, 6): BigDecimal.valueOf(x).setScale(6, HALF_UP) —
-        # valueOf uses the shortest round-trip string, i.e. repr(x)
-        return float(Decimal(repr(x)).quantize(q6, rounding=ROUND_HALF_UP))
+    from decimal import Decimal
 
     c = {(r.i, r.j): r.c for r in cov_rows}
     v = {r.i: (1.0 if r.i == 0 else 0.0) for r in mean_rows}

@@ -49,6 +49,9 @@ package:
 
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -86,6 +89,23 @@ def ts_us(col: Column | str, alias: str) -> Column:
     """Timestamp as epoch microseconds (SQL: epoch_us(x))."""
     c = F.col(col) if isinstance(col, str) else col
     return F.unix_micros(c).alias(alias)
+
+
+_Q6 = Decimal("0.000001")
+
+
+def rnd6(x: float) -> float:
+    """Spark's ``F.round(x, 6)`` on the driver, for loops that finish
+    there (x103, x208).  Spark computes
+    ``BigDecimal.valueOf(x).setScale(6, HALF_UP)``; ``valueOf`` parses
+    ``Double.toString(x)``, taken here as the shortest round-trip
+    string, ``repr(x)``.  NaN and infinities pass through unchanged, as
+    in Spark.  One difference: a negative ``x`` that rounds to zero
+    gives ``-0.0`` here and ``0.0`` in Spark (BigDecimal has no
+    negative zero)."""
+    if not math.isfinite(x):
+        return x
+    return float(Decimal(repr(x)).quantize(_Q6, rounding=ROUND_HALF_UP))
 
 
 _INLINE_SQL_TYPES = {

@@ -27,3 +27,8 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def oracle_sf_dir():
+    return ORACLE_SF_DIR

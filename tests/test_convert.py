@@ -133,7 +133,10 @@ def test_multi_file_input_keeps_native_parallelism(spark, tmp_path):
     import gzip
     import json
 
-    from json_to_parquet_spark.sources.ndjson import read_ndjson_parallel
+    from json_to_parquet_spark.sources.ndjson import (
+        read_ndjson_parallel,
+        release_parallel_read,
+    )
 
     d = tmp_path / "many"
     d.mkdir()
@@ -152,7 +155,6 @@ def test_multi_file_input_keeps_native_parallelism(spark, tmp_path):
     # single local gz object → SPILL to a splittable temp file and use the
     # native scan (pushdown-capable; maxPartitionBytes splits real sizes)
     import os
-    import shutil
 
     single = read_ndjson_parallel(spark, str(d / "f0.ndjson.gz"), min_partitions=4)
     spill_dir = getattr(single, "_graft_spill_dir", None)
@@ -161,7 +163,7 @@ def test_multi_file_input_keeps_native_parallelism(spark, tmp_path):
     assert "FileScan json" in plan1
     assert "RoundRobinPartitioning" not in plan1
     assert single.count() == 10
-    shutil.rmtree(spill_dir, ignore_errors=True)
+    release_parallel_read(spark, single)
 
     # remote/no-spill fallback: round-robin the raw lines; inference and
     # parse run over the cached line frame (>= target partitions)

@@ -6,17 +6,10 @@
    report the identical adopted quantizer — extending the r14
    x261-vs-x237 equivalence to the whole family.
 
-2. x208's r15 running-min rewrite must pick the identical coreset as
-   the pre-r15 re-fold shape (distances to the whole grown seed set
-   recomputed every round): min over the same rounded doubles is
-   associative, so the incremental `least(md, d(v, newest))` update is
-   bit-identical — this test executes the OLD shape inline and compares
-   every (pick, vec_id, dist_at_pick) row.
+x208's running-min guard lives in tests/test_modeling.py.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 
 def test_drift_family_single_adoption_definition(spark, sf_dir):
@@ -40,53 +33,6 @@ def test_drift_family_single_adoption_definition(spark, sf_dir):
     assert adopted_237 == helper_word
     assert adopted_260 == helper_word
     assert adopted_261 == helper_word
-
-
-def _x208_refold_reference(spark, sf_dir):
-    """The pre-r15 x208 shape: every round re-folds distances against
-    the whole selected set via crossJoin+groupBy(MIN)."""
-    from json_to_parquet_spark.queries.modeling import CORESET_K
-    from json_to_parquet_spark.queries.similarity import _sq_dist
-    from json_to_parquet_spark.sources.catalog import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    ).persist()
-    first = emb.orderBy(F.asc("vec_id")).limit(1).collect()[0]
-    picks = [(1, int(first.vec_id), 0.0)]
-    sel = [(int(first.vec_id), list(first.v))]
-    for r in range(2, CORESET_K + 1):
-        sel_df = spark.createDataFrame(
-            [(i, vv) for i, vv in sel], "s_id long, s_vec array<double>"
-        )
-        sel_ids = [i for i, _ in sel]
-        md = (
-            emb.filter(~F.col("vec_id").isin(sel_ids))
-            .crossJoin(F.broadcast(sel_df))
-            .select(
-                "vec_id", "v",
-                _sq_dist(F.col("v"), F.col("s_vec")).alias("d"),
-            )
-            .groupBy("vec_id")
-            .agg(F.min("d").alias("md"), F.first("v").alias("v"))
-        )
-        top = md.orderBy(F.desc("md"), F.asc("vec_id")).limit(1).collect()[0]
-        picks.append((r, int(top.vec_id), float(top.md)))
-        sel.append((int(top.vec_id), list(top.v)))
-    emb.unpersist()
-    return picks
-
-
-def test_x208_running_min_bit_identical_to_refold(spark, sf_dir):
-    from json_to_parquet_spark.queries import registry
-
-    got = [
-        (int(r.pick), int(r.vec_id), float(r.dist_at_pick))
-        for r in registry()["x208_kcenter_coreset"]
-        .spark(spark, sf_dir)
-        .collect()
-    ]
-    assert got == _x208_refold_reference(spark, sf_dir)
 
 
 def test_inline_rows_bit_identical_to_createDataFrame(spark):

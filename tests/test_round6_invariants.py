@@ -218,18 +218,3 @@ def test_x205_capacity_respected_and_conserved(spark, sf_dir):
     for r in rows:
         assert r.final_size <= r.capacity
         assert r.placed_r1 <= min(r.capacity, r.first_demand)
-
-
-def test_x208_coreset_distances_non_increasing(spark, sf_dir):
-    from json_to_parquet_spark.queries.modeling import CORESET_K
-
-    rows = sorted(
-        registry()["x208_kcenter_coreset"].spark(spark, sf_dir).collect(),
-        key=lambda r: r.pick,
-    )
-    assert len(rows) == CORESET_K
-    assert len({r.vec_id for r in rows}) == CORESET_K
-    # farthest-point picks: each later pick is no farther than the one
-    # before it (greedy max of a shrinking min-distance field)
-    dists = [r.dist_at_pick for r in rows[1:]]
-    assert all(a >= b for a, b in zip(dists, dists[1:]))
