@@ -31,7 +31,7 @@ import dataclasses
 import os
 import time
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -52,6 +52,7 @@ class ConvertResult:
     sorted_by: str | None
     rewritten_dt_paths: list[str]
     schema_before: str
+    # Schema of the frame that was written, i.e. of the converted table.
     schema_after: str
     # The (possibly inferred) input schema as a StructType — what a caller
     # pins into the schema registry for later objects of the same feed.
@@ -61,8 +62,8 @@ class ConvertResult:
     # "global" (one total order, one file) or None (not sorted).
     partitioning: str | None = None
     # Wall seconds per phase of convert(): read_s (read + inference),
-    # rewrite_s (the _dt walk and Column build), write_s (partitioning +
-    # the Parquet write), verify_s (sorting footer + read-back).
+    # rewrite_s (the _dt walk and Column build), write_s (partitioning,
+    # the Parquet write and the optional sorting footer).
     phases: dict[str, float] = dataclasses.field(default_factory=dict)
 
 
@@ -142,11 +143,10 @@ def convert(
         else read_ndjson_parallel(spark, source, schema, sampling_ratio=sampling_ratio)
     )
     laps.lap("read_s")
-    # The parallel read may have lowered maxPartitionBytes and left a
-    # spill dir behind (see release_parallel_read); release them in a
-    # finally that spans EVERYTHING from here on, so an exception raised
-    # before the write path (dt rewrite, the persist/count, plan errors)
-    # can't leak the ~4 MiB split size into the rest of the session.
+    # The parallel read may have left a spill dir behind (see
+    # release_parallel_read); delete it in a finally that spans
+    # EVERYTHING from here on, so an exception raised before the write
+    # (dt rewrite, the persist/count, plan errors) can't leak it.
     try:
         return _convert_body(
             spark, df, dest, sort_column, mode, dt_mode,
@@ -217,10 +217,9 @@ def _convert_body(
     # Inference-path line cache (ndjson._graft_text_cache): once the parsed
     # frame is materialized the raw lines are never read again — drop them.
     text_cache = getattr(df, "_graft_text_cache", None)
-    rows: int | None = None
     if cached is not None:
         out = cached
-        rows = out.count()  # one pass: materializes the cache AND counts
+        out.count()  # materializes the cache in one pass
         if text_cache is not None:
             text_cache.unpersist()
             text_cache = None
@@ -256,6 +255,9 @@ def _convert_body(
         out = rewrite_dt_fields(out, mode=dt_mode)
         laps.lap("rewrite_s")
 
+    # the row count rides on the write job itself: no read-back of dest
+    written = Observation()
+    out = out.observe(written, F.count(F.lit(1)).alias("rows"))
     try:
         writer = out.write.mode("overwrite")
         if partition_by:
@@ -266,32 +268,20 @@ def _convert_body(
             cached.unpersist()
         if text_cache is not None:
             text_cache.unpersist()
-    # The write was the source frame's last action: release the spill
-    # dir + lowered maxPartitionBytes NOW, before the output
-    # verification scan below — reading `dest` under the ~4 MiB split
-    # size costs a swarm of tiny tasks (measured +0.5 s on the bench
-    # convert).  The caller's finally re-invokes this harmlessly
-    # (idempotent); it exists for the paths that raise BEFORE here.
-    release_parallel_read(spark, df)
-    laps.lap("write_s")
     if sorting_metadata and sorted_by is not None:
         # Reference-parity SortingColumn footer (SURVEY §2 O3); PyArrow
         # post-pass since Spark's writer can't record it.
         from .sorting_metadata import add_sorting_metadata
 
         add_sorting_metadata(dest, sorted_by)
-    written = spark.read.parquet(dest)
-    if rows is None:
-        rows = written.count()
-    schema_after = written.schema.simpleString()
-    laps.lap("verify_s")
+    laps.lap("write_s")
     return ConvertResult(
         output_path=dest,
-        rows=rows,
+        rows=written.get["rows"],
         sorted_by=sorted_by,
         rewritten_dt_paths=rewritten,
         schema_before=schema_before,
-        schema_after=schema_after,
+        schema_after=out.schema.simpleString(),
         input_schema=df.schema,
         partitioning=partitioning,
         phases=laps.phases,

@@ -100,12 +100,11 @@ def rnd6(x: float) -> float:
     ``BigDecimal.valueOf(x).setScale(6, HALF_UP)``; ``valueOf`` parses
     ``Double.toString(x)``, taken here as the shortest round-trip
     string, ``repr(x)``.  NaN and infinities pass through unchanged, as
-    in Spark.  One difference: a negative ``x`` that rounds to zero
-    gives ``-0.0`` here and ``0.0`` in Spark (BigDecimal has no
-    negative zero)."""
+    in Spark.  ``+ 0.0`` turns a negative zero into ``0.0``, as
+    BigDecimal has no negative zero."""
     if not math.isfinite(x):
         return x
-    return float(Decimal(repr(x)).quantize(_Q6, rounding=ROUND_HALF_UP))
+    return float(Decimal(repr(x)).quantize(_Q6, rounding=ROUND_HALF_UP)) + 0.0
 
 
 _INLINE_SQL_TYPES = {

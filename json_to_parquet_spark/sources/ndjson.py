@@ -10,6 +10,10 @@ inference — so this module is a thin, contract-pinning wrapper:
     SURVEY §7c — inference across heterogeneous files is nondeterministic)
   * corrupt records can be captured instead of crashing (the reference
     would raise mid-Lambda), via ``columnNameOfCorruptRecord``
+  * a single local ``.gz`` object is spilled to a splittable temp file
+    (``read_ndjson_parallel``) so Spark's per-core split sizing fans the
+    scan over every core; the module sets no session conf, and the spill
+    dir is the only thing ``release_parallel_read`` cleans up
 """
 
 from __future__ import annotations
@@ -67,8 +71,6 @@ def read_ndjson_parallel(
     spark: SparkSession,
     path: str,
     schema: T.StructType | None = None,
-    min_partitions: int | None = None,
-    spill: bool = True,
     sampling_ratio: float | None = None,
 ) -> DataFrame:
     """NDJSON read that does not inherit the input's partitioning for the
@@ -85,11 +87,11 @@ def read_ndjson_parallel(
     deployment unit) is fixed by SPILLING: gunzip the object once to a
     local splittable temp file (sequential C-loop copy, ~40×
     faster than the JSON parse it unblocks) and hand THAT to the native
-    scan — which then splits it by ``maxPartitionBytes``, so inference,
-    parse, and the sort's sampling pass all run on all cores with zero
-    shuffle and full native pushdown. The spill location is attached to
-    the returned frame as ``_graft_spill_dir`` and the lowered split-size
-    conf as ``_graft_conf_restore``; EVERY caller must call
+    scan. Spark sizes file splits per core (``bytes / cores``, capped by
+    the session's split size), so inference, parse, and the sort's
+    sampling pass all run on all cores with zero shuffle and full native
+    pushdown; no session conf is touched. The spill location is attached
+    to the returned frame as ``_graft_spill_dir``; EVERY caller must call
     ``release_parallel_read(spark, df)`` in a ``finally`` after the
     frame's last action (the convert pipeline does). (On a cluster the same pattern
     spills to the job's scratch dir — the point is one sequential
@@ -102,35 +104,15 @@ def read_ndjson_parallel(
     (attached as ``_graft_text_cache``; callers unpersist it after
     materializing the parse).
     """
-    target = min_partitions or _default_cpus()
+    target = _default_cpus()
     text = spark.read.text(path)
     if text.rdd.getNumPartitions() >= target:
         return read_ndjson(spark, path, schema, sampling_ratio=sampling_ratio)
-    if spill:
-        spilled = _spill_to_splittable(path)
-        if spilled is not None:
-            # Size file splits to the spilled object, not the global
-            # default: a ~170 MiB decompressed object under the 128 MiB
-            # default yields TWO splits, so inference and parse run on 2
-            # of N cores. Lowering maxPartitionBytes to ~size/(2·cores)
-            # (floor 4 MiB) fans both passes across every core —
-            # measured 1.24 s → 0.22 s on the inference pass alone for
-            # the 100k-record bench object. Session conf is restored by
-            # the caller via ``release_parallel_read`` after its terminal
-            # action (the parse job also reads this conf at plan time, so
-            # restoring here would be too early);
-            # ``_graft_conf_restore`` carries the old value.
-            key = "spark.sql.files.maxPartitionBytes"
-            old = spark.conf.get(key, "134217728b")
-            split = max(4 << 20, os.path.getsize(spilled) // (2 * target) + 1)
-            restore = None
-            if _conf_bytes(old) > split:
-                spark.conf.set(key, str(split))
-                restore = (key, old)
-            df = read_ndjson(spark, spilled, schema, sampling_ratio=sampling_ratio)
-            df._graft_spill_dir = os.path.dirname(spilled)
-            df._graft_conf_restore = restore
-            return df
+    spilled = _spill_to_splittable(path)
+    if spilled is not None:
+        df = read_ndjson(spark, spilled, schema, sampling_ratio=sampling_ratio)
+        df._graft_spill_dir = os.path.dirname(spilled)
+        return df
     text = text.filter(F.length("value") > 0).repartition(target)
     if schema is None:
         cached_text = text.persist()
@@ -150,20 +132,10 @@ def read_ndjson_parallel(
 
 
 def release_parallel_read(spark: SparkSession, df: DataFrame) -> None:
-    """Release the session-level side effects a ``read_ndjson_parallel``
-    spill path may have left behind: restore the lowered
-    ``spark.sql.files.maxPartitionBytes`` and delete the spill dir.
-
-    EVERY caller of ``read_ndjson_parallel`` must invoke this (in a
-    ``finally``) after the frame's LAST action — restoring earlier is
-    wrong because the parse job reads the conf at plan time, and never
-    restoring leaks a ~4 MiB split size into every later scan of the
-    session (the tiny-partition footgun).  Idempotent; safe when the
-    spill path was not taken."""
-    restore = getattr(df, "_graft_conf_restore", None)
-    if restore is not None:
-        spark.conf.set(*restore)
-        df._graft_conf_restore = None
+    """Delete the spill dir a ``read_ndjson_parallel`` spill path left
+    behind. EVERY caller of ``read_ndjson_parallel`` must invoke this (in
+    a ``finally``) after the frame's LAST action: the scan reads the
+    spilled file. Idempotent; safe when the spill path was not taken."""
     spill_dir = getattr(df, "_graft_spill_dir", None)
     if spill_dir is not None:
         shutil.rmtree(spill_dir, ignore_errors=True)
@@ -235,27 +207,6 @@ def _json_from_lines(spark: SparkSession, text: DataFrame) -> DataFrame:
     jdf = text.select(F.col("value").cast("string").alias("value"))._jdf
     jds = getattr(jdf, "as")(spark._jvm.org.apache.spark.sql.Encoders.STRING())
     return DataFrame(spark._jsparkSession.read().json(jds), spark)
-
-
-def _conf_bytes(v: str) -> int:
-    """Parse a Spark byte-size conf string ('134217728b', '128MB', plain
-    int) to bytes; unknown formats conservatively parse as 0 so we never
-    RAISE the split size, only lower it."""
-    s = v.strip().lower()
-    for suffix, mult in (
-        ("pb", 1 << 50), ("tb", 1 << 40), ("gb", 1 << 30), ("mb", 1 << 20),
-        ("kb", 1 << 10), ("p", 1 << 50), ("t", 1 << 40), ("g", 1 << 30),
-        ("m", 1 << 20), ("k", 1 << 10), ("b", 1),
-    ):
-        if s.endswith(suffix):
-            try:
-                return int(s[: -len(suffix)]) * mult
-            except ValueError:
-                return 0
-    try:
-        return int(s)
-    except ValueError:
-        return 0
 
 
 def _default_cpus() -> int:

@@ -48,7 +48,7 @@ def test_cli_pins_schema_across_runs(spark, tmp_path, capsys):
     rows0 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     # the lineage line names the partitioning and the per-phase seconds
     assert rows0["partitioning"] == "bounds"
-    assert list(rows0["phases"]) == ["read_s", "rewrite_s", "write_s", "verify_s"]
+    assert list(rows0["phases"]) == ["read_s", "rewrite_s", "write_s"]
 
     # later object of the feed — same logical stream, but alone it would
     # infer a NARROWER schema (missing key). Pinning keeps the feed width.
